@@ -1,66 +1,33 @@
 package graft
-/** Writes PLANS.md: the actual physical plans of the flagship pipeline and
-  * key operator queries, annotated — the "is this the plan you'd want"
-  * artifact (explain-formatted output for the judge/reviewer). */
-object PlanDump extends App {
-  import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.functions.col
-  val spark = SparkSession.builder().master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.ui.enabled", "false").getOrCreate()
-  spark.sparkContext.setLogLevel("ERROR")
-  val sf = "/root/testdata/sf0.001"
-  def fmt(df: org.apache.spark.sql.DataFrame): String = {
-    val s = df.queryExecution.explainString(org.apache.spark.sql.execution.ExtendedMode)
-    val phys = df.queryExecution.executedPlan.toString
-    phys.linesIterator.take(40).mkString("\n") + (if (phys.linesIterator.size > 40) "\n..." else "") + { val _ = s; "" }
+
+/** Plan dumper: writes `.explain("formatted")` for the named SparkEntry
+  * queries to <outDir>/<query>_<tag>.txt (plan claims such as those in
+  * OPTIMIZATION_r06.md are checked against these files).
+  * Usage: PlanDump <outDir> <tag> [q1 q2 ...] (default: all queries).
+  * Session config mirrors Bench (local[SPARK_GRAFT_CPUS], one shuffle
+  * partition per core, AQE) over SPARK_GRAFT_SF_DIR, which must be set. */
+object PlanDump {
+  def main(args: Array[String]): Unit = {
+    val outDir = args.headOption.getOrElse("plans/r06")
+    val tag = args.lift(1).getOrElse("after")
+    val names = if (args.length > 2) args.drop(2).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("PlanDump needs SPARK_GRAFT_SF_DIR: the suite directory to plan over"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    names.foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      val txt = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"), txt)
+      println(s"wrote $outDir/${name}_$tag.txt")
+    }
+    spark.stop()
   }
-  // production input: a materialized span table (the 10^12-row shape), not
-  // the in-plan fixture generator (whose encoder chain is generation cost)
-  val corpusPath = java.nio.file.Files.createTempDirectory("plans").toString + "/corpus.parquet"
-  SparkEntry.rawDocs(spark, sf).toDF().write.mode("overwrite").parquet(corpusPath)
-  val sections = Seq(
-    ("Flagship extraction (`Extract.extractContract`) over a materialized span table",
-     "Narrow end-to-end. The first Union leg (`Scan ExistingRDD`) is the single-copy InternalRow fast path: one pruned parquet scan inside the RDD lineage -> kernel over Catalyst rows -> one codegen'd UnsafeProjection writing the contract ARRAY<STRUCT> (no encoder round trip, no Exchange). The second leg is the page-split path for >512-page docs (empty here) whose repartition is the deliberate skew shuffle.",
-     graft.pipeline.Extract.extractContract(spark.read.parquet(corpusPath))),
-    ("Fast-path inner plan (`Extract.extractSpansRows` input query)",
-     "The scan the ExistingRDD leaf wraps: doc_id + spans only (pruned ReadSchema), whole-stage codegen to the kernel boundary, zero shuffle.",
-     spark.read.parquet(corpusPath).select(col("doc_id").cast("string").as("doc_id"), col("spans"))),
-    ("q44 per-language quartiles (distribution-based exact ntile, r6)",
-     "No per-document ranks at all: one map-side-combined groupBy collapses the corpus to the per-(lang, n_chars) count distribution — cardinality bounded by distinct lengths per language, not corpus size — then a cumulative window over that tiny frame places each length's rank range and ntile arithmetic (first n%4 buckets take base+1 rows) turns rank-range overlap into exact per-quartile counts and min/max. Values identical to ntile(4): the doc_id tiebreak only permutes ranks WITHIN one (lang, n_chars) run, which cannot move counts or min/max across a quartile boundary. Replaces r2-r5's two-pass range-repartition + localCheckpoint + broadcast-offsets plan (3 jobs, a corpus-wide sort) with one job; still no task ever sorts a language stratum.",
-     ops.Queries.all("q44_length_quartiles")(spark, sf)),
-    ("q16 aggregation", "Pruned ReadSchema (4 columns of lineitem), partial+final HashAggregate.",
-     ops.Queries.all("q16_agg_pushdown")(spark, sf)),
-    ("q17 star join", "Both dimension sides broadcast; no sort-merge join, no large-side shuffle.",
-     ops.Queries.all("q17_broadcast_join")(spark, sf)),
-    ("q30 cosine top-k (r6 kernel probe broadcast)", "The bounded probe side (10 vectors) is collected through a COLUMN-pushed vec_id filter and broadcast into the corpus mapPartitions (q34's shape) — no cross join, no per-pair HOF expression walk; the window ranks only the scored candidates. Same left-to-right FP summation and Spark HALF_UP rounding as the former zip_with/aggregate form (oracle-identical).",
-     ops.Queries.all("q30_cosine_topk")(spark, sf)),
-    ("q37 salted aggregation", "Two HashAggregate pairs: 16-way salted shuffle then tiny re-aggregation — the hot-key shape.",
-     ops.Queries.all("q37_salted_agg")(spark, sf)),
-    ("q26 n-gram Jaccard join", "Equi-join on the shifted doc_id with NO broadcast hint (VERDICT r01: hinted broadcast of a corpus-sized side is a 100 TB OOM) — the planner/AQE picks from stats; at scale this is a shuffle join on the key. r6: the shingled proxy table is localCheckpoint'ed once (the two join sides key on different expressions, so their exchanges can never unify and the shingle pass used to run per side).",
-     ops.Queries.all("q26_ngram_jaccard")(spark, sf)),
-    ("q31 ANN LSH buckets", "Hyperplane sign weights are array LITERALS (precomputed once; previously an md5 per plane x dim x row) — the scan feeds a pure projection + hash aggregate.",
-     ops.Queries.all("q31_ann_lsh_buckets")(spark, sf)),
-    ("q49 decontaminate (r5 kernel-side counting)",
-     "The benchmark gram set is a driver-collected broadcast hash set probed inside the shingling mapPartitions: ONE narrow stage over the corpus, one output row per document — no Exchange, no join, no per-gram row materialization (the r4 shingle-explode + broadcast-join form paid one typed-encoder row per gram; 4.88 -> 0.77 s at sf0.1).",
-     ops.Queries.all("q49_decontaminate")(spark, sf)),
-    ("q53 IVF ANN search (r5)",
-     "Coarse quantizer trained driver-side on a BOUNDED sample (one 64-vector collect — the standard IVF recipe regardless of corpus size), centroids + queries broadcast. The corpus streams ONCE through a map-side assign+probe filter (no Exchange before candidate scoring); the only shuffle ranks the candidate slice (queries x nprobe/k of the corpus). At rest the assigned table would be partitionBy(list_id) so probes prune at the reader.",
-     ops.Queries.all("q53_ann_ivf")(spark, sf)),
-    ("q54 Bloom-prefiltered decontamination (r5)",
-     "The eval-set-too-big-to-broadcast regime: Bloom filter built DISTRIBUTED over the benchmark grams (executor partial sketches, driver merge), broadcast compact (~1.2 B/gram at 1% fpp vs tens of B/gram for an exact set). ONE corpus pass (shingle + count + Bloom probe in-kernel), localCheckpoint'ed slim per-doc frame; the exact confirm equi-join shuffles only the Bloom-positive sliver and kills false positives, so the output is bit-identical to q49 (same oracle SQL).",
-     ops.Queries.all("q54_decontaminate_bloom")(spark, sf)),
-    ("Page-split leg (r5 declarative explode), 64-span threshold so the giant leg is live",
-     "The giant leg is now: pruned scan -> columnar posexplode (codegen, inside the scan stage) -> ONE scatter Exchange by (doc_id, page_no) -> in-partition sort + run-assembly mapPartitions (page kernels) -> regather by doc. The former typed flatMap explode deserialized giants through the Seq[Span] MapObjects encoder and needed a pre-scatter doc shuffle (~70% of the leg's wall, both gone).",
-     graft.pipeline.Extract.extractContract(spark.read.parquet(corpusPath), skewSpanThreshold = 64)))
-  val md = new StringBuilder
-  md ++= "# PLANS — physical plans of the pipeline and key operators\n\n"
-  md ++= "Captured by `graft.PlanDump` at local[8], AQE on, sf0.001.\n"
-  sections.foreach { case (title, note, df) =>
-    md ++= s"\n## $title\n\n$note\n\n```\n${fmt(df)}\n```\n"
-  }
-  java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), md.toString)
-  println("wrote PLANS.md")
-  spark.stop()
 }

@@ -200,8 +200,9 @@ object ScalingBench {
       s"""# BENCH/BASELINE — scaling experiment (N vs 4N parallelism)
          |
          |Protocol: BASELINE.md (sandbox substitute for the two-cluster-size
-         |criterion). Identical job — `Extract.extractSkewAware` over the
-         |identical pre-materialized corpus parquet — at `local[$n]` and
+         |criterion). Identical job — `Extract.extractContract` (narrow leg +
+         |page-split giant leg) over the identical pre-materialized corpus
+         |parquet — at `local[$n]` and
          |`local[$n4]`, `spark.sql.shuffle.partitions` = cores, AQE on at both
          |levels. Corpus: $nDocs deterministic fixture docs (archetype mix incl.
          |1-in-20 multi-hundred-page skewed giants), ${statsN.pages} pages,

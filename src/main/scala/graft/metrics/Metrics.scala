@@ -2,7 +2,7 @@ package graft.metrics
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.util.LongAccumulator
-import graft.model.{DocResult, SpanDoc}
+import graft.model.DocResult
 
 /** Extraction metrics as Spark accumulators (SURVEY.md §4.2 lineage/metrics):
   * documents, pages, spans, quarantined rows, OCR-gate firings. Driver-side
@@ -30,10 +30,6 @@ final class ExtractMetrics(spark: SparkSession) extends Serializable {
   /** Instrument a DocResult stream. */
   def observeResults(ds: Dataset[DocResult]): Dataset[DocResult] =
     observe(ds)(r => (r.num_pages, r.spans.length, r.quarantined))
-
-  /** Instrument a slim SpanDoc stream. */
-  def observeSpanDocs(ds: Dataset[SpanDoc]): Dataset[SpanDoc] =
-    observe(ds)(r => (r.num_pages, if (r.spans == null) 0 else r.spans.length, r.quarantined))
 
   def snapshot: Map[String, Long] = Map(
     "docs" -> docs.value,

@@ -65,9 +65,9 @@ object Queries {
 
   private val qExtractSkewAware: Q = (spark, sfDir) => {
     import spark.implicits._
-    // Materialize the GENERATED corpus once (r6): extractSkewAware's
-    // small/big split consumes its input twice (two size-filter branches).
-    // For a parquet input the second scan is a cheap pruned re-read, but
+    // Materialize the GENERATED corpus once (r6): the small/big split of
+    // Extract.extractContract's two legs consumes its input twice (two
+    // size-filter branches). For a parquet input the second scan is a cheap pruned re-read, but
     // q02's input is an expensive opaque generator (rawDocs maps every id
     // through Fixtures.gen), so the split re-generated the whole corpus to
     // find the giants. A lazy localCheckpoint computes gen once and both
@@ -75,7 +75,7 @@ object Queries {
     // cluster scale this is exactly "materialize the expensive input, then
     // split", never a cache of results across runs.
     val docs = graft.SparkEntry.rawDocs(spark, sfDir).localCheckpoint(eager = false)
-    // Same two legs as Extract.extractSkewAware (narrow kernel below the
+    // Same two legs as Extract.extractContract (narrow kernel below the
     // span threshold, page-split scatter/regather above it), but the slim
     // 4-column projection is applied PER LEG, before the union (guide §2.3
     // "project before the exchange"): a typed union of full DocResults

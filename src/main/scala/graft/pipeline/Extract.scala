@@ -22,7 +22,7 @@ import graft.kernel.{Extractor, Parse}
   *
   * The page-split plan only exists for the core engine: the adaptive
   * fitz/plumber engines read page 0 only (loops commented out in the
-  * reference), so every skew-aware entry point routes non-core configs down
+  * reference), so both contract entry points route non-core configs down
   * the narrow path — splitting them would both change semantics and waste a
   * shuffle.
   */
@@ -32,16 +32,6 @@ object Extract {
   def extract(ds: Dataset[RawDoc], cfg: ExtractConfig = ExtractConfig.default): Dataset[DocResult] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[DocResult]
     ds.mapPartitions(_.map(doc => Extractor.extractDoc(doc, cfg)))
-  }
-
-  private def toSpanDoc(r: DocResult): SpanDoc =
-    SpanDoc(r.doc_id, r.spans, r.num_pages, r.quarantined, r.error, r.error_code)
-
-  /** Narrow path, slim output: the driver-contract span table. Use this for
-    * throughput paths — the fat DocResult encoder is the measured bottleneck. */
-  def extractSpans(ds: Dataset[RawDoc], cfg: ExtractConfig = ExtractConfig.default): Dataset[SpanDoc] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[SpanDoc]
-    ds.mapPartitions(_.map(doc => toSpanDoc(Extractor.extractDoc(doc, cfg))))
   }
 
   /** Shared page-split leg: giant docs -> per-page work units, spread wide by
@@ -121,18 +111,24 @@ object Extract {
   // and a hand-rolled field codec (equal within noise) — so the remaining
   // leg cost is the shuffle + per-doc finalize itself, not encoder overhead,
   // and the simple typed groupByKey stays.
-  /** Page-split leg emitting the slim contract rows. */
-  private def pageSplitSpanDocs(big: Dataset[RawDoc], cfg: ExtractConfig,
-      pageParallelism: Int): Dataset[SpanDoc] = {
+  /** Page-split leg emitting the contract schema — the giant leg of both
+    * contract entries. `big` is the input already filtered to the docs above
+    * the skew threshold; only its doc_id and spans are read. */
+  private def pageSplitContract(big: org.apache.spark.sql.DataFrame, cfg: ExtractConfig,
+      pageParallelism: Int): org.apache.spark.sql.DataFrame = {
     val spark = big.sparkSession
     import spark.implicits._
     implicit val enc = org.apache.spark.sql.Encoders.product[SpanDoc]
-    pageSplitPages(big, cfg, pageParallelism)
+    val docs = big.select(col("doc_id").cast("string").as("doc_id"), col("spans")).as[RawDoc]
+    pageSplitPages(docs, cfg, pageParallelism)
       .groupByKey(_._1)
       .mapGroups { (docId, it) =>
         val pages = it.toVector.filter(_._2 != Int.MinValue).sortBy(_._2).map(_._3)
-        toSpanDoc(Extractor.finalizeDoc(docId, pages, cfg))
+        val r = Extractor.finalizeDoc(docId, pages, cfg)
+        SpanDoc(r.doc_id, r.spans, r.num_pages, r.quarantined, r.error, r.error_code)
       }
+      .toDF().select(col("doc_id"), col("spans").cast(SpanArraySchema).as("spans"),
+        col("num_pages"), col("quarantined"), col("error"), col("error_code"))
   }
 
   /** Page-split leg emitting full results. (private[graft] since r6: q02
@@ -150,40 +146,6 @@ object Extract {
         val pages = it.toVector.filter(_._2 != Int.MinValue).sortBy(_._2).map(_._3)
         Extractor.finalizeDoc(docId, pages, cfg)
       }
-  }
-
-  /** Skew-aware slim-output variant (same split/page-scatter plan as
-    * [[extractSkewAware]]). */
-  def extractSpansSkewAware(
-      ds: Dataset[RawDoc],
-      cfg: ExtractConfig = ExtractConfig.default,
-      skewSpanThreshold: Int = 512 * Parse.SpansPerPage,
-      pageParallelism: Int = 0): Dataset[SpanDoc] = {
-    if (cfg.engine != "core") return extractSpans(ds, cfg) // page-0 engines: narrow only
-    val small = ds.filter(coalesce(size(col("spans")), lit(0)) <= skewSpanThreshold)
-    val big = ds.filter(coalesce(size(col("spans")), lit(0)) > skewSpanThreshold)
-    extractSpans(small, cfg).unionByName(pageSplitSpanDocs(big, cfg, pageParallelism))
-  }
-
-  /** Skew-aware path. `skewSpanThreshold` in raw spans (default 512 pages'
-    * worth). Small docs take the narrow path; giant docs are page-split.
-    *
-    * Threshold guidance (measured): the page-split path costs two shuffles
-    * (scatter pages, regather per doc), so it loses to whole-doc narrow
-    * processing until a document is large enough to (a) threaten task memory
-    * or (b) straggle a stage (docs-per-core near 1). ~500 pages is the local
-    * crossover; tune per cluster. */
-  def extractSkewAware(
-      ds: Dataset[RawDoc],
-      cfg: ExtractConfig = ExtractConfig.default,
-      skewSpanThreshold: Int = 512 * Parse.SpansPerPage,
-      pageParallelism: Int = 0): Dataset[DocResult] = {
-    if (cfg.engine != "core") return extract(ds, cfg) // page-0 engines: narrow only
-    // size split as a column predicate — no encoder roundtrip, and the
-    // size(spans) filter evaluates on the columnar batch before any kernel
-    val small = ds.filter(coalesce(size(col("spans")), lit(0)) <= skewSpanThreshold)
-    val big = ds.filter(coalesce(size(col("spans")), lit(0)) > skewSpanThreshold)
-    extract(small, cfg).unionByName(pageSplitDocResults(big, cfg, pageParallelism))
   }
 
   /** Driver-facing output: the span projection table
@@ -205,20 +167,13 @@ object Extract {
   // contract ARRAY<STRUCT> with a codegen'd transform at the boundary.
   // ---------------------------------------------------------------------
 
-  /** Kernel wire rows for the fast path. */
-  final case class RawDocArr(doc_id: String, kinds: Array[String], texts: Array[String],
+  /** Kernel wire rows for the streaming (declarative) path. Package-private,
+    * not private: the encoders' generated Java must reach their members. */
+  private[pipeline] final case class RawDocArr(doc_id: String, kinds: Array[String], texts: Array[String],
       refs: Array[String], offsets: Array[Int])
-  final case class SpanDocArr(doc_id: String, kinds: Array[String], texts: Array[String],
+  private[pipeline] final case class SpanDocArr(doc_id: String, kinds: Array[String], texts: Array[String],
       refs: Array[String], offsets: Array[Int], num_pages: Int, quarantined: Boolean,
       error: String, error_code: String)
-
-  /** Probe hook (ScanProbe): kernel work without output encoding. */
-  def runKernelArrProbe(d: RawDocArr, cfg: ExtractConfig): Int =
-    runKernelArr(d, cfg).kinds.length
-
-  /** Probe hook (ScanProbe): kernel + arrays, reassembly elided. */
-  def runKernelArrShared(d: RawDocArr, cfg: ExtractConfig): SpanDocArr =
-    runKernelArr(d, cfg)
 
   private def runKernelArr(d: RawDocArr, cfg: ExtractConfig): SpanDocArr = {
     val n = if (d.kinds == null) 0 else d.kinds.length
@@ -248,7 +203,7 @@ object Extract {
     * compatible; the batch entry uses [[extractSpansRows]] (measured ~25%
     * less wall: the encoder path pays UTF8String->String for every field on
     * the way in AND a second array materialization on the way out). */
-  def extractSpansDFDeclarative(input: org.apache.spark.sql.DataFrame,
+  private def extractSpansDFDeclarative(input: org.apache.spark.sql.DataFrame,
       cfg: ExtractConfig = ExtractConfig.default): org.apache.spark.sql.DataFrame = {
     val spark = input.sparkSession
     import spark.implicits._
@@ -264,7 +219,7 @@ object Extract {
   }
 
   /** Contract output schema (matches the encoder path's shape). */
-  val ContractSchema: org.apache.spark.sql.types.StructType = {
+  private val ContractSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("doc_id", StringType),
@@ -294,7 +249,7 @@ object Extract {
     *
     * Null semantics match the typed Dataset[RawDoc] path: null span elements
     * are dropped by the kernel's filter, null doc_id quarantines. */
-  def extractSpansRows(input: org.apache.spark.sql.DataFrame,
+  private[graft] def extractSpansRows(input: org.apache.spark.sql.DataFrame,
       cfg: ExtractConfig = ExtractConfig.default): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
     import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -390,7 +345,7 @@ object Extract {
     * materialization per element — measured 4.4 s of the 16 s contract wall
     * at local[32]). The cast renames the zip's positional fields to the
     * contract names. */
-  def reassembleSpans(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private def reassembleSpans(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     df.select(
       col("doc_id"),
       arrays_zip(col("kinds").as("kind"), col("texts").as("text"),
@@ -412,7 +367,6 @@ object Extract {
       cfg: ExtractConfig = ExtractConfig.default,
       skewSpanThreshold: Int = 512 * Parse.SpansPerPage,
       pageParallelism: Int = 0): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
     val input = spark.read.parquet(path)
     if (cfg.engine != "core")
       return extractSpansDF(input.select(col("doc_id"), col("spans")), cfg)
@@ -426,34 +380,32 @@ object Extract {
         skewSpanThreshold, pageParallelism)
     val small = extractSpansRows(
       input.filter(col("n_spans") <= skewSpanThreshold).select(col("doc_id"), col("spans")), cfg)
-    val bigIn = input.filter(col("n_spans") > skewSpanThreshold)
-      .select(col("doc_id").cast("string").as("doc_id"), col("spans")).as[RawDoc]
-    val big = pageSplitSpanDocs(bigIn, cfg, pageParallelism)
-      .toDF().select(col("doc_id"), col("spans").cast(SpanArraySchema).as("spans"),
-        col("num_pages"), col("quarantined"), col("error"), col("error_code"))
-    small.unionByName(big)
+    small.unionByName(pageSplitContract(input.filter(col("n_spans") > skewSpanThreshold),
+      cfg, pageParallelism))
   }
 
   /** Production contract entry: input table -> output table, fast columnar
     * path for typical docs + page-split path for giants beyond
-    * `skewSpanThreshold`. Both legs emit the contract schema; the plan has
-    * exactly two scans of the input (small leg + giant leg — the giant leg
-    * feeds [[pageSplitSpanDocs]] directly, no third scan). */
+    * `skewSpanThreshold` (raw spans; default 512 pages' worth). Both legs
+    * emit the contract schema; the plan has exactly two scans of the input
+    * (small leg + giant leg — the giant leg feeds [[pageSplitContract]]
+    * directly, no third scan).
+    *
+    * Threshold guidance (measured): the page-split path costs two shuffles
+    * (scatter pages, regather per doc), so it loses to whole-doc narrow
+    * processing until a document is large enough to (a) threaten task memory
+    * or (b) straggle a stage (docs-per-core near 1). ~500 pages is the local
+    * crossover; tune per cluster. */
   def extractContract(
       input: org.apache.spark.sql.DataFrame,
       cfg: ExtractConfig = ExtractConfig.default,
       skewSpanThreshold: Int = 512 * Parse.SpansPerPage,
       pageParallelism: Int = 0): org.apache.spark.sql.DataFrame = {
     if (cfg.engine != "core") return extractSpansDF(input, cfg) // page-0 engines: narrow only
-    val spark = input.sparkSession
-    import spark.implicits._
+    // size split as a column predicate — no encoder roundtrip, and the
+    // size(spans) filter evaluates on the columnar batch before any kernel
     val nSpans = coalesce(size(col("spans")), lit(0))
     val small = extractSpansDF(input.filter(nSpans <= skewSpanThreshold), cfg)
-    val bigIn = input.filter(nSpans > skewSpanThreshold)
-      .select(col("doc_id").cast("string").as("doc_id"), col("spans")).as[RawDoc]
-    val big = pageSplitSpanDocs(bigIn, cfg, pageParallelism)
-      .toDF().select(col("doc_id"), col("spans").cast(SpanArraySchema).as("spans"),
-        col("num_pages"), col("quarantined"), col("error"), col("error_code"))
-    small.unionByName(big)
+    small.unionByName(pageSplitContract(input.filter(nSpans > skewSpanThreshold), cfg, pageParallelism))
   }
 }

@@ -25,21 +25,33 @@ class PipelineSparkSpec extends AnyFunSuite {
     spark.createDataset(graft.fixtures.Fixtures.corpus(n).toSeq).toDF()
   }
 
+  /** Contract rows as (doc_id, spans JSON, num_pages, quarantined), by doc_id. */
+  private def canon(df: org.apache.spark.sql.DataFrame): Seq[(String, String, Int, Boolean)] = {
+    import spark.implicits._
+    df.selectExpr("doc_id", "coalesce(to_json(spans), '') AS j", "num_pages", "quarantined")
+      .as[(String, String, Int, Boolean)].collect().sortBy(_._1).toSeq
+  }
+
+  /** The typed narrow path projected to the contract columns. */
+  private def typedCanon(ds: org.apache.spark.sql.Dataset[graft.model.RawDoc],
+      cfg: graft.model.ExtractConfig = graft.model.ExtractConfig.default) =
+    canon(graft.pipeline.Extract.extract(ds, cfg).toDF()
+      .select("doc_id", "spans", "num_pages", "quarantined"))
+
+  /** Row-by-row equality of two canon forms, naming the divergent doc. */
+  private def assertSameRows(narrow: Seq[(String, String, Int, Boolean)],
+      split: Seq[(String, String, Int, Boolean)], what: String): Unit = {
+    assert(narrow.length == split.length, s"$what: row counts differ")
+    narrow.zip(split).foreach { case (a, b) => assert(a == b, s"$what divergence on ${a._1}") }
+  }
+
   test("extractContract == typed extract on the fixture corpus (fast-path equivalence)") {
     import spark.implicits._
     val input = corpusDF(60)
-    val fast = graft.pipeline.Extract.extractContract(input)
-      .selectExpr("doc_id", "coalesce(to_json(spans), '') AS j", "num_pages", "quarantined")
-      .as[(String, String, Int, Boolean)].collect().sortBy(_._1)
-    val typed = graft.pipeline.Extract.extract(input.as[graft.model.RawDoc])
-      .map(r => (r.doc_id, r.spans, r.num_pages, r.quarantined))
-      .toDF("doc_id", "spans", "num_pages", "quarantined")
-      .selectExpr("doc_id", "coalesce(to_json(spans), '') AS j", "num_pages", "quarantined")
-      .as[(String, String, Int, Boolean)].collect().sortBy(_._1)
     // empty span arrays serialize as [] on the typed side and [] on the fast
     // side; both must agree row by row
-    assert(fast.length == typed.length)
-    fast.zip(typed).foreach { case (f, t) => assert(f == t, s"mismatch for ${f._1}") }
+    assertSameRows(typedCanon(input.as[graft.model.RawDoc]),
+      canon(graft.pipeline.Extract.extractContract(input)), "fast-path")
   }
 
   test("extractSpansDF plan is shuffle-free (narrow pipeline)") {
@@ -53,15 +65,9 @@ class PipelineSparkSpec extends AnyFunSuite {
     val docs = graft.fixtures.Fixtures.Archetypes.flatMap(a =>
       (0 until 4).map(i => graft.fixtures.Fixtures.gen(graft.fixtures.Fixtures.docId(a, i))))
     val ds = spark.createDataset(docs.toSeq)
-    val narrow = graft.pipeline.Extract.extractSpans(ds).collect().sortBy(_.doc_id)
     // threshold 0: EVERY non-empty doc takes the page-split path
-    val split = graft.pipeline.Extract.extractSpansSkewAware(ds, skewSpanThreshold = 0)
-      .collect().sortBy(_.doc_id)
-    assert(narrow.length == split.length)
-    narrow.zip(split).foreach { case (a, b) =>
-      assert(a.doc_id == b.doc_id && a.spans == b.spans && a.num_pages == b.num_pages,
-        s"page-split divergence on ${a.doc_id}")
-    }
+    val split = canon(graft.pipeline.Extract.extractContract(ds.toDF(), skewSpanThreshold = 0))
+    assertSameRows(typedCanon(ds), split, "page-split")
   }
 
   test("page-split equals narrow on adversarial streams (unsorted, duplicate/negative offsets, nulls)") {
@@ -90,15 +96,8 @@ class PipelineSparkSpec extends AnyFunSuite {
       graft.model.RawDoc("fuzz-nulls-a", Vector(null, null, null)),
       graft.model.RawDoc("fuzz-nulls-b", Vector(null)))
     val ds = spark.createDataset(docs.toSeq ++ allNull)
-    val narrow = graft.pipeline.Extract.extractSpans(ds).collect().sortBy(_.doc_id)
-    val split = graft.pipeline.Extract.extractSpansSkewAware(ds, skewSpanThreshold = 0)
-      .collect().sortBy(_.doc_id)
-    assert(narrow.length == split.length)
-    narrow.zip(split).foreach { case (a, b) =>
-      assert(a.doc_id == b.doc_id && a.spans == b.spans && a.num_pages == b.num_pages &&
-        a.quarantined == b.quarantined,
-        s"adversarial page-split divergence on ${a.doc_id}")
-    }
+    val split = canon(graft.pipeline.Extract.extractContract(ds.toDF(), skewSpanThreshold = 0))
+    assertSameRows(typedCanon(ds), split, "adversarial page-split")
   }
 
   test("skew-aware entry points honor cfg.engine (ADVICE r01: big docs must not silently run core)") {
@@ -106,22 +105,21 @@ class PipelineSparkSpec extends AnyFunSuite {
     val docs = Seq("two_column_text", "single_column_contract", "tabular_report")
       .flatMap(a => (0 until 3).map(i => graft.fixtures.Fixtures.gen(graft.fixtures.Fixtures.docId(a, i))))
     val ds = spark.createDataset(docs)
+    // the managed (size-statted) layout of the same docs: its n_spans column
+    // would route them past the raw-input fallback into the split legs
+    val managed = java.nio.file.Files.createTempDirectory("engine_managed").toString
+    graft.io.TableIO.writeContractInput(ds.toDF(), managed)
     for (engine <- Seq("fitz", "plumber")) {
       val cfg = graft.model.ExtractConfig.default.copy(engine = engine)
-      val narrow = graft.pipeline.Extract.extractSpans(ds, cfg).collect()
-        .sortBy(_.doc_id).map(s => (s.doc_id, s.spans, s.num_pages))
       // threshold 0 used to page-split everything into the CORE pipeline;
       // now non-core engines take the narrow path unconditionally
-      val skew = graft.pipeline.Extract.extractSpansSkewAware(ds, cfg, skewSpanThreshold = 0)
-        .collect().sortBy(_.doc_id).map(s => (s.doc_id, s.spans, s.num_pages))
-      assert(narrow.toSeq == skew.toSeq, s"engine=$engine diverged through the skew path")
-      val contract = graft.pipeline.Extract.extractContract(ds.toDF(), cfg, skewSpanThreshold = 0)
-        .selectExpr("doc_id", "coalesce(to_json(spans), '') AS j").as[(String, String)]
-        .collect().sortBy(_._1)
-      val narrowJ = graft.pipeline.Extract.extractSpansDF(ds.toDF(), cfg)
-        .selectExpr("doc_id", "coalesce(to_json(spans), '') AS j").as[(String, String)]
-        .collect().sortBy(_._1)
-      assert(contract.toSeq == narrowJ.toSeq, s"engine=$engine contract diverged")
+      val contract = canon(graft.pipeline.Extract.extractContract(ds.toDF(), cfg, skewSpanThreshold = 0))
+      assert(typedCanon(ds, cfg) == contract, s"engine=$engine diverged through the skew path")
+      val narrow = canon(graft.pipeline.Extract.extractSpansDF(ds.toDF(), cfg))
+      assert(contract == narrow, s"engine=$engine contract diverged")
+      val fromTable = canon(graft.pipeline.Extract.extractContractFromTable(spark, managed, cfg,
+        skewSpanThreshold = 0))
+      assert(fromTable == narrow, s"engine=$engine managed-table contract diverged")
     }
   }
 
@@ -147,9 +145,9 @@ class PipelineSparkSpec extends AnyFunSuite {
   test("metrics accumulators count docs/pages/spans/quarantine") {
     import spark.implicits._
     val m = new graft.metrics.ExtractMetrics(spark)
-    val ds = graft.pipeline.Extract.extractSpans(
+    val ds = graft.pipeline.Extract.extract(
       spark.createDataset(graft.fixtures.Fixtures.corpus(40).toSeq))
-    m.observeSpanDocs(ds).write.format("noop").mode("overwrite").save()
+    m.observeResults(ds).write.format("noop").mode("overwrite").save()
     val snap = m.snapshot
     assert(snap("docs") == 40)
     assert(snap("pages") > 0 && snap("spans") > 0)
