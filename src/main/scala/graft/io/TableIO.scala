@@ -4,6 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Snapshot-table I/O: Iceberg-semantics emulation over partitioned Parquet
   * plus JSON manifests (no Iceberg runtime jar ships in this environment —
@@ -78,13 +81,30 @@ object TableIO {
 
     val target = dataDir(root, snapshotId)
     // stale uncommitted data from a crashed attempt is safe to overwrite
-    df.write.mode("overwrite").parquet(target.toString)
-
-    val spark = df.sparkSession
-    val rows = spark.read.parquet(target.toString).count()
+    df.write.mode("overwrite").options(WriteOptions).parquet(target.toString)
     val files = Files.list(target).toArray.map(_.toString).filter(_.endsWith(".parquet")).sorted.toSeq
+    commit(df.sparkSession, root, snapshotId, files, inputs, extraMetrics)
+  }
+
+  /** Fixed snapshot write options. Span texts are near-unique, so Parquet
+    * would build a dictionary for the contract's text leaf and then abandon
+    * it (measured ≈19% of executor samples); the leaf is written PLAIN
+    * either way. */
+  private val WriteOptions = Map("parquet.enable.dictionary#spans.list.element.text" -> "false")
+
+  /** Commit `files` as snapshot `snapshotId`: the manifest, then an atomic
+    * swap of CURRENT. The row count comes from the files' Parquet footers
+    * (the row-group counts `count()` would read), so the commit runs no
+    * Spark job. */
+  private def commit(spark: SparkSession, root: String, snapshotId: String, files: Seq[String],
+      inputs: Seq[String], metrics: Map[String, Long]): Manifest = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val rows = files.iterator.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
     val manifest = Manifest(snapshotId, rows, files, inputs,
-      spark.sparkContext.applicationId, System.currentTimeMillis(), extraMetrics)
+      spark.sparkContext.applicationId, System.currentTimeMillis(), metrics)
 
     Files.createDirectories(manifestDir(root))
     val tmp = manifestDir(root).resolve(s".$snapshotId.json.tmp")
@@ -135,7 +155,8 @@ object TableIO {
         .repartition(col("doc_bucket"))
       val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try withBucket.write.mode("overwrite").partitionBy("doc_bucket").parquet(target.toString)
+      try withBucket.write.mode("overwrite").options(WriteOptions).partitionBy("doc_bucket")
+        .parquet(target.toString)
       finally prev match {
         case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
         case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
@@ -146,20 +167,12 @@ object TableIO {
       }
     }
     // all buckets present -> commit the snapshot manifest atomically
-    val rows = spark.read.parquet(target.toString).count()
-    val files = Files.walk(target).toArray.map(_.toString).filter(_.endsWith(".parquet")).sorted.toSeq
-    val manifest = Manifest(snapshotId, rows, files, inputs,
-      spark.sparkContext.applicationId, System.currentTimeMillis(),
+    def files = Files.walk(target).toArray.map(_.toString).filter(_.endsWith(".parquet")).sorted.toSeq
+    // an empty input writes no bucket at all: one empty file keeps the
+    // snapshot readable (it carries the schema)
+    if (files.isEmpty) df.limit(0).write.mode("overwrite").options(WriteOptions).parquet(target.toString)
+    commit(spark, root, snapshotId, files, inputs,
       Map("buckets" -> buckets.toLong, "resumed_buckets" -> (buckets - missing.length).toLong))
-    Files.createDirectories(manifestDir(root))
-    val tmp = manifestDir(root).resolve(s".$snapshotId.json.tmp")
-    Files.write(tmp, renderManifest(manifest).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, manifestDir(root).resolve(s"$snapshotId.json"), StandardCopyOption.ATOMIC_MOVE)
-    val curTmp = manifestDir(root).resolve(".CURRENT.tmp")
-    Files.write(curTmp, snapshotId.getBytes(StandardCharsets.UTF_8))
-    Files.move(curTmp, manifestDir(root).resolve("CURRENT"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    manifest
   }
 
   def readManifest(root: String, snapshotId: String): Manifest = {

@@ -183,10 +183,7 @@ object Extractor {
       r.copy(processing_time = (System.nanoTime() - t0) / 1e9,
         extraction_date = System.currentTimeMillis() * 1000L)
     try {
-      if (doc.doc_id == null) {
-        return stamped(DocResult("", "", Nil, Nil, Nil, Nil, 0,
-          quarantined = true, error = "null doc_id", error_code = ErrorCode.NullDocId))
-      }
+      if (doc.doc_id == null) return stamped(quarantined(null, "null doc_id", ErrorCode.NullDocId))
       val spans = if (doc.spans == null) Nil else doc.spans.filter(_ != null)
       cfg.engine match {
         case "fitz" =>
@@ -204,13 +201,17 @@ object Extractor {
           stamped(finalizeDoc(doc.doc_id, pages, cfg))
       }
     } catch {
-      case scala.util.control.NonFatal(e) =>
-        val code = ErrorCode.ofThrowable(e)
-        stamped(DocResult(Option(doc.doc_id).getOrElse(""), "", Nil, Nil, Nil, Nil, 0,
-          quarantined = true,
-          error = s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}",
-          error_code = code,
-          is_encrypted = code == ErrorCode.Encrypted))
+      case scala.util.control.NonFatal(e) => stamped(quarantined(doc.doc_id, e))
     }
   }
+
+  /** The quarantine row for a doc the kernel could not extract. */
+  def quarantined(docId: String, error: String, errorCode: String): DocResult =
+    DocResult(Option(docId).getOrElse(""), "", Nil, Nil, Nil, Nil, 0, quarantined = true,
+      error = error, error_code = errorCode, is_encrypted = errorCode == ErrorCode.Encrypted)
+
+  /** The quarantine row for a kernel exception on `docId`. */
+  def quarantined(docId: String, e: Throwable): DocResult =
+    quarantined(docId, s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(500)}",
+      ErrorCode.ofThrowable(e))
 }

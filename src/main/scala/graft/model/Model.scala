@@ -141,19 +141,6 @@ final case class DocResult(
   def imagesByPage(n: Int): Seq[ImageResult] = images.filter(_.page_number == n)
 }
 
-/** Slim wire row: the driver-contract output table
-  * (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,offset>>) plus counters.
-  * The full [[DocResult]] carries pages/blocks/text too — ~2x redundant with
-  * spans — and its nested encoder dominated pipeline cost at 32 threads
-  * (measured: kernel 130k pages/s vs 10k through the fat encoder). */
-final case class SpanDoc(
-    doc_id: String,
-    spans: Seq[Span],
-    num_pages: Int,
-    quarantined: Boolean,
-    error: String,
-    error_code: String = ErrorCode.Ok)
-
 /** Extraction configuration (reference: config.py:9-76). Dead knobs of the
   * reference (chunk_size, timeout, detect_footers, image_quality, ...) are
   * kept for API parity and documented as inert. */

@@ -1,16 +1,28 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import graft.model._
 import graft.kernel.{Extractor, Parse}
 
 /** The Dataset-level extraction pipeline.
   *
   * Shape (SURVEY.md §4.2): the whole per-document pipeline is one narrow
-  * `mapPartitions` — no shuffle for the common case. Parallelism = input
+  * kernel operator — no shuffle for the common case. Parallelism = input
   * partitioning; the reference's per-page thread pool (core.py:184-205)
   * disappears.
+  *
+  * Plan: the batch contract entries build ordinary Catalyst plans around
+  * one logical node, [[GraftExtract]], planned as [[GraftExtractExec]] by
+  * [[GraftExtractStrategy]] (installed on the session by every entry). Its
+  * three kinds run the kernel over `InternalRow`s: `Doc` (narrow leg),
+  * `Page` and `Finalize` (the giant leg's scatter and regather). The plan is
+  * planned once, inside the consuming action, keeps the scans visible to
+  * `explain` (filter pushdown, column pruning), and carries no encoder
+  * expression trees; each node reports docs, pages, spans, kernel time and
+  * quarantines per error code as SQL metrics.
   *
   * Skew (north_rule: "salted repartitioning for skewed multi-hundred-page
   * documents"): docs whose span count exceeds `skewSpanThreshold` are
@@ -34,12 +46,12 @@ object Extract {
     ds.mapPartitions(_.map(doc => Extractor.extractDoc(doc, cfg)))
   }
 
-  /** Shared page-split leg: giant docs -> per-page work units, spread wide by
-    * (doc_id, page_no), page kernels in parallel, regather per doc with
-    * explicit page ordering. Callers pre-filter to docs above the skew
-    * threshold; page-split assumes non-null doc_id (the table's primary key —
-    * the narrow path quarantines null ids).
-    * Core engine only (see object scaladoc).
+  /** The giant leg's scatter side: giant docs -> per-page work units, spread
+    * wide by (doc_id, page_no), one `GraftExtract` Page kernel per page
+    * (output [[GraftExtract.PageSchema]]). Callers pre-filter to the docs
+    * above the skew threshold with a non-null doc_id (the table's primary
+    * key — the narrow leg quarantines null ids). Core engine only (see
+    * object scaladoc).
     *
     * r5 shape: the explode is DECLARATIVE (posexplode of the span array —
     * codegen, columnar). The former typed flatMap explode deserialized every
@@ -55,13 +67,9 @@ object Extract {
     * int-division semantics (double-divide + int cast truncates toward
     * zero); span order within a page = stable offset-sort, reproduced by
     * sorting (offset, original position). */
-  private[graft] def pageSplitPages(big: Dataset[RawDoc], cfg: ExtractConfig,
-      pageParallelism: Int): Dataset[(String, Int, PageResult)] = {
-    val spark = big.sparkSession
-    import spark.implicits._
-    implicit val prEnc = org.apache.spark.sql.Encoders.product[(String, Int, PageResult)]
+  private[graft] def pageLeg(big: DataFrame, cfg: ExtractConfig, pageParallelism: Int): DataFrame = {
     val parallelism = if (pageParallelism > 0) pageParallelism
-      else spark.sparkContext.defaultParallelism
+      else big.sparkSession.sparkContext.defaultParallelism
     // Null span ELEMENTS become sentinel rows (page_no = Int.MinValue)
     // instead of being filtered out: a doc whose spans are ALL null would
     // otherwise emit zero units and silently VANISH from the output —
@@ -70,82 +78,58 @@ object Extract {
     // sentinels, so such docs finalize over zero pages exactly like the
     // narrow kernel. (Empty/null span ARRAYS cannot reach this leg: the
     // callers' size(spans) > threshold pre-filter excludes them.)
-    big.toDF()
+    // (a null offset reads as 0, as on the narrow leg)
+    val offset = coalesce(col("s.offset"), lit(0))
+    val units = big
       .select(col("doc_id"), posexplode(col("spans")))
       .withColumnRenamed("col", "s")
       .select(col("doc_id"), col("pos"),
-        col("s.kind"), col("s.text"), col("s.media_ref"),
-        coalesce(col("s.offset"), lit(0)).as("offset"),
+        col("s.kind"), col("s.text"), col("s.media_ref"), offset.as("offset"),
         when(col("s").isNull, lit(Int.MinValue))
-          .otherwise((col("s.offset") / lit(Parse.SpansPerPage)).cast("int")).as("page_no"))
+          .otherwise((offset / lit(Parse.SpansPerPage)).cast("int")).as("page_no"))
       .repartition(parallelism, col("doc_id"), col("page_no"))
       .sortWithinPartitions(col("doc_id"), col("page_no"), col("offset"), col("pos"))
-      .as[(String, Int, String, String, String, Int, Int)]
-      .mapPartitions { it =>
-        // assemble each (doc_id, page_no) run — contiguous after the sort —
-        // and run the page kernel in place; sentinel runs emit a marker the
-        // regather drops (they exist only to keep the doc represented)
-        new Iterator[(String, Int, PageResult)] {
-          private var nextRow: (String, Int, String, String, String, Int, Int) =
-            if (it.hasNext) it.next() else null
-          override def hasNext: Boolean = nextRow != null
-          override def next(): (String, Int, PageResult) = {
-            val docId = nextRow._1
-            val pageNo = nextRow._7
-            val buf = new scala.collection.mutable.ArrayBuffer[Span](64)
-            while (nextRow != null && nextRow._1 == docId && nextRow._7 == pageNo) {
-              if (pageNo != Int.MinValue) buf += Span(nextRow._3, nextRow._4, nextRow._5, nextRow._6)
-              nextRow = if (it.hasNext) it.next() else null
-            }
-            if (pageNo == Int.MinValue) (docId, pageNo, PageResult(page_number = 0))
-            else (docId, pageNo, Extractor.extractPage(pageNo, buf.toSeq, cfg))
-          }
-        }
-      }
+    node(GraftExtract.Page, cfg, units)
   }
 
-  // Regather note (r5, measured so nobody re-litigates it): the per-page
-  // results cross the regather shuffle through the Catalyst product encoder.
-  // Two byte-payload alternatives were benchmarked on the A/B corpus — JDK
-  // ObjectOutputStream (40% WORSE: class descriptors + reflection per page)
-  // and a hand-rolled field codec (equal within noise) — so the remaining
-  // leg cost is the shuffle + per-doc finalize itself, not encoder overhead,
-  // and the simple typed groupByKey stays.
-  /** Page-split leg emitting the contract schema — the giant leg of both
-    * contract entries. `big` is the input already filtered to the docs above
-    * the skew threshold; only its doc_id and spans are read. */
-  private def pageSplitContract(big: org.apache.spark.sql.DataFrame, cfg: ExtractConfig,
-      pageParallelism: Int): org.apache.spark.sql.DataFrame = {
-    val spark = big.sparkSession
-    import spark.implicits._
-    implicit val enc = org.apache.spark.sql.Encoders.product[SpanDoc]
-    val docs = big.select(col("doc_id").cast("string").as("doc_id"), col("spans")).as[RawDoc]
-    pageSplitPages(docs, cfg, pageParallelism)
-      .groupByKey(_._1)
-      .mapGroups { (docId, it) =>
-        val pages = it.toVector.filter(_._2 != Int.MinValue).sortBy(_._2).map(_._3)
-        val r = Extractor.finalizeDoc(docId, pages, cfg)
-        SpanDoc(r.doc_id, r.spans, r.num_pages, r.quarantined, r.error, r.error_code)
-      }
-      .toDF().select(col("doc_id"), col("spans").cast(SpanArraySchema).as("spans"),
-        col("num_pages"), col("quarantined"), col("error"), col("error_code"))
+  /** The giant leg of both contract entries: [[pageLeg]], then the regather
+    * per doc with explicit page ordering into one `GraftExtract` Finalize
+    * kernel per doc. `big` is the input already filtered to the giants;
+    * only its doc_id and spans are read. */
+  private def pageSplitContract(big: DataFrame, cfg: ExtractConfig, pageParallelism: Int): DataFrame = {
+    val docs = big.select(col("doc_id").cast("string").as("doc_id"), col("spans"))
+    node(GraftExtract.Finalize, cfg, pageLeg(docs, cfg, pageParallelism)
+      .repartition(col("doc_id"))
+      .sortWithinPartitions(col("doc_id"), col("page_no")))
   }
 
-  /** Page-split leg emitting full results. (private[graft] since r6: q02
-    * composes it directly so the slim projection happens BEFORE the union —
-    * a typed union of full DocResults forces every row through the fat
-    * nested encoder just to be projected down to four fields afterwards.) */
+  /** Page-split leg emitting full results: the typed regather over
+    * [[pageLeg]]. (private[graft]: q02 composes it directly so the slim
+    * projection happens BEFORE the union — a typed union of full DocResults
+    * forces every row through the fat nested encoder just to be projected
+    * down to four fields afterwards.) */
   private[graft] def pageSplitDocResults(big: Dataset[RawDoc], cfg: ExtractConfig,
       pageParallelism: Int): Dataset[DocResult] = {
     val spark = big.sparkSession
     import spark.implicits._
+    implicit val pageEnc = org.apache.spark.sql.Encoders.product[(String, Int, PageResult)]
     implicit val docEnc = org.apache.spark.sql.Encoders.product[DocResult]
-    pageSplitPages(big, cfg, pageParallelism)
+    pageLeg(big.toDF(), cfg, pageParallelism)
+      .select("doc_id", "page_no", "page").as[(String, Int, PageResult)]
       .groupByKey(_._1)
       .mapGroups { (docId, it) =>
         val pages = it.toVector.filter(_._2 != Int.MinValue).sortBy(_._2).map(_._3)
-        Extractor.finalizeDoc(docId, pages, cfg)
+        GraftExtract.finalizePages(docId, pages, cfg)
       }
+  }
+
+  /** `child` under a `GraftExtract` node of the given kind. */
+  private def node(kind: GraftExtract.Kind, cfg: ExtractConfig, child: DataFrame): DataFrame = {
+    val spark = child.sparkSession
+    GraftExtractStrategy.install(spark)
+    val plan = child.queryExecution.analyzed
+    Bridge.dataFrame(spark, GraftExtract(kind, cfg, plan.output,
+      DataTypeUtils.toAttributes(GraftExtract.schemaOf(kind)), plan))
   }
 
   /** Driver-facing output: the span projection table
@@ -190,21 +174,20 @@ object Extract {
 
   /** Fast-path extraction over the contract input table
     * (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,offset>>); returns the
-    * same shape plus counters. Batch inputs take the single-copy
-    * InternalRow kernel ([[extractSpansRows]]); streaming inputs keep the
-    * declarative encoder path (toRdd is not defined on streaming plans). */
-  def extractSpansDF(input: org.apache.spark.sql.DataFrame,
-      cfg: ExtractConfig = ExtractConfig.default): org.apache.spark.sql.DataFrame =
+    * contract columns. Batch inputs take the `GraftExtract` Doc node, the
+    * single-copy InternalRow kernel loop; streaming inputs keep the
+    * declarative encoder path. */
+  def extractSpansDF(input: DataFrame, cfg: ExtractConfig = ExtractConfig.default): DataFrame =
     if (input.isStreaming) extractSpansDFDeclarative(input, cfg)
-    else extractSpansRows(input, cfg)
+    else node(GraftExtract.Doc, cfg, input.select(col("doc_id").cast("string").as("doc_id"), col("spans")))
 
   /** Declarative variant: columnar field projection -> narrow mapPartitions
     * over the encoder wire rows -> codegen'd struct reassembly. Streaming-
-    * compatible; the batch entry uses [[extractSpansRows]] (measured ~25%
+    * compatible; the batch entry uses the Doc node (measured ~25%
     * less wall: the encoder path pays UTF8String->String for every field on
     * the way in AND a second array materialization on the way out). */
-  private def extractSpansDFDeclarative(input: org.apache.spark.sql.DataFrame,
-      cfg: ExtractConfig = ExtractConfig.default): org.apache.spark.sql.DataFrame = {
+  private def extractSpansDFDeclarative(input: DataFrame,
+      cfg: ExtractConfig = ExtractConfig.default): DataFrame = {
     val spark = input.sparkSession
     import spark.implicits._
     val arr = input.select(
@@ -218,134 +201,13 @@ object Extract {
     reassembleSpans(out.toDF())
   }
 
-  /** Contract output schema (matches the encoder path's shape). */
-  private val ContractSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("doc_id", StringType),
-      StructField("spans", ArrayType(StructType(Seq(
-        StructField("kind", StringType),
-        StructField("text", StringType),
-        StructField("media_ref", StringType),
-        StructField("offset", IntegerType, nullable = false))), containsNull = false)),
-      StructField("num_pages", IntegerType, nullable = false),
-      StructField("quarantined", BooleanType, nullable = false),
-      StructField("error", StringType),
-      StructField("error_code", StringType)))
-  }
-
-  /** Single-copy InternalRow fast path (the 100-TB hot loop):
-    *
-    *   - INPUT: reads the scan's Catalyst rows directly (`toRdd`) — span
-    *     `kind` is matched against cached UTF8String constants (byte compare,
-    *     zero alloc, interned "text"/"table"/"image" result), `media_ref` is
-    *     materialized only when non-empty, and only `text` pays the
-    *     unavoidable UTF8String->String decode the kernel needs. The encoder
-    *     path allocated a String for EVERY field of EVERY span.
-    *   - OUTPUT: one codegen'd UnsafeProjection writes the final
-    *     ARRAY<STRUCT> row in a single pass. The encoder path serialized four
-    *     flat arrays and then re-walked them with a zip expression — the
-    *     second copy was ~3.5 s of a 16 s wall at local[32]/160k docs.
-    *
-    * Null semantics match the typed Dataset[RawDoc] path: null span elements
-    * are dropped by the kernel's filter, null doc_id quarantines. */
-  private[graft] def extractSpansRows(input: org.apache.spark.sql.DataFrame,
-      cfg: ExtractConfig = ExtractConfig.default): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import org.apache.spark.unsafe.types.UTF8String
-    val spark = input.sparkSession
-    val projected = input.select(col("doc_id").cast("string").as("doc_id"), col("spans"))
-    val schema = ContractSchema
-    val rdd = projected.queryExecution.toRdd.mapPartitions { it =>
-      val proj = UnsafeProjection.create(schema)
-      val TextU8 = UTF8String.fromString("text")
-      val TableU8 = UTF8String.fromString("table")
-      val ImageU8 = UTF8String.fromString("image")
-      val EmptyU8 = UTF8String.fromString("")
-      val EmptyRef = ""
-      it.map { row =>
-        // ---- read: InternalRow -> kernel spans (minimal materialization)
-        val docId = if (row.isNullAt(0)) null else row.getUTF8String(0).toString
-        val spanArr: Array[Span] =
-          if (row.isNullAt(1)) null
-          else {
-            val arr = row.getArray(1)
-            val n = arr.numElements()
-            val out = new Array[Span](n)
-            var i = 0
-            while (i < n) {
-              if (!arr.isNullAt(i)) {
-                val s = arr.getStruct(i, 4)
-                val kU = if (s.isNullAt(0)) null else s.getUTF8String(0)
-                val kind =
-                  if (kU == null) null
-                  else if (kU.equals(TextU8)) "text"
-                  else if (kU.equals(ImageU8)) "image"
-                  else if (kU.equals(TableU8)) "table"
-                  else kU.toString
-                val text = if (s.isNullAt(1)) null else s.getUTF8String(1).toString
-                val ref =
-                  if (s.isNullAt(2)) null
-                  else {
-                    val rU = s.getUTF8String(2)
-                    if (rU.numBytes == 0) EmptyRef else rU.toString
-                  }
-                val off = if (s.isNullAt(3)) 0 else s.getInt(3)
-                out(i) = Span(kind, text, ref, off)
-              }
-              i += 1
-            }
-            out
-          }
-        val raw = RawDoc(docId,
-          if (spanArr == null) null
-          else scala.collection.immutable.ArraySeq.unsafeWrapArray(spanArr))
-        // ---- kernel
-        val r = Extractor.extractDoc(raw, cfg)
-        // ---- write: kernel result -> one UnsafeRow (single copy)
-        val m = r.spans.length
-        val spanRows = new Array[Any](m)
-        var j = 0
-        r.spans.foreach { sp =>
-          val v = new Array[Any](4)
-          v(0) = sp.kind match {
-            case "text" => TextU8
-            case "table" => TableU8
-            case "image" => ImageU8
-            case null => null
-            case other => UTF8String.fromString(other)
-          }
-          v(1) = if (sp.text == null) null
-            else if (sp.text.isEmpty) EmptyU8 else UTF8String.fromString(sp.text)
-          v(2) = if (sp.media_ref == null) null
-            else if (sp.media_ref.isEmpty) EmptyU8 else UTF8String.fromString(sp.media_ref)
-          v(3) = sp.offset
-          spanRows(j) = new GenericInternalRow(v)
-          j += 1
-        }
-        val outV = new Array[Any](6)
-        outV(0) = if (r.doc_id == null) null else UTF8String.fromString(r.doc_id)
-        outV(1) = new GenericArrayData(spanRows)
-        outV(2) = r.num_pages
-        outV(3) = r.quarantined
-        outV(4) = if (r.error == null) null else UTF8String.fromString(r.error)
-        outV(5) = if (r.error_code == null) null else UTF8String.fromString(r.error_code)
-        proj(new GenericInternalRow(outV)): org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    org.apache.spark.sql.graftglue.GraftSqlBridge.internalCreateDataFrame(spark, rdd, schema)
-  }
-
-  private val SpanArraySchema = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-
   /** (doc_id, kinds, texts, refs, offsets, ...) -> contract schema with a
     * single-pass zip (arrays_zip walks the four arrays once; the former
     * transform+element_at form paid 4 indexed lookups + a sequence
     * materialization per element — measured 4.4 s of the 16 s contract wall
     * at local[32]). The cast renames the zip's positional fields to the
     * contract names. */
-  private def reassembleSpans(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+  private def reassembleSpans(df: DataFrame): DataFrame =
     df.select(
       col("doc_id"),
       arrays_zip(col("kinds").as("kind"), col("texts").as("text"),
@@ -366,7 +228,7 @@ object Extract {
       path: String,
       cfg: ExtractConfig = ExtractConfig.default,
       skewSpanThreshold: Int = 512 * Parse.SpansPerPage,
-      pageParallelism: Int = 0): org.apache.spark.sql.DataFrame = {
+      pageParallelism: Int = 0): DataFrame = {
     val input = spark.read.parquet(path)
     if (cfg.engine != "core")
       return extractSpansDF(input.select(col("doc_id"), col("spans")), cfg)
@@ -378,10 +240,11 @@ object Extract {
     if (!input.columns.contains("n_spans"))
       return extractContract(input.select(col("doc_id"), col("spans")), cfg,
         skewSpanThreshold, pageParallelism)
-    val small = extractSpansRows(
-      input.filter(col("n_spans") <= skewSpanThreshold).select(col("doc_id"), col("spans")), cfg)
-    small.unionByName(pageSplitContract(input.filter(col("n_spans") > skewSpanThreshold),
-      cfg, pageParallelism))
+    // giants with a null doc_id stay narrow, where they quarantine
+    val small = extractSpansDF(input.filter(col("n_spans") <= skewSpanThreshold || col("doc_id").isNull)
+      .select(col("doc_id"), col("spans")), cfg)
+    small.unionByName(pageSplitContract(
+      input.filter(col("n_spans") > skewSpanThreshold && col("doc_id").isNotNull), cfg, pageParallelism))
   }
 
   /** Production contract entry: input table -> output table, fast columnar
@@ -397,15 +260,17 @@ object Extract {
     * or (b) straggle a stage (docs-per-core near 1). ~500 pages is the local
     * crossover; tune per cluster. */
   def extractContract(
-      input: org.apache.spark.sql.DataFrame,
+      input: DataFrame,
       cfg: ExtractConfig = ExtractConfig.default,
       skewSpanThreshold: Int = 512 * Parse.SpansPerPage,
-      pageParallelism: Int = 0): org.apache.spark.sql.DataFrame = {
+      pageParallelism: Int = 0): DataFrame = {
     if (cfg.engine != "core") return extractSpansDF(input, cfg) // page-0 engines: narrow only
     // size split as a column predicate — no encoder roundtrip, and the
     // size(spans) filter evaluates on the columnar batch before any kernel
+    // (giants with a null doc_id stay narrow, where they quarantine)
     val nSpans = coalesce(size(col("spans")), lit(0))
-    val small = extractSpansDF(input.filter(nSpans <= skewSpanThreshold), cfg)
-    small.unionByName(pageSplitContract(input.filter(nSpans > skewSpanThreshold), cfg, pageParallelism))
+    val small = extractSpansDF(input.filter(nSpans <= skewSpanThreshold || col("doc_id").isNull), cfg)
+    small.unionByName(pageSplitContract(
+      input.filter(nSpans > skewSpanThreshold && col("doc_id").isNotNull), cfg, pageParallelism))
   }
 }

@@ -67,8 +67,11 @@ class PlanSpec extends AnyFunSuite {
   test("extraction contract plan: scan prunes to doc_id + spans only") {
     val input = spark.read.parquet(s"$sf/lineitem.parquet") // wide table stand-in
     val docs = graft.SparkEntry.rawDocs(spark, sf).toDF()
-    val plan = graft.pipeline.Extract.extractSpansDF(docs).queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"))
+    // the input's own exchanges show in the plan; the extraction adds none
+    def exchanges(df: org.apache.spark.sql.DataFrame) =
+      "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).length
+    val out = graft.pipeline.Extract.extractSpansDF(docs)
+    assert(exchanges(out) == exchanges(docs), out.queryExecution.executedPlan.toString)
     val _ = input
   }
 
@@ -87,20 +90,22 @@ class PlanSpec extends AnyFunSuite {
     spark.createDataset(graft.fixtures.Fixtures.corpus(30).toSeq).toDF()
       .write.mode("overwrite").parquet(dir)
     val input = spark.read.parquet(dir)
-    // small leg = the InternalRow fast path, whose parquet scan lives inside
-    // an ExistingRDD leaf (one scan); big leg = one visible parquet scan.
-    // Still exactly two scans of the input overall — assert both halves.
-    val plan = graft.pipeline.Extract.extractContract(input, skewSpanThreshold = 64)
-      .queryExecution.executedPlan.toString
+    // both legs' parquet scans are visible (no hidden RDD leaf), and the
+    // kernels are one GraftExtract node per kind: Doc (small leg), Page and
+    // Finalize (big leg)
+    val df = graft.pipeline.Extract.extractContract(input, skewSpanThreshold = 64)
+    val plan = df.queryExecution.executedPlan.toString
     val visibleScans = "Scan parquet".r.findAllIn(plan).length
-    val rddLeaves = "Scan ExistingRDD".r.findAllIn(plan).length
-    assert(visibleScans == 1, s"expected 1 visible parquet scan (big leg), got $visibleScans:\n${plan.take(3000)}")
-    assert(rddLeaves == 1, s"expected 1 fast-path RDD leaf (small leg), got $rddLeaves:\n${plan.take(3000)}")
-    // and the fast path itself plans exactly one pruned parquet scan
-    val fastPlan = graft.pipeline.Extract.extractSpansRows(input.filter(size(col("spans")) <= 64))
-      .rdd.toDebugString
-    assert(fastPlan.contains("FileScanRDD") || fastPlan.contains("MapPartitionsRDD"),
-      s"fast-path lineage missing a scan:\n$fastPlan")
+    assert(visibleScans == 2, s"expected 2 visible parquet scans, got $visibleScans:\n${plan.take(3000)}")
+    assert(!plan.contains("Scan ExistingRDD"), s"hidden RDD leaf in the plan:\n${plan.take(3000)}")
+    for (kind <- Seq("Doc", "Page", "Finalize")) {
+      val n = s"GraftExtractExec $kind\\b".r.findAllIn(plan).length
+      assert(n == 1, s"expected one GraftExtractExec $kind, got $n:\n${plan.take(3000)}")
+    }
+    // and no typed Dataset operator (encoder expression trees) in the contract path
+    val optimized = df.queryExecution.optimizedPlan.toString
+    for (op <- Seq("AppendColumns", "MapGroups", "DeserializeToObject"))
+      assert(!optimized.contains(op), s"$op in the optimized plan:\n${optimized.take(3000)}")
   }
 
   test("SQL registry: graft_* functions callable from SQL") {
@@ -136,6 +141,9 @@ class PlanSpec extends AnyFunSuite {
     // pushed set, so match the n_spans predicates without the closing bracket
     assert(plan.contains("PushedFilters: [IsNotNull(n_spans), GreaterThan(n_spans,64)"),
       s"n_spans predicate not pushed:\n${plan.take(2500)}")
+    // and so must the small leg's
+    assert("PushedFilters: \\[[^\\]]*LessThanOrEqual\\(n_spans,64\\)".r.findFirstIn(plan).isDefined,
+      s"small-leg n_spans predicate not pushed:\n${plan.take(2500)}")
     // identical results to the raw-input contract path
     val viaRaw = graft.pipeline.Extract.extractContract(raw, skewSpanThreshold = 64)
     def canon(df: org.apache.spark.sql.DataFrame) =

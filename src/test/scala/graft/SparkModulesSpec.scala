@@ -142,6 +142,57 @@ class PipelineSparkSpec extends AnyFunSuite {
     }
   }
 
+  test("GraftExtract nodes report the kernel-direct docs/pages/spans/quarantine counts as SQL metrics") {
+    import spark.implicits._
+    import graft.model.{ErrorCode, RawDoc, Span}
+    import graft.pipeline.GraftExtractExec
+    // the standard mix (giants, empty and broken docs) plus all-null span
+    // arrays and null doc_ids, one of them above every threshold
+    val docs = graft.fixtures.Fixtures.corpus(40) ++ Seq(
+      RawDoc("fuzz-nulls-a", Vector(null, null, null)),
+      RawDoc("fuzz-nulls-b", Vector(null)),
+      RawDoc(null, Vector(Span("text", "no id", "", 0), Span("text", "x", "", 1))),
+      RawDoc(null, Vector.empty))
+    val direct = docs.map(graft.kernel.Extractor.extractDoc(_))
+    val want = Map("docs" -> direct.length.toLong, "pages" -> direct.map(_.num_pages.toLong).sum,
+      "spans" -> direct.map(_.spans.length.toLong).sum) ++
+      Seq(ErrorCode.NullDocId, ErrorCode.Encrypted, ErrorCode.ParseError).map(c =>
+        s"quarantined_$c" -> direct.count(r => r.quarantined && r.error_code == c).toLong)
+    assert(want(s"quarantined_${ErrorCode.NullDocId}") == 2)
+    val input = spark.createDataset(docs).toDF()
+    object AQE extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    for (threshold <- Seq(0, 512 * graft.kernel.Parse.SpansPerPage)) {
+      val df = graft.pipeline.Extract.extractContract(input, skewSpanThreshold = threshold)
+      df.collect()
+      // AQE may drop giant-leg nodes from the final plan when no giant
+      // reaches them (empty input, empty output): those count zero
+      val nodes = AQE.collect(df.queryExecution.executedPlan) { case g: GraftExtractExec => g }
+      assert(nodes.map(_.kind.toString).distinct.length == nodes.length, s"threshold $threshold: $nodes")
+      assert(nodes.exists(_.kind.toString == "Doc") && (threshold > 0 || nodes.length == 3),
+        s"threshold $threshold: $nodes")
+      def metric(kind: String, key: String) =
+        nodes.filter(_.kind.toString == kind).map(_.metrics(key).value).sum
+      // contract rows come out of Doc and Finalize; Page counts page kernels
+      want.foreach { case (k, v) =>
+        assert(metric("Doc", k) + metric("Finalize", k) == v, s"threshold $threshold: $k")
+      }
+      assert(metric("Page", "pages") == metric("Finalize", "pages"), s"threshold $threshold")
+      if (threshold == 0) assert(metric("Finalize", "docs") > 0 && metric("Page", "kernelTime") > 0)
+      val explained = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+      for (name <- Seq("GraftExtractExec Doc", "GraftExtractExec Page", "GraftExtractExec Finalize",
+          "number of docs", "number of pages", "number of spans out", "kernel time",
+          "quarantined null_doc_id", "quarantined encrypted", "quarantined parse_error"))
+        assert(explained.contains(name), s"threshold $threshold: no '$name' in\n$explained")
+    }
+  }
+
+  test("giant-leg finalize quarantines a kernel exception instead of throwing") {
+    val broken = graft.model.PageResult(page_number = 1, text_blocks = null)
+    val r = graft.pipeline.GraftExtract.finalizePages("giant-1", Seq(broken), graft.model.ExtractConfig.default)
+    assert(r.quarantined && r.error_code == graft.model.ErrorCode.ParseError, r.toString)
+    assert(r.doc_id == "giant-1" && r.spans.isEmpty && r.num_pages == 0)
+  }
+
   test("metrics accumulators count docs/pages/spans/quarantine") {
     import spark.implicits._
     val m = new graft.metrics.ExtractMetrics(spark)
@@ -172,6 +223,42 @@ class TableIOSpec extends AnyFunSuite {
     assert(graft.io.TableIO.currentSnapshot(root).contains("snap-002"))
     assert(graft.io.TableIO.readSnapshot(spark, root).count() == 10)
     assert(graft.io.TableIO.readSnapshot(spark, root, Some("snap-001")).count() == 100)
+  }
+
+  test("manifest row_count comes from the footers and equals the read-back count, on both writers") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_rowcount").toString
+    val df = (1 to 100).map(i => (s"d$i", i)).toDF("doc_id", "n")
+    for ((data, tag) <- Seq(df -> "full", df.limit(0) -> "empty")) {
+      val plain = graft.io.TableIO.writeSnapshot(data, root, s"plain-$tag")
+      val resumable = graft.io.TableIO.writeSnapshotResumable(data, root, s"resumable-$tag", buckets = 4)
+      for (m <- Seq(plain, resumable)) {
+        assert(m.rowCount == (if (tag == "full") 100 else 0), m.snapshotId)
+        assert(graft.io.TableIO.readManifest(root, m.snapshotId).rowCount == m.rowCount, m.snapshotId)
+        assert(graft.io.TableIO.readSnapshot(spark, root, Some(m.snapshotId)).count() == m.rowCount, m.snapshotId)
+      }
+    }
+  }
+
+  test("snapshot writes the span text leaf without a dictionary; span kind keeps one") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_dict").toString
+    // few distinct texts: without the fixed option Parquet keeps a text
+    // dictionary here (near-unique real texts fall back to PLAIN anyway)
+    val docs = (1 to 200).map(i => graft.model.RawDoc(f"d$i%03d",
+      Seq(graft.model.Span("text", s"line ${i % 3}", "", 0), graft.model.Span("image", "", "", 1))))
+    val files = graft.io.TableIO.writeSnapshot(spark.createDataset(docs).toDF(), root, "dict").files
+    val conf = spark.sparkContext.hadoopConfiguration
+    val usesDictionary = files.flatMap { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      try reader.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+        .map(c => c.getPath.toDotString -> c.getEncodings.asScala.exists(_.usesDictionary))
+      finally reader.close()
+    }.groupMapReduce(_._1)(_._2)(_ || _)
+    assert(usesDictionary.get("spans.list.element.text").contains(false), usesDictionary.toString)
+    assert(usesDictionary.get("spans.list.element.kind").contains(true), usesDictionary.toString)
   }
 
   test("quarantine split routes bad rows to the side output") {
