@@ -39,8 +39,9 @@ object SparkEntry {
     * full extraction pipeline -> output span table. */
   def entry(spark: SparkSession): DataFrame = {
     val docs = rawDocs(spark, "/root/testdata/sf0.001")
-    Extract.toSpansTable(Extract.extract(docs, ExtractConfig.default))
-      .toDF("doc_id", "spans")
+    Extract.extractSpansDF(docs.toDF(), ExtractConfig.default)
+      .filter(!col("quarantined"))
+      .select("doc_id", "spans")
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

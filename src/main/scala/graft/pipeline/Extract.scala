@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
@@ -14,12 +14,13 @@ import graft.kernel.{Extractor, Parse}
   * partitioning; the reference's per-page thread pool (core.py:184-205)
   * disappears.
   *
-  * Plan: the batch contract entries build ordinary Catalyst plans around
-  * one logical node, [[GraftExtract]], planned as [[GraftExtractExec]] by
-  * [[GraftExtractStrategy]] (installed on the session by every entry). Its
-  * three kinds run the kernel over `InternalRow`s: `Doc` (narrow leg),
-  * `Page` and `Finalize` (the giant leg's scatter and regather). The plan is
-  * planned once, inside the consuming action, keeps the scans visible to
+  * Plan: every entry but the typed [[extract]], batch or streaming, builds
+  * an ordinary Catalyst plan around one logical node, [[GraftExtract]],
+  * planned as [[GraftExtractExec]] by [[GraftExtractStrategy]] (installed
+  * on the session by every entry). Its three kinds run the kernel over
+  * `InternalRow`s: `Doc` (narrow leg), `Page` and `Finalize` (the giant
+  * leg's scatter and regather). The plan is planned once, inside the
+  * consuming action (or each micro-batch), keeps the scans visible to
   * `explain` (filter pushdown, column pruning), and carries no encoder
   * expression trees; each node reports docs, pages, spans, kernel time and
   * quarantines per error code as SQL metrics.
@@ -92,17 +93,6 @@ object Extract {
     node(GraftExtract.Page, cfg, units)
   }
 
-  /** The giant leg of both contract entries: [[pageLeg]], then the regather
-    * per doc with explicit page ordering into one `GraftExtract` Finalize
-    * kernel per doc. `big` is the input already filtered to the giants;
-    * only its doc_id and spans are read. */
-  private def pageSplitContract(big: DataFrame, cfg: ExtractConfig, pageParallelism: Int): DataFrame = {
-    val docs = big.select(col("doc_id").cast("string").as("doc_id"), col("spans"))
-    node(GraftExtract.Finalize, cfg, pageLeg(docs, cfg, pageParallelism)
-      .repartition(col("doc_id"))
-      .sortWithinPartitions(col("doc_id"), col("page_no")))
-  }
-
   /** Page-split leg emitting full results: the typed regather over
     * [[pageLeg]]. (private[graft]: q02 composes it directly so the slim
     * projection happens BEFORE the union — a typed union of full DocResults
@@ -132,88 +122,32 @@ object Extract {
       DataTypeUtils.toAttributes(GraftExtract.schemaOf(kind)), plan))
   }
 
-  /** Driver-facing output: the span projection table
-    * (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,offset>>). */
-  def toSpansTable(results: Dataset[DocResult]): Dataset[(String, Seq[Span])] = {
-    val spark = results.sparkSession
-    import spark.implicits._
-    results.filter(!_.quarantined).map(r => (r.doc_id, r.spans))
-  }
-
-  // ---------------------------------------------------------------------
-  // Array-columnar fast path.
-  //
-  // Why: stack sampling showed the Catalyst object serializer for
-  // Seq[Span] (array-of-struct through MapObjects) dominating wall time and
-  // not scaling with threads. Carrying the span stream as four parallel
-  // array columns keeps input extraction columnar (spans.kind is a codegen
-  // projection), gives the kernel plain Scala arrays, and reassembles the
-  // contract ARRAY<STRUCT> with a codegen'd transform at the boundary.
-  // ---------------------------------------------------------------------
-
-  /** Kernel wire rows for the streaming (declarative) path. Package-private,
-    * not private: the encoders' generated Java must reach their members. */
-  private[pipeline] final case class RawDocArr(doc_id: String, kinds: Array[String], texts: Array[String],
-      refs: Array[String], offsets: Array[Int])
-  private[pipeline] final case class SpanDocArr(doc_id: String, kinds: Array[String], texts: Array[String],
-      refs: Array[String], offsets: Array[Int], num_pages: Int, quarantined: Boolean,
-      error: String, error_code: String)
-
-  private def runKernelArr(d: RawDocArr, cfg: ExtractConfig): SpanDocArr = {
-    val n = if (d.kinds == null) 0 else d.kinds.length
-    val spans = new Array[Span](n)
-    var i = 0
-    while (i < n) { spans(i) = Span(d.kinds(i), d.texts(i), d.refs(i), d.offsets(i)); i += 1 }
-    val r = Extractor.extractDoc(RawDoc(d.doc_id, scala.collection.immutable.ArraySeq.unsafeWrapArray(spans)), cfg)
-    val m = r.spans.length
-    val ok = new Array[String](m); val ot = new Array[String](m); val or = new Array[String](m); val oo = new Array[Int](m)
-    var j = 0
-    r.spans.foreach { s => ok(j) = s.kind; ot(j) = s.text; or(j) = s.media_ref; oo(j) = s.offset; j += 1 }
-    SpanDocArr(r.doc_id, ok, ot, or, oo, r.num_pages, r.quarantined, r.error, r.error_code)
-  }
-
-  /** Fast-path extraction over the contract input table
-    * (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,offset>>); returns the
-    * contract columns. Batch inputs take the `GraftExtract` Doc node, the
-    * single-copy InternalRow kernel loop; streaming inputs keep the
-    * declarative encoder path. */
+  /** Extraction over the contract input table
+    * (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,offset>>), batch or
+    * streaming: one `GraftExtract` Doc node, the single-copy InternalRow
+    * kernel loop; returns the contract columns. */
   def extractSpansDF(input: DataFrame, cfg: ExtractConfig = ExtractConfig.default): DataFrame =
-    if (input.isStreaming) extractSpansDFDeclarative(input, cfg)
-    else node(GraftExtract.Doc, cfg, input.select(col("doc_id").cast("string").as("doc_id"), col("spans")))
+    node(GraftExtract.Doc, cfg, input.select(col("doc_id").cast("string").as("doc_id"), col("spans")))
 
-  /** Declarative variant: columnar field projection -> narrow mapPartitions
-    * over the encoder wire rows -> codegen'd struct reassembly. Streaming-
-    * compatible; the batch entry uses the Doc node (measured ~25%
-    * less wall: the encoder path pays UTF8String->String for every field on
-    * the way in AND a second array materialization on the way out). */
-  private def extractSpansDFDeclarative(input: DataFrame,
-      cfg: ExtractConfig = ExtractConfig.default): DataFrame = {
-    val spark = input.sparkSession
-    import spark.implicits._
-    val arr = input.select(
-      col("doc_id").cast("string").as("doc_id"),
-      col("spans.kind").as("kinds"),
-      col("spans.text").as("texts"),
-      col("spans.media_ref").as("refs"),
-      col("spans.offset").as("offsets"))
-      .as[RawDocArr]
-    val out = arr.mapPartitions(_.map(runKernelArr(_, cfg)))
-    reassembleSpans(out.toDF())
+  /** The size split both contract entries share: docs whose `nSpans` is at
+    * most `skewSpanThreshold` take the Doc node, giants take [[pageLeg]] and
+    * the regather per doc with explicit page ordering into one `GraftExtract`
+    * Finalize kernel per doc. Both legs read only doc_id and spans. */
+  private def splitContract(input: DataFrame, nSpans: Column, cfg: ExtractConfig,
+      skewSpanThreshold: Int, pageParallelism: Int): DataFrame = {
+    if (cfg.engine != "core") return extractSpansDF(input, cfg) // page-0 engines: narrow only
+    // giants with a null doc_id stay narrow, where they quarantine
+    val small = extractSpansDF(input.filter(nSpans <= skewSpanThreshold || col("doc_id").isNull), cfg)
+    val giants = input.filter(nSpans > skewSpanThreshold && col("doc_id").isNotNull)
+      .select(col("doc_id").cast("string").as("doc_id"), col("spans"))
+    small.unionByName(node(GraftExtract.Finalize, cfg, pageLeg(giants, cfg, pageParallelism)
+      .repartition(col("doc_id"))
+      .sortWithinPartitions(col("doc_id"), col("page_no"))))
   }
 
-  /** (doc_id, kinds, texts, refs, offsets, ...) -> contract schema with a
-    * single-pass zip (arrays_zip walks the four arrays once; the former
-    * transform+element_at form paid 4 indexed lookups + a sequence
-    * materialization per element — measured 4.4 s of the 16 s contract wall
-    * at local[32]). The cast renames the zip's positional fields to the
-    * contract names. */
-  private def reassembleSpans(df: DataFrame): DataFrame =
-    df.select(
-      col("doc_id"),
-      arrays_zip(col("kinds").as("kind"), col("texts").as("text"),
-        col("refs").as("media_ref"), col("offsets").as("offset"))
-        .as("spans"),
-      col("num_pages"), col("quarantined"), col("error"), col("error_code"))
+  /** The raw span count: the size split as a column predicate, evaluated on
+    * the columnar batch before any kernel. */
+  private def rawSpanCount: Column = coalesce(size(col("spans")), lit(0))
 
   /** Contract pipeline over a size-statted managed table
     * (written by `TableIO.writeContractInput`, which adds a pushable
@@ -230,29 +164,21 @@ object Extract {
       skewSpanThreshold: Int = 512 * Parse.SpansPerPage,
       pageParallelism: Int = 0): DataFrame = {
     val input = spark.read.parquet(path)
-    if (cfg.engine != "core")
-      return extractSpansDF(input.select(col("doc_id"), col("spans")), cfg)
     // fallback (VERDICT r04 #1): a table without the n_spans stats column —
     // e.g. a raw contract table pointed at this entry by mistake, or a
-    // catalog whose stats rewrite has not run yet — takes the raw two-scan
-    // path instead of failing on an unresolved column; the managed path is
+    // catalog whose stats rewrite has not run yet — splits on the raw span
+    // count instead of failing on an unresolved column; the managed path is
     // an optimization, never a correctness requirement
-    if (!input.columns.contains("n_spans"))
-      return extractContract(input.select(col("doc_id"), col("spans")), cfg,
-        skewSpanThreshold, pageParallelism)
-    // giants with a null doc_id stay narrow, where they quarantine
-    val small = extractSpansDF(input.filter(col("n_spans") <= skewSpanThreshold || col("doc_id").isNull)
-      .select(col("doc_id"), col("spans")), cfg)
-    small.unionByName(pageSplitContract(
-      input.filter(col("n_spans") > skewSpanThreshold && col("doc_id").isNotNull), cfg, pageParallelism))
+    val nSpans = if (input.columns.contains("n_spans")) col("n_spans") else rawSpanCount
+    splitContract(input, nSpans, cfg, skewSpanThreshold, pageParallelism)
   }
 
   /** Production contract entry: input table -> output table, fast columnar
     * path for typical docs + page-split path for giants beyond
     * `skewSpanThreshold` (raw spans; default 512 pages' worth). Both legs
     * emit the contract schema; the plan has exactly two scans of the input
-    * (small leg + giant leg — the giant leg feeds [[pageSplitContract]]
-    * directly, no third scan).
+    * (small leg + giant leg — the giant leg feeds [[pageLeg]] directly, no
+    * third scan).
     *
     * Threshold guidance (measured): the page-split path costs two shuffles
     * (scatter pages, regather per doc), so it loses to whole-doc narrow
@@ -263,14 +189,6 @@ object Extract {
       input: DataFrame,
       cfg: ExtractConfig = ExtractConfig.default,
       skewSpanThreshold: Int = 512 * Parse.SpansPerPage,
-      pageParallelism: Int = 0): DataFrame = {
-    if (cfg.engine != "core") return extractSpansDF(input, cfg) // page-0 engines: narrow only
-    // size split as a column predicate — no encoder roundtrip, and the
-    // size(spans) filter evaluates on the columnar batch before any kernel
-    // (giants with a null doc_id stay narrow, where they quarantine)
-    val nSpans = coalesce(size(col("spans")), lit(0))
-    val small = extractSpansDF(input.filter(nSpans <= skewSpanThreshold || col("doc_id").isNull), cfg)
-    small.unionByName(pageSplitContract(
-      input.filter(nSpans > skewSpanThreshold && col("doc_id").isNotNull), cfg, pageParallelism))
-  }
+      pageParallelism: Int = 0): DataFrame =
+    splitContract(input, rawSpanCount, cfg, skewSpanThreshold, pageParallelism)
 }

@@ -9,8 +9,8 @@ import graft.model.ExtractConfig
 /** Structured Streaming composition of the extraction pipeline.
   *
   * The reference is batch-only (SURVEY.md §2.13) — this is the optional
-  * extension the kernel's statelessness makes free: the same narrow
-  * `mapPartitions` plan runs under `readStream`/`writeStream` with
+  * extension the kernel's statelessness makes free: the same `GraftExtract`
+  * Doc node as batch runs under `readStream`/`writeStream` with
   * exactly-once file-sink semantics via the checkpoint. Late data needs no
   * special handling for extraction itself (row-local); the windowed metrics
   * stream below shows the watermarked-aggregation shape.
@@ -26,8 +26,9 @@ object StreamingExtract {
       StructField("offset", IntegerType)))))))
 
   /** Streaming DataFrame in, streaming DataFrame out — the identical
-    * extraction plan as batch (extractSpansDF is shuffle-free, so it is
-    * trivially streamable). */
+    * extraction plan as batch: [[graft.pipeline.Extract.extractSpansDF]]'s
+    * `GraftExtract` Doc node, shuffle-free, so it is trivially streamable,
+    * and its SQL metrics report each micro-batch. */
   def extractStream(input: DataFrame, cfg: ExtractConfig = ExtractConfig.default): DataFrame =
     graft.pipeline.Extract.extractSpansDF(input, cfg)
 

@@ -75,6 +75,20 @@ class PlanSpec extends AnyFunSuite {
     val _ = input
   }
 
+  test("SparkEntry.entry runs the Doc node and returns the typed extract's non-quarantined spans") {
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.selectExpr("doc_id", "to_json(spans) AS j").as[(String, String)].collect().sortBy(_._1).toSeq
+    val entry = graft.SparkEntry.entry(spark)
+    assert(entry.columns.toSeq == Seq("doc_id", "spans"))
+    val plan = entry.queryExecution.executedPlan.toString
+    assert(plan.contains("GraftExtractExec Doc") && !plan.contains("MapPartitions"), plan)
+    val typed = graft.pipeline.Extract.extract(graft.SparkEntry.rawDocs(spark, sf)).filter(!_.quarantined)
+    val got = rows(entry)
+    assert(got.nonEmpty)
+    assert(got == rows(typed.toDF()))
+  }
+
   test("q26 join carries no broadcast hint on the corpus-sized side (VERDICT r01)") {
     val df = ops.Queries.all("q26_ngram_jaccard")(spark, sf)
     // the optimized logical plan must be hint-free: AQE may still broadcast

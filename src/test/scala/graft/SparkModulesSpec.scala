@@ -371,27 +371,80 @@ class MultimodalSpec extends AnyFunSuite {
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  test("file-stream extraction: incremental parquet in, contract spans out") {
+  /** Contract rows as (doc_id, spans JSON, num_pages, quarantined, error_code), by doc_id. */
+  private def canon(df: org.apache.spark.sql.DataFrame): Seq[(String, String, Int, Boolean, String)] = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
-    val in = s"$dir/in"; val out = s"$dir/out"; val cp = s"$dir/cp"
-    spark.createDataset(graft.fixtures.Fixtures.corpus(20).toSeq).toDF()
-      .write.mode("overwrite").parquet(in)
+    df.selectExpr("doc_id", "coalesce(to_json(spans), '') AS j", "num_pages", "quarantined", "error_code")
+      .as[(String, String, Int, Boolean, String)].collect().sortBy(_._1).toSeq
+  }
 
+  /** Streams the parquet files under `in` through `extractStream` with
+    * `Trigger.AvailableNow` into a parquet sink; returns the finished query
+    * and the sink's rows. */
+  private def streamOnce(in: String, dir: java.nio.file.Path) = {
     val q = spark.readStream
       .schema(graft.streaming.StreamingExtract.InputSchema)
       .parquet(in)
     val stream = graft.streaming.StreamingExtract.extractStream(q)
       .writeStream
       .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", cp)
+      .option("path", s"$dir/out")
+      .option("checkpointLocation", s"$dir/cp")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    stream.awaitTermination(120000)
-    val result = spark.read.parquet(out)
+    assert(stream.awaitTermination(120000), "stream did not finish")
+    (stream, spark.read.parquet(s"$dir/out"))
+  }
+
+  /** The same files through the batch `extractSpansDF`. */
+  private def batch(in: String) = graft.pipeline.Extract.extractSpansDF(
+    spark.read.schema(graft.streaming.StreamingExtract.InputSchema).parquet(in))
+
+  test("file-stream extraction: incremental parquet in, contract spans out") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val in = s"$dir/in"
+    spark.createDataset(graft.fixtures.Fixtures.corpus(20).toSeq).toDF()
+      .write.mode("overwrite").parquet(in)
+
+    val (stream, result) = streamOnce(in, dir)
     assert(result.count() == 20)
     assert(result.columns.toSet == Set("doc_id", "spans", "num_pages", "quarantined", "error", "error_code"))
+    assert(canon(result) == canon(batch(in)), "streamed rows differ from batch extractSpansDF")
+    // each micro-batch runs the batch plan's GraftExtract Doc node, with its metrics
+    val executed = stream.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan
+    val plan = executed.toString
+    assert(plan.contains("GraftExtractExec Doc"), s"no GraftExtract node in the streaming plan:\n$plan")
+    for (op <- Seq("DeserializeToObject", "MapPartitions"))
+      assert(!plan.contains(op), s"$op in the streaming plan:\n$plan")
+    val docs = executed.collect { case g: graft.pipeline.GraftExtractExec => g.metrics("docs").value }
+    assert(docs == Seq(20L), s"number of docs metrics: $docs")
+  }
+
+  test("file-stream extraction keeps null span elements and null offsets, as batch does") {
+    import spark.implicits._
+    import graft.model.{RawDoc, Span}
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_nulls")
+    val in = s"$dir/in"
+    // every fixture doc with one null span patched in, plus an all-null doc
+    // and a trailing null element
+    val patched = graft.fixtures.Fixtures.corpus(20).map(d =>
+      if (d.spans == null || d.spans.isEmpty) d else d.copy(spans = d.spans.updated(d.spans.length / 2, null)))
+    spark.createDataset(patched ++ Seq(
+        RawDoc("nulls-all", Vector(null, null, null)),
+        RawDoc("nulls-trailing", Vector(Span("text", "head line", "", 0), null))))
+      .toDF().write.mode("overwrite").parquet(in)
+    // a span whose offset is null (the Span case class cannot carry one)
+    spark.sql("""SELECT 'null-offset' AS doc_id, array(
+        named_struct('kind', 'text', 'text', 'first', 'media_ref', '', 'offset', 0),
+        named_struct('kind', 'text', 'text', 'second', 'media_ref', '', 'offset', CAST(NULL AS INT))) AS spans""")
+      .write.mode("append").parquet(in)
+
+    val (_, result) = streamOnce(in, dir)
+    val want = canon(batch(in))
+    assert(want.length == 23)
+    assert(canon(result) == want, "streamed rows differ from batch extractSpansDF")
   }
 
   test("stateful streaming dedup: first occurrence wins across micro-batches (flatMapGroupsWithState)") {
