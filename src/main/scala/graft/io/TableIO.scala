@@ -4,7 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
@@ -82,9 +84,22 @@ object TableIO {
     val target = dataDir(root, snapshotId)
     // stale uncommitted data from a crashed attempt is safe to overwrite
     df.write.mode("overwrite").options(WriteOptions).parquet(target.toString)
-    val files = Files.list(target).toArray.map(_.toString).filter(_.endsWith(".parquet")).sorted.toSeq
-    commit(df.sparkSession, root, snapshotId, files, inputs, extraMetrics)
+    commit(df.sparkSession, root, snapshotId, parquetFiles(target, maxDepth = 1), inputs, extraMetrics)
   }
+
+  /** Every path under `dir` down to `maxDepth` (1: its own entries), `dir`
+    * itself excluded. The stream is closed: an unclosed `Files.list`/
+    * `Files.walk` keeps its directory descriptor open for the life of the
+    * driver. */
+  private def listPaths(dir: java.nio.file.Path, maxDepth: Int): Vector[String] = {
+    val s = Files.walk(dir, maxDepth)
+    try s.iterator.asScala.filter(_ != dir).map(_.toString).toVector
+    finally s.close()
+  }
+
+  /** The `.parquet` files of a snapshot's data directory, sorted. */
+  private def parquetFiles(dir: java.nio.file.Path, maxDepth: Int): Seq[String] =
+    listPaths(dir, maxDepth).filter(_.endsWith(".parquet")).sorted
 
   /** Fixed snapshot write options. Span texts are near-unique, so Parquet
     * would build a dictionary for the contract's text leaf and then abandon
@@ -95,12 +110,19 @@ object TableIO {
   /** Commit `files` as snapshot `snapshotId`: the manifest, then an atomic
     * swap of CURRENT. The row count comes from the files' Parquet footers
     * (the row-group counts `count()` would read), so the commit runs no
-    * Spark job. */
+    * Spark job.
+    *
+    * The footers share one read-options object built from the session's
+    * Hadoop configuration. The one-argument `ParquetFileReader.open` builds
+    * its options over a new `Configuration`, which parses the XML defaults
+    * from the classpath jars again for every file (~10 ms each, most of
+    * the commit's driver time on a 16-file snapshot). */
   private def commit(spark: SparkSession, root: String, snapshotId: String, files: Seq[String],
       inputs: Seq[String], metrics: Map[String, Long]): Manifest = {
     val conf = spark.sparkContext.hadoopConfiguration
+    val options = HadoopReadOptions.builder(conf).build()
     val rows = files.iterator.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf), options)
       try reader.getRecordCount finally reader.close()
     }.sum
     val manifest = Manifest(snapshotId, rows, files, inputs,
@@ -130,7 +152,7 @@ object TableIO {
   def committedBuckets(root: String, snapshotId: String): Set[Int] = {
     val dir = bucketMarkerDir(root, snapshotId)
     if (!Files.exists(dir)) Set.empty
-    else Files.list(dir).toArray.map(_.toString)
+    else listPaths(dir, maxDepth = 1)
       .flatMap(p => "bucket-(\\d+)\\.done$".r.findFirstMatchIn(p).map(_.group(1).toInt)).toSet
   }
 
@@ -167,7 +189,7 @@ object TableIO {
       }
     }
     // all buckets present -> commit the snapshot manifest atomically
-    def files = Files.walk(target).toArray.map(_.toString).filter(_.endsWith(".parquet")).sorted.toSeq
+    def files = parquetFiles(target, maxDepth = Int.MaxValue)
     // an empty input writes no bucket at all: one empty file keeps the
     // snapshot readable (it carries the schema)
     if (files.isEmpty) df.limit(0).write.mode("overwrite").options(WriteOptions).parquet(target.toString)

@@ -67,11 +67,12 @@ object Queries {
     import spark.implicits._
     // Materialize the GENERATED corpus once (r6): the small/big split of
     // Extract.extractContract's two legs consumes its input twice (two
-    // size-filter branches). For a parquet input the second scan is a cheap pruned re-read, but
-    // q02's input is an expensive opaque generator (rawDocs maps every id
-    // through Fixtures.gen), so the split re-generated the whole corpus to
-    // find the giants. A lazy localCheckpoint computes gen once and both
-    // branches read the blocks — guide §5's reuse-not-recompute case; at
+    // size-filter branches). For a parquet input the second scan re-reads
+    // and decodes every span (`size(spans)` is neither pushed down nor
+    // pruned); q02's input is worse, an expensive opaque generator (rawDocs
+    // maps every id through Fixtures.gen), so the split re-generated the
+    // whole corpus to find the giants. A lazy localCheckpoint computes gen
+    // once and both branches read the blocks — guide §5's reuse-not-recompute case; at
     // cluster scale this is exactly "materialize the expensive input, then
     // split", never a cache of results across runs.
     val docs = graft.SparkEntry.rawDocs(spark, sfDir).localCheckpoint(eager = false)
@@ -122,8 +123,8 @@ object Queries {
     * page-split leg): input table -> output span table. */
   private val qExtractContract: Q = (spark, sfDir) => {
     // lazy localCheckpoint (r6, q02's fix): extractContract scans its input
-    // twice (small leg + giant leg) — cheap for a parquet table, but this
-    // input is the opaque generator, so the giant-finding scan re-generated
+    // twice (small leg + giant leg) — for a parquet table a second decode of
+    // every span, but this input is the opaque generator, so the giant-finding scan re-generated
     // the whole corpus. Lazy is safe here: the giant leg's exchange stage
     // materializes the blocks before the final narrow stage reads them.
     val input = graft.SparkEntry.rawDocs(spark, sfDir).toDF().localCheckpoint(eager = false)
@@ -629,6 +630,7 @@ object Queries {
       .as[(Long, Seq[Double])]
     val probes = emb.filter(col("vec_id") < 10).collect()
       .map { case (id, v) => (id, v.toArray) }.sortBy(_._1)
+    require(probes.length <= 10, s"q30 probe collect is bounded by 10 vectors, got ${probes.length}")
     val bc = spark.sparkContext.broadcast(probes)
     val scored = emb.mapPartitions { it =>
       val qs = bc.value
@@ -757,6 +759,7 @@ object Queries {
     // broadcast, still linear in corpus size x probe count.
     val probes = emb.filter(_._1 < 200).collect()
       .map { case (id, v) => (id, v.toArray) }.sortBy(_._1)
+    require(probes.length <= 200, s"q34 probe collect is bounded by 200 vectors, got ${probes.length}")
     val bc = emb.sparkSession.sparkContext.broadcast(probes)
     emb.mapPartitions { it =>
       val ps = bc.value
@@ -1369,6 +1372,7 @@ object Queries {
     // deserializing every corpus row through the encoder before filtering
     val sample = emb.filter(col("vec_id") < 64).as[(Long, Seq[Double])].collect()
       .map { case (id, v) => (id, v.toArray) }
+    require(sample.length <= 64, s"q53 training sample collect is bounded by 64 vectors, got ${sample.length}")
     val cents = Ann.trainIvfCentroids(sample, k = 8, iters = 2)
     val queries = sample.filter(_._1 < 10)
     Ann.ivfSearch(emb, queries, cents, nprobe = 2, topk = 3)

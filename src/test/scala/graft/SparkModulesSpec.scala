@@ -229,15 +229,35 @@ class TableIOSpec extends AnyFunSuite {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft_rowcount").toString
     val df = (1 to 100).map(i => (s"d$i", i)).toDF("doc_id", "n")
-    for ((data, tag) <- Seq(df -> "full", df.limit(0) -> "empty")) {
+    for ((data, tag) <- Seq(df -> "full", df.limit(0) -> "empty", df.repartition(40) -> "many")) {
       val plain = graft.io.TableIO.writeSnapshot(data, root, s"plain-$tag")
       val resumable = graft.io.TableIO.writeSnapshotResumable(data, root, s"resumable-$tag", buckets = 4)
+      if (tag == "many") assert(plain.files.length == 40, plain.files.length)
       for (m <- Seq(plain, resumable)) {
-        assert(m.rowCount == (if (tag == "full") 100 else 0), m.snapshotId)
+        assert(m.rowCount == (if (tag == "empty") 0 else 100), m.snapshotId)
         assert(graft.io.TableIO.readManifest(root, m.snapshotId).rowCount == m.rowCount, m.snapshotId)
         assert(graft.io.TableIO.readSnapshot(spark, root, Some(m.snapshotId)).count() == m.rowCount, m.snapshotId)
       }
     }
+  }
+
+  test("snapshot commits close their directory listings (no descriptor leak)") {
+    import spark.implicits._
+    val fdDir = new java.io.File("/proc/self/fd")
+    assume(fdDir.isDirectory, "needs /proc/self/fd")
+    val root = java.nio.file.Files.createTempDirectory("graft_fdleak").toString
+    val df = Seq(("d1", 1), ("d2", 2)).toDF("doc_id", "n").coalesce(1)
+    // warm-up: the first write opens Spark's and Parquet's long-lived files
+    graft.io.TableIO.writeSnapshotResumable(df, root, "warm", buckets = 2)
+    graft.io.TableIO.writeSnapshot(df, root, "warm-plain")
+    val before = fdDir.list().length
+    (1 to 50).foreach { i =>
+      graft.io.TableIO.writeSnapshot(df, root, s"s$i")
+      assert(graft.io.TableIO.committedBuckets(root, "warm") == Set(0, 1))
+    }
+    val grown = fdDir.list().length - before
+    assert(grown < 50, s"50 commits left $grown more open descriptors")
+    assert(graft.io.TableIO.readSnapshot(spark, root).count() == 2)
   }
 
   test("snapshot writes the span text leaf without a dictionary; span kind keeps one") {
