@@ -1,33 +1,56 @@
 package graft.io
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.internal.SQLConf
+import java.nio.file.{Files, LinkOption, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import java.util.{Locale, UUID}
+import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 
 /** Snapshot-table I/O: Iceberg-semantics emulation over partitioned Parquet
   * plus JSON manifests (no Iceberg runtime jar ships in this environment —
   * SURVEY.md §7; the API is format-agnostic so a real Iceberg catalog is a
   * config swap).
   *
-  * Layout under `root/`:
+  * Layout under `root/` (a local path; every file here is read and written
+  * through java.nio):
   *   data/snapshot=<id>/part-*.parquet      immutable snapshot data
   *   _manifests/<id>.json                   committed manifest (atomic rename)
   *   _manifests/CURRENT                     name of the live snapshot
   *
+  * Commit protocol of `writeSnapshot`: each task writes its partition into
+  * a hidden (`.`-prefixed) staging file named for its task attempt and
+  * returns (file, rows, bytes); the driver renames the staging files to
+  * `part-*` names, deletes whatever else the directory holds (staging files
+  * of failed or speculative attempts, data of a crashed earlier attempt)
+  * and commits. The manifest plus the atomic swap of CURRENT is the only
+  * commit: no Hadoop `FileSystem`, output committer, `_SUCCESS` or `.crc`
+  * file is involved. Snapshot files take the session's Parquet compression
+  * codec and TableIO's fixed write options; the session's Hadoop
+  * `parquet.*` settings do not apply to them.
+  *
   * Guarantees:
-  *   - writers stage into data/snapshot=<id> then commit by writing the
-  *     manifest and atomically swapping CURRENT — readers never observe a
-  *     half-written snapshot
+  *   - readers never observe a half-written snapshot: data is only
+  *     reachable through a committed manifest / CURRENT, and staging files
+  *     are hidden from Parquet readers
   *   - idempotent re-run: an existing committed snapshot id is a no-op
   *     (resume-safe per the north_rule's "resumable from checkpoint")
   *   - lineage: the manifest records input paths, row count, app id and
-  *     per-partition metrics
+  *     per-snapshot metrics
   */
 object TableIO {
 
@@ -52,27 +75,27 @@ object TableIO {
     else None
   }
 
-  private def jsonEscape(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+  /** Manifests are flat JSON: strings, integers, string arrays and one
+    * object of integer metrics, written and parsed with Jackson. */
+  private val Json = new ObjectMapper
 
-  private def renderManifest(m: Manifest): String = {
-    def arr(xs: Seq[String]) = xs.map(x => "\"" + jsonEscape(x) + "\"").mkString("[", ",", "]")
-    val met = m.metrics.map { case (k, v) => "\"" + jsonEscape(k) + "\":" + v }.mkString("{", ",", "}")
-    s"""{"snapshot_id":"${jsonEscape(m.snapshotId)}","row_count":${m.rowCount},""" +
-      s""""files":${arr(m.files)},"inputs":${arr(m.inputs)},"app_id":"${jsonEscape(m.appId)}",""" +
-      s""""committed_at_ms":${m.committedAtMs},"metrics":$met}"""
+  private def renderManifest(m: Manifest): Array[Byte] = {
+    val o = Json.createObjectNode()
+    o.put("snapshot_id", m.snapshotId).put("row_count", m.rowCount)
+    val files = o.putArray("files")
+    m.files.foreach(files.add(_))
+    val inputs = o.putArray("inputs")
+    m.inputs.foreach(inputs.add(_))
+    o.put("app_id", m.appId).put("committed_at_ms", m.committedAtMs)
+    val met = o.putObject("metrics")
+    m.metrics.foreach { case (k, v) => met.put(k, v) }
+    Json.writeValueAsBytes(o)
   }
 
   /** Write `df` as snapshot `snapshotId`, committing atomically. Returns the
-    * manifest; a committed id short-circuits (idempotent resume). */
+    * manifest; a committed id short-circuits (idempotent resume). The
+    * manifest's metrics carry `extraMetrics` plus `data_files` and
+    * `data_bytes`, summed from what the tasks wrote. */
   def writeSnapshot(
       df: DataFrame,
       root: String,
@@ -81,10 +104,29 @@ object TableIO {
       extraMetrics: Map[String, Long] = Map.empty): Manifest = {
     if (isCommitted(root, snapshotId)) return readManifest(root, snapshotId)
 
+    val spark = df.sparkSession
     val target = dataDir(root, snapshotId)
-    // stale uncommitted data from a crashed attempt is safe to overwrite
-    df.write.mode("overwrite").options(WriteOptions).parquet(target.toString)
-    commit(df.sparkSession, root, snapshotId, parquetFiles(target, maxDepth = 1), inputs, extraMetrics)
+    Files.createDirectories(target)
+    val writer = SnapshotFileWriter(spark, df.schema, target.toString)
+    // one SQL execution, as a Spark write would run it: AQE, the UI and the
+    // plan's SQL metrics see the job; the tasks write through `writer`
+    val qe = df.queryExecution
+    val staged = SQLExecution.withNewExecutionId(qe, Some(s"writeSnapshot $snapshotId")) {
+      spark.sparkContext.runJob(qe.toRdd, writer.writeTask _).flatten.toSeq
+    }
+    // an empty input still commits one zero-row file: it carries the schema
+    val written = if (staged.nonEmpty) staged else Seq(writer.stage(0, -1L, Iterator.empty))
+    val files = written.sortBy(_.partition).map { s =>
+      val part = target.resolve(writer.partName(s.partition))
+      Files.move(Paths.get(s.path), part, StandardCopyOption.ATOMIC_MOVE)
+      part.toString
+    }
+    // staging files of failed or speculative attempts, and any data a
+    // crashed earlier attempt left under this id
+    val keep = files.toSet
+    listPaths(target, maxDepth = 1).filterNot(keep).foreach(p => deleteTree(Paths.get(p)))
+    commit(spark, root, snapshotId, files, written.map(_.rows).sum, inputs,
+      extraMetrics ++ Map("data_files" -> files.length.toLong, "data_bytes" -> written.map(_.bytes).sum))
   }
 
   /** Every path under `dir` down to `maxDepth` (1: its own entries), `dir`
@@ -97,40 +139,89 @@ object TableIO {
     finally s.close()
   }
 
-  /** The `.parquet` files of a snapshot's data directory, sorted. */
-  private def parquetFiles(dir: java.nio.file.Path, maxDepth: Int): Seq[String] =
-    listPaths(dir, maxDepth).filter(_.endsWith(".parquet")).sorted
+  /** Deletes `p` and, for a directory (not a link to one), its contents. */
+  private def deleteTree(p: java.nio.file.Path): Unit = {
+    if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) listPaths(p, maxDepth = 1).foreach(c => deleteTree(Paths.get(c)))
+    Files.deleteIfExists(p)
+  }
 
-  /** Fixed snapshot write options. Span texts are near-unique, so Parquet
-    * would build a dictionary for the contract's text leaf and then abandon
-    * it (measured ≈19% of executor samples); the leaf is written PLAIN
-    * either way. */
-  private val WriteOptions = Map("parquet.enable.dictionary#spans.list.element.text" -> "false")
+  /** Span texts are near-unique, so Parquet would build a dictionary for
+    * the contract's text leaf and then abandon it (measured ≈19% of
+    * executor samples); the leaf is written PLAIN either way. */
+  private val NoDictionaryColumn = "spans.list.element.text"
 
-  /** Commit `files` as snapshot `snapshotId`: the manifest, then an atomic
-    * swap of CURRENT. The row count comes from the files' Parquet footers
-    * (the row-group counts `count()` would read), so the commit runs no
-    * Spark job.
-    *
-    * The footers share one read-options object built from the session's
-    * Hadoop configuration. The one-argument `ParquetFileReader.open` builds
-    * its options over a new `Configuration`, which parses the XML defaults
-    * from the classpath jars again for every file (~10 ms each, most of
-    * the commit's driver time on a 16-file snapshot). */
+  /** Fixed write options of `writeSnapshotResumable`'s Spark writer. */
+  private val WriteOptions = Map(s"parquet.enable.dictionary#$NoDictionaryColumn" -> "false")
+
+  /** One task's staged snapshot file. */
+  private final case class Staged(partition: Int, path: String, rows: Long, bytes: Long)
+
+  /** The task side of `writeSnapshot`: writes `InternalRow`s with Spark's own
+    * `ParquetWriteSupport` through parquet-java's java.nio `LocalOutputFile`.
+    * It carries only the keys Spark's Parquet write support reads (schema,
+    * legacy format, timestamp type, field ids, variant annotation), never
+    * the session's Hadoop configuration, so a task deserializes a few
+    * strings instead of a whole `Configuration`. */
+  private final case class SnapshotFileWriter(dir: String, writeId: String, codec: CompressionCodecName,
+      writeSupportConf: Map[String, String]) {
+
+    def partName(partition: Int): String = f"part-$partition%05d-$writeId${codec.getExtension}.parquet"
+
+    /** A partition with no rows writes no file. */
+    def writeTask(ctx: TaskContext, rows: Iterator[InternalRow]): Option[Staged] =
+      if (rows.hasNext) Some(stage(ctx.partitionId(), ctx.taskAttemptId(), rows)) else None
+
+    /** Writes `rows` into a hidden staging file unique to the attempt. A
+      * failed write deletes its file. */
+    def stage(partition: Int, attempt: Long, rows: Iterator[InternalRow]): Staged = {
+      val file = Paths.get(dir, f".part-$partition%05d-$writeId-$attempt.staging")
+      val conf = new Configuration(false)
+      writeSupportConf.foreach { case (k, v) => conf.set(k, v) }
+      var n = 0L
+      try {
+        val writer = new RowWriterBuilder(new LocalOutputFile(file)).withConf(conf)
+          .withCompressionCodec(codec).withDictionaryEncoding(NoDictionaryColumn, false).build()
+        try rows.foreach { r => writer.write(r); n += 1 }
+        finally writer.close()
+      } catch {
+        case t: Throwable => Files.deleteIfExists(file); throw t
+      }
+      Staged(partition, file.toString, n, Files.size(file))
+    }
+  }
+
+  private object SnapshotFileWriter {
+    def apply(spark: SparkSession, schema: org.apache.spark.sql.types.StructType, dir: String): SnapshotFileWriter = {
+      val keys = Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
+        SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).map(_.key)
+      val codec = ParquetOptions.getParquetCompressionCodecName(
+        spark.conf.get(SQLConf.PARQUET_COMPRESSION.key).toLowerCase(Locale.ROOT))
+      SnapshotFileWriter(dir, UUID.randomUUID.toString, CompressionCodecName.valueOf(codec),
+        keys.map(k => k -> spark.conf.get(k)).toMap + (ParquetWriteSupport.SPARK_ROW_SCHEMA -> schema.json))
+    }
+  }
+
+  private final class RowWriterBuilder(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
+    override protected def self(): RowWriterBuilder = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport
+  }
+
+  /** Commit `files` (holding `rowCount` rows) as snapshot `snapshotId`: the
+    * manifest is written to a temporary name and renamed into place, then
+    * CURRENT is swapped atomically. This is the whole commit; the files are
+    * already in place under their final names. The caller passes the row
+    * count: `writeSnapshot` sums its tasks' counts, `writeSnapshotResumable`
+    * reads the footers. Every path is a local java.nio path. */
   private def commit(spark: SparkSession, root: String, snapshotId: String, files: Seq[String],
-      inputs: Seq[String], metrics: Map[String, Long]): Manifest = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val options = HadoopReadOptions.builder(conf).build()
-    val rows = files.iterator.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf), options)
-      try reader.getRecordCount finally reader.close()
-    }.sum
-    val manifest = Manifest(snapshotId, rows, files, inputs,
+      rowCount: Long, inputs: Seq[String], metrics: Map[String, Long]): Manifest = {
+    val manifest = Manifest(snapshotId, rowCount, files, inputs,
       spark.sparkContext.applicationId, System.currentTimeMillis(), metrics)
 
     Files.createDirectories(manifestDir(root))
     val tmp = manifestDir(root).resolve(s".$snapshotId.json.tmp")
-    Files.write(tmp, renderManifest(manifest).getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, renderManifest(manifest))
     Files.move(tmp, manifestDir(root).resolve(s"$snapshotId.json"), StandardCopyOption.ATOMIC_MOVE)
 
     val curTmp = manifestDir(root).resolve(".CURRENT.tmp")
@@ -189,23 +280,37 @@ object TableIO {
       }
     }
     // all buckets present -> commit the snapshot manifest atomically
-    def files = parquetFiles(target, maxDepth = Int.MaxValue)
+    def parquetFiles = listPaths(target, maxDepth = Int.MaxValue).filter(_.endsWith(".parquet")).sorted
     // an empty input writes no bucket at all: one empty file keeps the
     // snapshot readable (it carries the schema)
-    if (files.isEmpty) df.limit(0).write.mode("overwrite").options(WriteOptions).parquet(target.toString)
-    commit(spark, root, snapshotId, files, inputs,
+    if (parquetFiles.isEmpty) df.limit(0).write.mode("overwrite").options(WriteOptions).parquet(target.toString)
+    val files = parquetFiles
+    commit(spark, root, snapshotId, files, footerRows(spark, files), inputs,
       Map("buckets" -> buckets.toLong, "resumed_buckets" -> (buckets - missing.length).toLong))
   }
 
+  /** Rows in `files`, from their Parquet footers (the row-group counts
+    * `count()` would read), so the resumable commit runs no Spark job.
+    *
+    * The footers share one read-options object built from the session's
+    * Hadoop configuration. The one-argument `ParquetFileReader.open` builds
+    * its options over a new `Configuration`, which parses the XML defaults
+    * from the classpath jars again for every file (~10 ms each). */
+  private def footerRows(spark: SparkSession, files: Seq[String]): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val options = HadoopReadOptions.builder(conf).build()
+    files.iterator.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf), options)
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
   def readManifest(root: String, snapshotId: String): Manifest = {
-    val txt = new String(Files.readAllBytes(manifestDir(root).resolve(s"$snapshotId.json")), StandardCharsets.UTF_8)
-    // minimal field extraction (manifests are machine-written, flat JSON)
-    def strField(k: String) = ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-    def longField(k: String) = ("\"" + k + "\":(\\d+)").r.findFirstMatchIn(txt).map(_.group(1).toLong).getOrElse(0L)
-    def arrField(k: String) = ("\"" + k + "\":\\[([^\\]]*)\\]").r.findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-      .split(",").filter(_.nonEmpty).map(_.stripPrefix("\"").stripSuffix("\"")).toSeq
-    Manifest(strField("snapshot_id"), longField("row_count"), arrField("files"),
-      arrField("inputs"), strField("app_id"), longField("committed_at_ms"), Map.empty)
+    val j = Json.readTree(manifestDir(root).resolve(s"$snapshotId.json").toFile)
+    def strs(k: String) = j.path(k).elements.asScala.map(_.asText).toVector
+    Manifest(j.path("snapshot_id").asText, j.path("row_count").asLong, strs("files"), strs("inputs"),
+      j.path("app_id").asText, j.path("committed_at_ms").asLong,
+      j.path("metrics").properties.asScala.map(e => e.getKey -> e.getValue.asLong).toMap)
   }
 
   /** Read the current committed snapshot (or a named one). */

@@ -241,6 +241,43 @@ class TableIOSpec extends AnyFunSuite {
     }
   }
 
+  test("manifest round trip: escaped inputs and metrics read back as written") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_manifest").toString
+    val df = (1 to 30).map(i => (s"d$i", i)).toDF("doc_id", "n").repartition(3)
+    val inputs = Seq("/in/a,b.parquet", "/in/c]d", "/in/e\"f", "/in/g\\h", "/in/tab\there", "plain")
+    val extra = Map("docs" -> 30L, "odd,key\"]" -> 7L)
+    val first = graft.io.TableIO.writeSnapshot(df, root, "rt", inputs = inputs, extraMetrics = extra)
+    val again = graft.io.TableIO.writeSnapshot(df.limit(1), root, "rt", inputs = Seq("other"))
+    assert(again == first)
+    assert(first.inputs == inputs)
+    assert(first.metrics - "data_files" - "data_bytes" == extra)
+    assert(first.metrics("data_files") == first.files.length && first.files.nonEmpty)
+    assert(first.metrics("data_bytes") ==
+      first.files.map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).sum)
+  }
+
+  test("a snapshot directory holds only the committed files") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_onlycommitted").toString
+    val target = java.nio.file.Paths.get(root, "data", "snapshot=s1")
+    // what a crashed attempt leaves: a readable part file of other rows and
+    // a hidden staging file
+    val stale = java.nio.file.Files.createTempDirectory("graft_stale").toString
+    (1 to 7).map(i => (s"stale$i", -i)).toDF("doc_id", "n").coalesce(1).write.mode("overwrite").parquet(stale)
+    val stalePart = new java.io.File(stale).listFiles.find(_.getName.endsWith(".parquet")).get.toPath
+    java.nio.file.Files.createDirectories(target)
+    java.nio.file.Files.copy(stalePart, target.resolve("part-00000-crashed.snappy.parquet"))
+    java.nio.file.Files.write(target.resolve(".part-00001-crashed-7.staging"), Array[Byte](1, 2, 3))
+
+    val df = (1 to 50).map(i => (s"d$i", i)).toDF("doc_id", "n").repartition(4)
+    val m = graft.io.TableIO.writeSnapshot(df, root, "s1")
+    val left = target.toFile.listFiles.map(_.toString).toSet
+    assert(left == m.files.toSet, left.map(_.stripPrefix(target.toString)).toString)
+    assert(m.rowCount == 50)
+    assert(graft.io.TableIO.readSnapshot(spark, root, Some("s1")).count() == m.rowCount)
+  }
+
   test("snapshot commits close their directory listings (no descriptor leak)") {
     import spark.implicits._
     val fdDir = new java.io.File("/proc/self/fd")

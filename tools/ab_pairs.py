@@ -15,6 +15,10 @@ change wins at least 9 of every 10 pairs (ties count for neither side) and
 the gap between the medians, in the metric's better direction, is larger
 than the parent's interquartile range. It also prints whether the change's
 median stays within the metric's relative bound from BENCHMARK.json.
+After the verdict over all pairs it prints the same verdict over the pairs
+where both runs had `host.steal_ratio` below 0.04, with that subset's size;
+CPU steal by co-tenants stretches a run's walls, so a loaded pair can hide
+or fake a gain. No run is discarded: the all-pairs verdict comes first.
 
 The tool only reads the benchmark; each checkout builds its own copy on its
 first run. Exit status: 0 when every run succeeded, 1 otherwise.
@@ -25,6 +29,10 @@ import os
 import statistics
 import subprocess
 import sys
+
+
+# A run whose host had at least this share of CPU time stolen is "loaded".
+LOW_STEAL = 0.04
 
 
 def parse_seeds(text):
@@ -129,6 +137,11 @@ def main():
 
     print(f"\n{args.workload}: {len(pairs)} pairs")
     for line in summarize(pairs, spec):
+        print(line)
+    calm = [p for p in pairs
+            if all(p[side]["steal"] is not None and p[side]["steal"] < LOW_STEAL for side in ("parent", "change"))]
+    print(f"\n{args.workload}: {len(calm)} of {len(pairs)} pairs with host.steal_ratio < {LOW_STEAL} on both runs")
+    for line in summarize(calm, spec):
         print(line)
     for side in ("parent", "change"):
         att = sum(p[side]["attempted"] or 0 for p in pairs)
