@@ -2,24 +2,23 @@ package graft.io
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, LinkOption, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import java.util.{Locale, UUID}
 import com.fasterxml.jackson.databind.ObjectMapper
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.{LocalOutputFile, OutputFile}
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile, OutputFile}
 
 /** Snapshot-table I/O: Iceberg-semantics emulation over partitioned Parquet
   * plus JSON manifests (no Iceberg runtime jar ships in this environment —
@@ -32,12 +31,12 @@ import org.apache.parquet.io.{LocalOutputFile, OutputFile}
   *   _manifests/<id>.json                   committed manifest (atomic rename)
   *   _manifests/CURRENT                     name of the live snapshot
   *
-  * Commit protocol of `writeSnapshot`: each task writes its partition into
-  * a hidden (`.`-prefixed) staging file named for its task attempt and
-  * returns (file, rows, bytes); the driver renames the staging files to
-  * `part-*` names, deletes whatever else the directory holds (staging files
-  * of failed or speculative attempts, data of a crashed earlier attempt)
-  * and commits. The manifest plus the atomic swap of CURRENT is the only
+  * Commit protocol of both snapshot writers: each task writes its rows into
+  * hidden (`.`-prefixed) staging files named for its task attempt and
+  * returns (file, rows, bytes); the driver renames them to `part-*` names,
+  * deletes whatever else the directories it wrote hold (staging files of
+  * failed or speculative attempts, data of a crashed earlier attempt) and
+  * commits. The manifest plus the atomic swap of CURRENT is the only
   * commit: no Hadoop `FileSystem`, output committer, `_SUCCESS` or `.crc`
   * file is involved. Snapshot files take the session's Parquet compression
   * codec and TableIO's fixed write options; the session's Hadoop
@@ -108,25 +107,25 @@ object TableIO {
     val target = dataDir(root, snapshotId)
     Files.createDirectories(target)
     val writer = SnapshotFileWriter(spark, df.schema, target.toString)
-    // one SQL execution, as a Spark write would run it: AQE, the UI and the
-    // plan's SQL metrics see the job; the tasks write through `writer`
-    val qe = df.queryExecution
-    val staged = SQLExecution.withNewExecutionId(qe, Some(s"writeSnapshot $snapshotId")) {
-      spark.sparkContext.runJob(qe.toRdd, writer.writeTask _).flatten.toSeq
-    }
+    val placed = writeFiles(df, s"writeSnapshot $snapshotId", writer)(writer.writeTask)
     // an empty input still commits one zero-row file: it carries the schema
-    val written = if (staged.nonEmpty) staged else Seq(writer.stage(0, -1L, Iterator.empty))
-    val files = written.sortBy(_.partition).map { s =>
-      val part = target.resolve(writer.partName(s.partition))
-      Files.move(Paths.get(s.path), part, StandardCopyOption.ATOMIC_MOVE)
-      part.toString
-    }
-    // staging files of failed or speculative attempts, and any data a
-    // crashed earlier attempt left under this id
-    val keep = files.toSet
-    listPaths(target, maxDepth = 1).filterNot(keep).foreach(p => deleteTree(Paths.get(p)))
+    val written = if (placed.nonEmpty) placed else Seq(writer.place(writer.stage(0, -1L, Iterator.empty)))
+    val files = written.map(_.path)
+    prune(target, files.toSet)
     commit(spark, root, snapshotId, files, written.map(_.rows).sum, inputs,
       extraMetrics ++ Map("data_files" -> files.length.toLong, "data_bytes" -> written.map(_.bytes).sum))
+  }
+
+  /** Runs `df`'s plan as one SQL execution, as a Spark write would (AQE, the
+    * UI and the plan's SQL metrics see the job), with `task` staging each
+    * partition's rows; then renames the staged files to `part-*` names. */
+  private def writeFiles(df: DataFrame, description: String, writer: SnapshotFileWriter)(
+      task: (TaskContext, Iterator[InternalRow]) => IterableOnce[Staged]): Seq[Staged] = {
+    val qe = df.queryExecution
+    val staged = SQLExecution.withNewExecutionId(qe, Some(description)) {
+      df.sparkSession.sparkContext.runJob(qe.toRdd, task).flatten.toSeq
+    }
+    staged.sortBy(_.partition).map(writer.place)
   }
 
   /** Every path under `dir` down to `maxDepth` (1: its own entries), `dir`
@@ -139,6 +138,10 @@ object TableIO {
     finally s.close()
   }
 
+  /** Deletes every entry of `dir` not in `keep`: failed attempts' staging files and data. */
+  private def prune(dir: java.nio.file.Path, keep: Set[String]): Unit =
+    listPaths(dir, maxDepth = 1).filterNot(keep).foreach(p => deleteTree(Paths.get(p)))
+
   /** Deletes `p` and, for a directory (not a link to one), its contents. */
   private def deleteTree(p: java.nio.file.Path): Unit = {
     if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) listPaths(p, maxDepth = 1).foreach(c => deleteTree(Paths.get(c)))
@@ -150,13 +153,10 @@ object TableIO {
     * executor samples); the leaf is written PLAIN either way. */
   private val NoDictionaryColumn = "spans.list.element.text"
 
-  /** Fixed write options of `writeSnapshotResumable`'s Spark writer. */
-  private val WriteOptions = Map(s"parquet.enable.dictionary#$NoDictionaryColumn" -> "false")
-
   /** One task's staged snapshot file. */
   private final case class Staged(partition: Int, path: String, rows: Long, bytes: Long)
 
-  /** The task side of `writeSnapshot`: writes `InternalRow`s with Spark's own
+  /** The task side of both writers: writes `InternalRow`s with Spark's own
     * `ParquetWriteSupport` through parquet-java's java.nio `LocalOutputFile`.
     * It carries only the keys Spark's Parquet write support reads (schema,
     * legacy format, timestamp type, field ids, variant annotation), never
@@ -165,16 +165,33 @@ object TableIO {
   private final case class SnapshotFileWriter(dir: String, writeId: String, codec: CompressionCodecName,
       writeSupportConf: Map[String, String]) {
 
-    def partName(partition: Int): String = f"part-$partition%05d-$writeId${codec.getExtension}.parquet"
-
     /** A partition with no rows writes no file. */
     def writeTask(ctx: TaskContext, rows: Iterator[InternalRow]): Option[Staged] =
       if (rows.hasNext) Some(stage(ctx.partitionId(), ctx.taskAttemptId(), rows)) else None
 
-    /** Writes `rows` into a hidden staging file unique to the attempt. A
-      * failed write deletes its file. */
-    def stage(partition: Int, attempt: Long, rows: Iterator[InternalRow]): Staged = {
-      val file = Paths.get(dir, f".part-$partition%05d-$writeId-$attempt.staging")
+    /** For rows sorted by an int bucket column after the `data` columns: one
+      * file of the data columns per run of equal bucket `b`, staged into
+      * `doc_bucket=<b>/` (as in Spark's layout, the directory holds `b`). */
+    def writeBuckets(data: StructType)(ctx: TaskContext, rows: Iterator[InternalRow]): Seq[Staged] = {
+      val in = rows.buffered
+      val row = ProjectingInternalRow(data, data.indices)
+      val out = Seq.newBuilder[Staged]
+      while (in.hasNext) {
+        val b = in.head.getInt(data.length)
+        val run = new Iterator[InternalRow] {
+          def hasNext: Boolean = in.hasNext && in.head.getInt(data.length) == b
+          def next(): InternalRow = { row.project(in.next()); row }
+        }
+        Files.createDirectories(Paths.get(dir, s"doc_bucket=$b"))
+        out += stage(ctx.partitionId(), ctx.taskAttemptId(), run, s"doc_bucket=$b")
+      }
+      out.result()
+    }
+
+    /** Writes `rows` into a hidden staging file unique to the attempt, in
+      * `dir` or its subdirectory `sub`. A failed write deletes its file. */
+    def stage(partition: Int, attempt: Long, rows: Iterator[InternalRow], sub: String = ""): Staged = {
+      val file = Paths.get(dir, sub, f".part-$partition%05d-$writeId-$attempt.staging")
       val conf = new Configuration(false)
       writeSupportConf.foreach { case (k, v) => conf.set(k, v) }
       var n = 0L
@@ -188,10 +205,16 @@ object TableIO {
       }
       Staged(partition, file.toString, n, Files.size(file))
     }
+
+    /** Renames a staged file to its `part-*` name in the same directory. */
+    def place(s: Staged): Staged = {
+      val part = Paths.get(s.path).resolveSibling(f"part-${s.partition}%05d-$writeId${codec.getExtension}.parquet")
+      s.copy(path = Files.move(Paths.get(s.path), part, StandardCopyOption.ATOMIC_MOVE).toString)
+    }
   }
 
   private object SnapshotFileWriter {
-    def apply(spark: SparkSession, schema: org.apache.spark.sql.types.StructType, dir: String): SnapshotFileWriter = {
+    def apply(spark: SparkSession, schema: StructType, dir: String): SnapshotFileWriter = {
       val keys = Seq(SQLConf.PARQUET_WRITE_LEGACY_FORMAT, SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE,
         SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED, SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).map(_.key)
       val codec = ParquetOptions.getParquetCompressionCodecName(
@@ -232,10 +255,10 @@ object TableIO {
   }
 
   // ---------------------------------------------------------------------
-  // Partition-level resume: the snapshot is written as doc_bucket
-  // partitions, each committed with its own marker; a re-run writes ONLY
-  // the missing buckets (dynamic partition overwrite), so any partition
-  // resumes idempotently after a mid-job failure (north_rule).
+  // Bucket-level resume: the snapshot is written as doc_bucket=<b>/ dirs
+  // through writeSnapshot's staging and commit, each bucket with its own
+  // marker; a re-run writes ONLY the missing buckets and never touches a
+  // committed one, so it resumes idempotently after a failure (north_rule).
   // ---------------------------------------------------------------------
 
   private def bucketMarkerDir(root: String, id: String) = manifestDir(root).resolve(s"buckets-$id")
@@ -261,46 +284,43 @@ object TableIO {
     val done = committedBuckets(root, snapshotId)
     val missing = (0 until buckets).filterNot(done)
     val target = dataDir(root, snapshotId)
+    Files.createDirectories(target)
+    val writer = SnapshotFileWriter(spark, df.schema, target.toString)
     if (missing.nonEmpty) {
-      val withBucket = df
+      val bucketed = df
         .withColumn("doc_bucket", pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int"))
         .filter(col("doc_bucket").isin(missing: _*))
         .repartition(col("doc_bucket"))
-      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try withBucket.write.mode("overwrite").options(WriteOptions).partitionBy("doc_bucket")
-        .parquet(target.toString)
-      finally prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      Files.createDirectories(bucketMarkerDir(root, snapshotId))
-      missing.foreach { b =>
-        Files.write(bucketMarkerDir(root, snapshotId).resolve(s"bucket-$b.done"), Array.empty[Byte])
-      }
+        .sortWithinPartitions("doc_bucket")
+      val fresh = writeFiles(bucketed, s"writeSnapshotResumable $snapshotId", writer)(
+        writer.writeBuckets(df.schema)).map(_.path).toSet
+      // outside the committed buckets' directories only this run's files stay
+      val freshDirs = fresh.map(f => Paths.get(f).getParent.toString)
+      prune(target, freshDirs ++ done.map(b => target.resolve(s"doc_bucket=$b").toString))
+      freshDirs.foreach(d => prune(Paths.get(d), fresh))
+      val markers = Files.createDirectories(bucketMarkerDir(root, snapshotId))
+      missing.foreach(b => Files.write(markers.resolve(s"bucket-$b.done"), Array.empty[Byte]))
     }
     // all buckets present -> commit the snapshot manifest atomically
-    def parquetFiles = listPaths(target, maxDepth = Int.MaxValue).filter(_.endsWith(".parquet")).sorted
-    // an empty input writes no bucket at all: one empty file keeps the
-    // snapshot readable (it carries the schema)
-    if (parquetFiles.isEmpty) df.limit(0).write.mode("overwrite").options(WriteOptions).parquet(target.toString)
-    val files = parquetFiles
+    val found = listPaths(target, maxDepth = Int.MaxValue).filter(_.endsWith(".parquet")).sorted
+    // no bucket file at all: one zero-row file carries the schema (never
+    // beside doc_bucket= dirs, where a root file breaks partition discovery)
+    val files = if (found.nonEmpty) found else Seq(writer.place(writer.stage(0, -1L, Iterator.empty)).path)
     commit(spark, root, snapshotId, files, footerRows(spark, files), inputs,
       Map("buckets" -> buckets.toLong, "resumed_buckets" -> (buckets - missing.length).toLong))
   }
 
   /** Rows in `files`, from their Parquet footers (the row-group counts
-    * `count()` would read), so the resumable commit runs no Spark job.
+    * `count()` would read): no Spark job, and earlier attempts' buckets count.
     *
     * The footers share one read-options object built from the session's
     * Hadoop configuration. The one-argument `ParquetFileReader.open` builds
     * its options over a new `Configuration`, which parses the XML defaults
     * from the classpath jars again for every file (~10 ms each). */
   private def footerRows(spark: SparkSession, files: Seq[String]): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val options = HadoopReadOptions.builder(conf).build()
+    val options = HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
     files.iterator.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf), options)
+      val reader = ParquetFileReader.open(new LocalInputFile(Paths.get(f)), options)
       try reader.getRecordCount finally reader.close()
     }.sum
   }
@@ -313,14 +333,6 @@ object TableIO {
       j.path("metrics").properties.asScala.map(e => e.getKey -> e.getValue.asLong).toMap)
   }
 
-  /** Read the current committed snapshot (or a named one). */
-  /** Bucketed table write: pre-hash-partition + sort by the join key so
-    * doc-keyed joins between co-bucketed tables plan WITHOUT a shuffle
-    * (SortMergeJoin over bucket-aligned scans — the 100 TB pattern for
-    * repeated joins on doc_id, e.g. spans x metadata x quality scores;
-    * the Exchange that a plain parquet join needs on BOTH corpus-sized
-    * sides disappears). Uses the session catalog's managed-table bucketing
-    * (swap for Iceberg bucket partition transforms on a real catalog). */
   /** Write the contract input table WITH a `n_spans` stats column, range-
     * clustered by document size so giant docs land in their own files/row
     * groups. At 100 TB this is what makes the skew split's "second scan"
@@ -421,6 +433,13 @@ object TableIO {
     math.max(1L << 20, math.min(128L << 20, total / math.max(1, cores * waves)))
   }
 
+  /** Bucketed table write: pre-hash-partition + sort by the join key so
+    * doc-keyed joins between co-bucketed tables plan WITHOUT a shuffle
+    * (SortMergeJoin over bucket-aligned scans — the 100 TB pattern for
+    * repeated joins on doc_id, e.g. spans x metadata x quality scores;
+    * the Exchange that a plain parquet join needs on BOTH corpus-sized
+    * sides disappears). Uses the session catalog's managed-table bucketing
+    * (swap for Iceberg bucket partition transforms on a real catalog). */
   def writeBucketed(df: DataFrame, tableName: String, bucketCol: String, buckets: Int): Unit =
     df.write
       .mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -429,6 +448,7 @@ object TableIO {
       .sortBy(bucketCol)
       .saveAsTable(tableName)
 
+  /** Read the current committed snapshot (or a named one). */
   def readSnapshot(spark: SparkSession, root: String, snapshotId: Option[String] = None): DataFrame = {
     val id = snapshotId.orElse(currentSnapshot(root))
       .getOrElse(throw new IllegalStateException(s"no committed snapshot under $root"))

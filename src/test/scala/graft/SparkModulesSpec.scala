@@ -435,6 +435,21 @@ class StreamingSpec extends AnyFunSuite {
       .as[(String, String, Int, Boolean, String)].collect().sortBy(_._1).toSeq
   }
 
+  /** Waits up to 120 s for an AvailableNow query to finish, or for `done`,
+    * then stops it whatever happened, so a query that failed or timed out
+    * never runs on beside the next one. `done` is for a query with
+    * processing-time state timeouts: every batch of it asks for another, so
+    * it runs no-data batches for ever and never finishes on its own.
+    * Returns a diagnostic when the query neither finished nor was done. */
+  private def awaitStopped(q: org.apache.spark.sql.streaming.StreamingQuery,
+      done: org.apache.spark.sql.streaming.StreamingQuery => Boolean = _ => false): Option[String] = {
+    val deadline = System.nanoTime + 120L * 1000 * 1000 * 1000
+    try {
+      while (q.isActive && !done(q) && System.nanoTime < deadline) q.awaitTermination(100)
+      if (q.isActive && !done(q)) Some(s"stream ${q.id} did not finish within 120 s") else None
+    } finally q.stop()
+  }
+
   /** Streams the parquet files under `in` through `extractStream` with
     * `Trigger.AvailableNow` into a parquet sink; returns the finished query
     * and the sink's rows. */
@@ -449,7 +464,7 @@ class StreamingSpec extends AnyFunSuite {
       .option("checkpointLocation", s"$dir/cp")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    assert(stream.awaitTermination(120000), "stream did not finish")
+    awaitStopped(stream).foreach(fail(_))
     (stream, spark.read.parquet(s"$dir/out"))
   }
 
@@ -518,7 +533,7 @@ class StreamingSpec extends AnyFunSuite {
         .option("path", out).option("checkpointLocation", cp)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination(120000)
+      awaitStopped(q).foreach(fail(_))
     }
     // batch 1: a and c normalize to the same fingerprint ("hello world")
     Seq(("a", "hello world"), ("b", "other text"), ("c", "Hello   WORLD"))
@@ -552,24 +567,24 @@ class StreamingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory(s"graft_sdedup_$tag")
     val in = s"$dir/in"; val out = s"$dir/out"; val cp = s"$dir/cp"
     val schema = StructType(Seq(StructField("doc_id", StringType), StructField("text", StringType)))
-    def runBatch(): Unit = {
-      val q = stream(spark.readStream.schema(schema).parquet(in))
-        .toDF("fp", "keep_doc_id")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination(120000)
-    }
+    // each run has one new input file: it is done once a batch that read
+    // rows has committed. A run that timed out is a Left: the next margin
+    // retries it
+    def runBatch(): Option[String] = awaitStopped(stream(spark.readStream.schema(schema).parquet(in))
+      .toDF("fp", "keep_doc_id")
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", cp)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start(), _.recentProgress.exists(_.numInputRows > 0))
     Seq(("a", "hello world")).toDF("doc_id", "text").write.mode("overwrite").parquet(in)
-    runBatch()
+    runBatch().foreach(timeout => return Left(timeout))
     Thread.sleep(sleepMs) // let the TTL lapse
     // batch 2 carries unrelated data; its trigger fires the timeout that removes 'hello world' state
     Seq(("b", "other text")).toDF("doc_id", "text").write.mode("append").parquet(in)
-    runBatch()
+    runBatch().foreach(timeout => return Left(timeout))
     // batch 3: the same content arrives after expiry -> re-admitted
     Seq(("c", "hello world")).toDF("doc_id", "text").write.mode("append").parquet(in)
-    runBatch()
+    runBatch().foreach(timeout => return Left(timeout))
     val rows = spark.read.parquet(out).as[(String, String)].collect().sortBy(_._2)
     if (rows.map(_._2).toSeq == Seq("a", "b", "c")) Right(rows)
     else Left(s"expected a (first), b (other), c (re-admitted after TTL); got ${rows.toSeq}")
@@ -721,6 +736,57 @@ class ResumableSnapshotSpec extends AnyFunSuite {
     // idempotent: second call is a committed-snapshot no-op
     val m2 = graft.io.TableIO.writeSnapshotResumable(df.limit(1), root, "s1", buckets)
     assert(m2.rowCount == 2000)
+  }
+
+  test("a resumed snapshot holds only committed data") {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    import java.nio.file.{Files, Path, Paths}
+    val root = Files.createTempDirectory("graft_resume_clean").toString
+    val target = Paths.get(root, "data", "snapshot=s1")
+    val buckets = 16
+    def bucketDir(b: Int) = target.resolve(s"doc_bucket=$b")
+    def listing(d: Path) = d.toFile.listFiles.map(_.toString).sorted.toSeq
+    // three docs in three distinct buckets
+    val ids = (0 until 20).map(i => s"doc-$i").toDF("doc_id")
+      .select(col("doc_id"), pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int"))
+      .as[(String, Int)].collect().groupBy(_._2).values.map(_.head).toSeq.sortBy(_._1).take(3)
+    val Seq(committed, reached, _) = ids.map(_._2)
+    val unreached = (0 until buckets).find(b => !ids.exists(_._2 == b)).get
+    val df = ids.map(_._1).zipWithIndex.map { case (id, i) => (id, i + 1) }.toDF("doc_id", "n")
+
+    // what crashed attempts leave: a committed bucket (marker, data file and
+    // its .crc), a readable part file of 7 other rows in an unmarked bucket
+    // the input does not reach, and a staging file in a bucket it does reach
+    def writeOne(rows: org.apache.spark.sql.DataFrame, dir: Path, keep: String => Boolean): Unit = {
+      val tmp = Files.createTempDirectory("graft_resume_src")
+      rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      Files.createDirectories(dir)
+      tmp.toFile.listFiles.filter(f => keep(f.getName)).foreach(f => Files.copy(f.toPath, dir.resolve(f.getName)))
+    }
+    writeOne(df.filter(col("doc_id") === ids.head._1), bucketDir(committed), n => n.contains("part-"))
+    writeOne((1 to 7).map(i => (s"stale$i", -i)).toDF("doc_id", "n"), bucketDir(unreached),
+      n => n.startsWith("part-"))
+    Files.createDirectories(bucketDir(reached))
+    Files.write(bucketDir(reached).resolve(".part-00000-crashed-7.staging"), Array[Byte](1, 2, 3))
+    val markers = Paths.get(root, "_manifests", "buckets-s1")
+    Files.createDirectories(markers)
+    Files.write(markers.resolve(s"bucket-$committed.done"), Array.empty[Byte])
+    val committedListing = listing(bucketDir(committed))
+    assert(committedListing.exists(_.endsWith(".crc")), committedListing.toString)
+
+    val m = graft.io.TableIO.writeSnapshotResumable(df, root, "s1", buckets)
+    val back = graft.io.TableIO.readSnapshot(spark, root, Some("s1"))
+    assert(m.rowCount == 3 && back.count() == 3, s"rowCount ${m.rowCount}, ${back.count()} rows read")
+    assert(m.metrics("resumed_buckets") == 1L)
+    assert(back.schema.simpleString == "struct<doc_id:string,n:int,doc_bucket:int>", back.schema.simpleString)
+    assert(listing(bucketDir(committed)) == committedListing, "the committed bucket was touched")
+    val dirs = { val s = Files.walk(target); try s.iterator.asScala.filter(Files.isDirectory(_)).toVector finally s.close() }
+    for (d <- dirs if d != bucketDir(committed)) {
+      val files = d.toFile.listFiles.filter(_.isFile).map(_.toString).toSet
+      assert(files == m.files.filter(f => Paths.get(f).getParent == d).toSet, s"$d holds $files")
+    }
+    assert(graft.io.TableIO.committedBuckets(root, "s1") == (0 until buckets).toSet)
   }
 }
 

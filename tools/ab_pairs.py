@@ -14,7 +14,11 @@ side's median and quartiles, the wins per side and the gain verdict: the
 change wins at least 9 of every 10 pairs (ties count for neither side) and
 the gap between the medians, in the metric's better direction, is larger
 than the parent's interquartile range. It also prints whether the change's
-median stays within the metric's relative bound from BENCHMARK.json.
+median stays within the metric's relative bound from BENCHMARK.json, or
+`unresolved` when the parent's run-to-run spread (its interquartile range
+over its median) is wider than that bound: such a spread cannot tell a
+change within the bound from one beyond it, unless every run of the change
+reads better than every run of the parent.
 After the verdict over all pairs it prints the same verdict over the pairs
 where both runs had `host.steal_ratio` below 0.04, with that subset's size;
 CPU steal by co-tenants stretches a run's walls, so a loaded pair can hide
@@ -93,12 +97,17 @@ def summarize(pairs, spec):
         iqr = p3 - p1
         claim = change_wins >= 0.9 * len(both) and gain > iqr
         worse = -gain / abs(pm) if pm else 0.0  # relative, > 0 when the change is worse
+        spread = iqr / abs(pm) if pm else 0.0
+        all_better = (max(chg) < min(par)) if lower else (min(chg) > max(par))
+        if spread > m["bound"] and not all_better:
+            bound = "unresolved"
+        else:
+            bound = "within" if worse <= m["bound"] else "EXCEEDS"
         out.append(
             f"{name:<28} parent {pm:.4g} [{p1:.4g}, {p3:.4g}]  change {cm:.4g} [{c1:.4g}, {c3:.4g}]  "
             f"wins change/parent {change_wins}/{parent_wins} of {len(both)}  "
             f"gap {gain:+.4g} vs parent IQR {iqr:.4g}: gain {'MET' if claim else 'not met'}  "
-            f"change worse by {worse:+.1%}: {'within' if worse <= m['bound'] else 'EXCEEDS'} "
-            f"bound {m['bound']:.0%}")
+            f"change worse by {worse:+.1%}, parent spread {spread:.1%}: {bound} bound {m['bound']:.0%}")
     return out
 
 
