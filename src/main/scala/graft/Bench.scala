@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver-contract benchmark: one JSON line with per-query seconds over
-  * SPARK_GRAFT_SF_DIR at local[SPARK_GRAFT_CPUS].
+  * SPARK_GRAFT_SF_DIR on the graft.Session master.
   *
   * Measurement notes:
   *   - results are materialized through the noop sink: a bare count() lets
@@ -18,23 +18,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // span-array rows: columnar batch memory scales with rowSize x
-      // batchSize and giant docs dominate bytes — 64-row batches keep the
-      // per-task batch ~20 MB (measured -30%+ extraction wall vs 512)
-      // "auto" (ScalingBench convention) falls back to the 64 default here —
-      // the sustained/managed legs below derive their own byte-budgeted size
-      .config("spark.sql.parquet.columnarReaderBatchSize",
-        sys.env.get("SPARK_GRAFT_BATCH").filter(_.forall(_.isDigit)).getOrElse("64"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
+    val cpus = spark.sparkContext.defaultParallelism
+    // span-array rows: columnar batch memory scales with rowSize x
+    // batchSize and giant docs dominate bytes — 64-row batches keep the
+    // per-task batch ~20 MB (measured -30%+ extraction wall vs 512); the
+    // sustained/managed legs below derive their own byte-budgeted size
+    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "64")
 
     // warmup: session + codegen + parquet footer caches (excluded from timings)
     force(spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count())
@@ -64,7 +54,7 @@ object Bench {
       java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
         .forEach(p => java.nio.file.Files.deleteIfExists(p))
 
-  private def timedBody(spark: SparkSession, sfDir: String, cpus: String, mediaDir: String,
+  private def timedBody(spark: SparkSession, sfDir: String, cpus: Int, mediaDir: String,
       sustainedRoot: String): Unit = {
     // q51/q52 payloads arrive ENCODED in production — the in-flight query's
     // synthetic ImageIO/WAV encode is fixture cost, not engine cost, and was
@@ -123,20 +113,14 @@ object Bench {
     // corpus (archetype mix incl. 1-in-20 giants) to parquet UNTIMED, then
     // times the contract pipeline over it — the BASELINE.md metric shape.
     val sustainedDir = sustainedRoot + "/corpus.parquet"
-    locally {
-      import spark.implicits._
-      spark.createDataset(graft.fixtures.Fixtures.corpusIds(40000))
-        .repartition(128)
-        .map(graft.fixtures.Fixtures.gen _)
-        .write.mode("overwrite").parquet(sustainedDir)
-    }
+    graft.fixtures.Fixtures.writeCorpus(spark, graft.fixtures.Fixtures.corpusIds(40000), sustainedDir)
     val sustainedIn = spark.read.parquet(sustainedDir)
     // shipped config: byte-budgeted batch size + corpus-adaptive split size
     val prevBatch = spark.conf.get("spark.sql.parquet.columnarReaderBatchSize")
     spark.conf.set("spark.sql.parquet.columnarReaderBatchSize",
       graft.io.TableIO.autoBatchSize(sustainedIn).toString)
     spark.conf.set("spark.sql.files.maxPartitionBytes",
-      graft.io.TableIO.autoSplitBytes(sustainedDir, cpus.toInt).toString)
+      graft.io.TableIO.autoSplitBytes(sustainedDir, cpus).toString)
     // JIT warmup (same plan, small slice), then the timed full pass
     graft.pipeline.Extract.extractContract(sustainedIn.limit(1500)).selectExpr("count(*)").collect()
     val s0 = System.nanoTime()
@@ -162,7 +146,7 @@ object Bench {
     val managedBatch = graft.io.TableIO.autoBatchSize(spark.read.parquet(managedDir))
     spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", managedBatch.toString)
     spark.conf.set("spark.sql.files.maxPartitionBytes",
-      graft.io.TableIO.autoSplitBytes(managedDir, cpus.toInt).toString)
+      graft.io.TableIO.autoSplitBytes(managedDir, cpus).toString)
     graft.pipeline.Extract.extractContractFromTable(spark, managedDir)
       .limit(1500).selectExpr("count(*)").collect() // JIT/codegen warmup
     val m0 = System.nanoTime()
@@ -181,22 +165,17 @@ object Bench {
     // bench mix cannot show this (giants are 84% of its bytes). Same corpus,
     // same threshold, both timed identically.
     val pruneDir = sustainedDir.stripSuffix("/") + "_prune"
-    locally {
-      import spark.implicits._
-      // 320k docs, giants 1-in-2000 (r5, was 40k @ 1-in-1000): the r4 A/B's
-      // ~2 s legs were noise-dominated on this multi-tenant box (the
-      // committed artifact showed a 2x managed LOSS where the builder's
-      // windows showed a 1.3x win). 8x the small-doc bytes with the SAME
-      // giant count puts the decode delta the stats column saves (one full
-      // small-corpus re-decode on the raw giant-find) above the noise floor
-      // while keeping the leg short enough for an 8-pair campaign; 640k was
-      // ALSO tried and the delta collapsed there (GC/memory pressure
-      // equalizes the legs on this box), so bigger is not better
-      spark.createDataset(graft.fixtures.Fixtures.corpusIdsRareGiants(320000, giantEvery = 2000))
-        .repartition(128)
-        .map(graft.fixtures.Fixtures.gen _)
-        .write.mode("overwrite").parquet(pruneDir)
-    }
+    // 320k docs, giants 1-in-2000 (r5, was 40k @ 1-in-1000): the r4 A/B's
+    // ~2 s legs were noise-dominated on this multi-tenant box (the
+    // committed artifact showed a 2x managed LOSS where the builder's
+    // windows showed a 1.3x win). 8x the small-doc bytes with the SAME
+    // giant count puts the decode delta the stats column saves (one full
+    // small-corpus re-decode on the raw giant-find) above the noise floor
+    // while keeping the leg short enough for an 8-pair campaign; 640k was
+    // ALSO tried and the delta collapsed there (GC/memory pressure
+    // equalizes the legs on this box), so bigger is not better
+    graft.fixtures.Fixtures.writeCorpus(spark,
+      graft.fixtures.Fixtures.corpusIdsRareGiants(320000, giantEvery = 2000), pruneDir)
     val pruneManagedDir = pruneDir + "_managed"
     val pruneIn = spark.read.parquet(pruneDir)
     // 4 MB row-group floor (r5, measured): the former totalBytes/512 formula
@@ -215,9 +194,9 @@ object Bench {
     // Config symmetry (ADVICE r04): each leg's batch/split derived from ITS
     // OWN corpus, applied before every pass.
     val rawBatch = graft.io.TableIO.autoBatchSize(pruneIn).toString
-    val rawSplit = graft.io.TableIO.autoSplitBytes(pruneDir, cpus.toInt).toString
+    val rawSplit = graft.io.TableIO.autoSplitBytes(pruneDir, cpus).toString
     val mgdBatch = graft.io.TableIO.autoBatchSize(spark.read.parquet(pruneManagedDir)).toString
-    val mgdSplit = graft.io.TableIO.autoSplitBytes(pruneManagedDir, cpus.toInt).toString
+    val mgdSplit = graft.io.TableIO.autoSplitBytes(pruneManagedDir, cpus).toString
     def rawLegDf() = graft.pipeline.Extract.extractContract(pruneIn, skewSpanThreshold = pruneThreshold)
     def mgdLegDf() = graft.pipeline.Extract.extractContractFromTable(spark, pruneManagedDir,
       skewSpanThreshold = pruneThreshold)
@@ -308,7 +287,7 @@ object Bench {
         Array.tabulate(dim)(d => centers(c)(d) + r.nextGaussian() * 0.05)
       }
       spark.range(nVec).select(org.apache.spark.sql.functions.col("id"))
-        .repartition(cpus.toInt * 2)
+        .repartition(cpus * 2)
         .as[Long]
         .map(id => (id, vecFor(id).toSeq))
         .toDF("vec_id", "v")

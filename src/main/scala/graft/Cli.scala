@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import graft.model.ExtractConfig
+import org.apache.spark.sql.{Dataset, Observation}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, size, sum, when}
+import graft.model.{DocResult, ExtractConfig}
 import graft.pipeline.Extract
 import graft.io.{Sinks, TableIO}
-import graft.metrics.ExtractMetrics
 
 /** spark-submit entry mirroring the reference CLI (reference: cli.py:25-150:
   * `extract <input> [--format text|json|structured] [-o out]`, `info`,
@@ -17,17 +17,14 @@ import graft.metrics.ExtractMetrics
   *   Cli languages
   */
 object Cli {
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  /** `results`, observing docs, pages, spans, quarantined and empty_docs into
+    * `obs`, whose `get` holds them once an action over the results ends. */
+  private[graft] def observeCounts(results: Dataset[DocResult], obs: Observation): Dataset[DocResult] = {
+    val spans = coalesce(size(col("spans")), lit(0))
+    val quarantined = col("quarantined")
+    results.observe(obs, count(lit(1)).as("docs"), sum(col("num_pages")).as("pages"),
+      sum(spans).as("spans"), count(when(quarantined, 1)).as("quarantined"),
+      count(when(spans === 0 && !quarantined, 1)).as("empty_docs"))
   }
 
   def main(args: Array[String]): Unit = args.toList match {
@@ -36,7 +33,7 @@ object Cli {
       val engine = rest.lift(1).getOrElse("core")
       val cfg = ExtractConfig.default.copy(engine = engine)
       cfg.validate()
-      val spark = session()
+      val spark = Session.start()
       try {
         val t0 = System.nanoTime()
         val in = spark.read.parquet(input)
@@ -48,14 +45,17 @@ object Cli {
             bad.write.mode("overwrite").json(s"$out/quarantine")
           case "text" | "json" =>
             import spark.implicits._
-            val metrics = new ExtractMetrics(spark)
-            val results = metrics.observeResults(
-              Extract.extract(in.selectExpr("cast(doc_id as string) doc_id", "spans").as[graft.model.RawDoc], cfg))
+            val obs = Observation("graft.extract")
+            val results = observeCounts(
+              Extract.extract(in.selectExpr("cast(doc_id as string) doc_id", "spans").as[graft.model.RawDoc], cfg), obs)
               .filter(!_.quarantined)
             if (format == "text") Sinks.writeText(results.toDF(), s"$out/text")
             else Sinks.writeJson(results.toDF(), s"$out/json")
             val wall = (System.nanoTime() - t0) / 1e9
-            System.err.println(s"[cli] metrics=${metrics.snapshot} throughput=${metrics.throughput(wall)}")
+            // a sum over no rows is null, which unboxes to 0
+            val counts = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+            val throughput = Map("docs_per_sec" -> counts("docs") / wall, "pages_per_sec" -> counts("pages") / wall)
+            System.err.println(s"[cli] metrics=$counts throughput=$throughput")
           case other =>
             throw new IllegalArgumentException(s"unknown format: $other (text|json|structured)")
         }
@@ -63,7 +63,7 @@ object Cli {
       } finally spark.stop()
 
     case "snapshot" :: input :: root :: id :: Nil =>
-      val spark = session()
+      val spark = Session.start()
       try {
         val result = Extract.extractContract(spark.read.parquet(input))
         val (good, _) = Sinks.splitQuarantine(result)

@@ -19,17 +19,7 @@ import graft.kernel.{AdaptiveFitz, AdaptivePlumber, Parse}
   */
 object ExpectedDump {
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-  private def jstr(s: String): String = if (s == null) "null" else "\"" + esc(s) + "\""
+  private def jstr(s: String): String = graft.io.TableIO.Json.writeValueAsString(s)
 
   def docJson(srcId: String): String = {
     val doc = SparkEntry.rawDocFor(srcId)
@@ -72,9 +62,7 @@ object ExpectedDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/expected_dump.jsonl")
     val sfDirs = if (args.length > 1) args.drop(1).toSeq else Seq("/root/testdata/sf0.1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]").config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
     import spark.implicits._
     val ids = sfDirs.flatMap { dir =>
       spark.read.parquet(s"$dir/documents.parquet")

@@ -13,18 +13,7 @@ import graft.model.ExtractConfig
   * beyond self-certified goldens. */
 object ParityDump {
 
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-
-  private def jstr(s: String): String = if (s == null) "null" else "\"" + esc(s) + "\""
+  private def jstr(s: String): String = graft.io.TableIO.Json.writeValueAsString(s)
 
   /** Adversarial non-fixture docs: random words, random gap runs right at
     * the guard thresholds (15%/20% width), random pipes/rule lines, random

@@ -7,58 +7,38 @@ import java.nio.file.{Files, Paths}
 /** Two-parallelism scaling experiment (BASELINE.md protocol): the sandbox
   * substitute for the north_rule's N vs 4N executor criterion. Runs the
   * IDENTICAL extraction job on the IDENTICAL pre-materialized corpus at
-  * local[N] and local[4N] (default N=8), identical AQE + shuffle config,
-  * skewed multi-hundred-page docs included, and reports throughput at both
-  * plus efficiency = throughput(4N) / (4 * throughput(N)).
+  * local[N] and local[4N], identical AQE + shuffle config, skewed
+  * multi-hundred-page docs included, and reports throughput at both plus
+  * efficiency = throughput(4N) / (4 * throughput(N)).
   *
-  * Usage: ScalingBench [nDocs] [N]  -> writes BENCH/BASELINE.md
+  * Usage: see `main`'s subcommands; tools/scaling.sh drives them.
   */
 object ScalingBench {
 
+  /** graft.Session at `cores`, with fine input splits: the corpus parquet is
+    * ~hundreds of MB in small files; the 128 MB default packs them into ~3
+    * read partitions and starves the narrow mapPartitions stage of
+    * parallelism (identical at both levels — on a real 100 TB table the file
+    * count provides this). Columnar batches hold 64 rows until
+    * applyBatchSize derives the corpus's own size: 1-in-20 giant docs
+    * dominate bytes, and the untimed reads before it (stats' validation and
+    * rewrite) decode whole span arrays. */
   private def session(cores: Int): SparkSession = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // fine input splits: the corpus parquet is ~hundreds of MB in small
-      // files; the 128 MB default packs them into ~3 read partitions and
-      // starves the narrow mapPartitions stage of parallelism (identical at
-      // both levels — on a real 100 TB table the file count provides this)
-      .config("spark.sql.files.maxPartitionBytes", sys.env.getOrElse("SPARK_GRAFT_SPLIT", "4m"))
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // span-array rows: columnar batch MEMORY scales with rowSize x
-      // batchSize, and 1-in-20 giant docs dominate bytes — 64-row batches
-      // keep giant batches ~20 MB/task (512 rows was ~150 MB -> GC churn;
-      // the 4096 default also thrashed child-vector reserve()/realloc)
-      // numeric placeholder; "auto" (or unset) is resolved per-corpus by
-      // applyBatchSize before any timed work
-      .config("spark.sql.parquet.columnarReaderBatchSize",
-        sys.env.get("SPARK_GRAFT_BATCH").filter(_.forall(_.isDigit)).getOrElse("64"))
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "snappy"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = Session.start(cores)
+    s.conf.set("spark.sql.files.maxPartitionBytes", "4m")
+    s.conf.set("spark.sql.files.openCostInBytes", "1m")
+    s.conf.set("spark.sql.parquet.columnarReaderBatchSize", "64")
     s
   }
 
-  /** Columnar batch size for `path`: an explicit integer SPARK_GRAFT_BATCH
-    * pins it (A/B runs); unset or "auto" derives the byte-budgeted size from
-    * the corpus itself (TableIO.autoBatchSize — VERDICT r03 #3: the shipped
-    * config must not hardcode the row count the skew profile happens to
-    * need). Applied via dynamic conf BEFORE any timed work. */
-  private def applyBatchSize(spark: SparkSession, path: String): Int = {
-    val b = sys.env.get("SPARK_GRAFT_BATCH").filter(_ != "auto").map(_.toInt).getOrElse {
-      val auto = graft.io.TableIO.autoBatchSize(spark.read.parquet(path))
-      System.err.println(s"[scaling] auto columnarReaderBatchSize=$auto")
-      auto
-    }
+  /** Columnar batch size for `path`, derived from the corpus itself
+    * (TableIO.autoBatchSize — VERDICT r03 #3: the shipped config must not
+    * hardcode the row count the skew profile happens to need). Applied via
+    * dynamic conf BEFORE any timed work. */
+  private def applyBatchSize(spark: SparkSession, path: String): Unit = {
+    val b = graft.io.TableIO.autoBatchSize(spark.read.parquet(path))
+    System.err.println(s"[scaling] auto columnarReaderBatchSize=$b")
     spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", b.toString)
-    b
   }
 
   final case class RunStats(cores: Int, wallSec: Double, docs: Long, pages: Long, spans: Long,
@@ -67,10 +47,8 @@ object ScalingBench {
     def pagesPerSec: Double = pages / wallSec
   }
 
-  private def runOnce(cores: Int, corpusPath: String, parts: Int,
-      skewThresholdSpans: Int = 512 * graft.kernel.Parse.SpansPerPage): RunStats = {
+  private def runOnce(cores: Int, corpusPath: String, skewThresholdSpans: Int): RunStats = {
     val spark = session(cores)
-    import spark.implicits._
     try {
       applyBatchSize(spark, corpusPath)
       val docs = spark.read.parquet(corpusPath)
@@ -96,27 +74,22 @@ object ScalingBench {
   /** Subcommands (one JVM per measurement so heap zeroing / JIT / GC state
     * never leaks between runs — drive via tools/scaling.sh):
     *   gen <nDocs> <path>            materialize the corpus
-    *   run <cores> <path>            one timed run; prints one JSON line
+    *   run <cores> <path> [thresholdPages]   one timed run; prints one JSON line
+    *   stats <cores> <path>          one timed run over the size-statted rewrite
     *   report <nDocs> <n> <jsonN> <json4N>   write BENCH/BASELINE.md
-    * No args: legacy single-JVM mode (gen + both runs + report).
     */
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("gen") =>
       val nDocs = args(1).toInt
       val corpusPath = args(2)
-      val gen = session(32)
-      try {
-        import gen.implicits._
-        gen.createDataset(Fixtures0.ids(nDocs))
-          .repartition(128)
-          .map(graft.fixtures.Fixtures.gen _)
-          .write.mode("overwrite").parquet(corpusPath)
-      } finally gen.stop()
+      val gen = Session.start()
+      try graft.fixtures.Fixtures.writeCorpus(gen, graft.fixtures.Fixtures.corpusIds(nDocs), corpusPath)
+      finally gen.stop()
 
     case Some("run") =>
       val cores = args(1).toInt
       val thresholdPages = args.lift(3).map(_.toInt).getOrElse(512)
-      val s = runOnce(cores, args(2), cores * 4, thresholdPages * graft.kernel.Parse.SpansPerPage)
+      val s = runOnce(cores, args(2), thresholdPages * graft.kernel.Parse.SpansPerPage)
       println(s"""{"cores":${s.cores},"wall_sec":${s.wallSec},"docs":${s.docs},"pages":${s.pages},"spans":${s.spans},"docs_per_sec":${s.docsPerSec},"pages_per_sec":${s.pagesPerSec},"checksum":${s.checksum}}""")
 
     // managed-input leg: same corpus rewritten once (untimed) via
@@ -184,13 +157,9 @@ object ScalingBench {
       writeReport(nDocs, n, parse(args(3)), parse(args(4)))
 
     case _ =>
-      val nDocs = args.headOption.map(_.toInt).getOrElse(
-        sys.env.getOrElse("SPARK_GRAFT_SCALING_DOCS", "24000").toInt)
-      val n = args.lift(1).map(_.toInt).getOrElse(8)
-      main(Array("gen", nDocs.toString, "target/scaling_corpus.parquet"))
-      val statsN = runOnce(n, "target/scaling_corpus.parquet", n * 4)
-      val stats4N = runOnce(n * 4, "target/scaling_corpus.parquet", n * 16)
-      writeReport(nDocs, n, statsN, stats4N)
+      System.err.println("usage: ScalingBench gen <nDocs> <path> | run <cores> <path> [thresholdPages] | " +
+        "stats <cores> <path> | report <nDocs> <n> <jsonN> <json4N>")
+      sys.exit(1)
   }
 
   def writeReport(nDocs: Int, n: Int, statsN: RunStats, stats4N: RunStats): Unit = {
@@ -224,9 +193,4 @@ object ScalingBench {
     println(md)
     println(s"""{"scaling_efficiency":$efficiency,"n":"local[$n]","t_n":${statsN.wallSec},"t_4n":${stats4N.wallSec},"docs":$nDocs}""")
   }
-}
-
-/** Corpus id helper kept serialization-free for the generator closure. */
-private object Fixtures0 {
-  def ids(n: Int): Seq[String] = graft.fixtures.Fixtures.corpusIds(n)
 }

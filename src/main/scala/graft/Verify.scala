@@ -1,20 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import graft.io.TableIO
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -68,18 +61,9 @@ object Verify {
       }
     } else coverageFailure = Some("expected_docs.csv resource missing — extraction oracles cannot run")
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // Jackson escapes quotes, backslashes and every control char: a tab or
+    // CR in an oracle's SQL must not break the reader's json.load
+    def q(s: String): String = TableIO.Json.writeValueAsString(s)
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v.replace("__GRAFT_EXPECTED__", expectedPath))}" }
       .mkString("{", ",", "}")

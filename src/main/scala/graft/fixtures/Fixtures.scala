@@ -1,5 +1,6 @@
 package graft.fixtures
 
+import org.apache.spark.sql.SparkSession
 import graft.model.{RawDoc, Span}
 import graft.kernel.Parse
 
@@ -238,4 +239,11 @@ object Fixtures {
       val a = if (i % giantEvery == giantEvery - 1) "skewed_giant" else Archetypes(i % 5)
       docId(a, i)
     }
+
+  /** Generates the docs of `ids` on the executors and writes them to `path`
+    * as Parquet, in 128 partitions. */
+  private[graft] def writeCorpus(spark: SparkSession, ids: Seq[String], path: String): Unit = {
+    import spark.implicits._
+    spark.createDataset(ids).repartition(128).map(gen _).write.mode("overwrite").parquet(path)
+  }
 }

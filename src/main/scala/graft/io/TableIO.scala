@@ -75,8 +75,9 @@ object TableIO {
   }
 
   /** Manifests are flat JSON: strings, integers, string arrays and one
-    * object of integer metrics, written and parsed with Jackson. */
-  private val Json = new ObjectMapper
+    * object of integer metrics, written and parsed with Jackson. The
+    * dump mains quote their JSON strings with this mapper too. */
+  private[graft] val Json = new ObjectMapper
 
   private def renderManifest(m: Manifest): Array[Byte] = {
     val o = Json.createObjectNode()

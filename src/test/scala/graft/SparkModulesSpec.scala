@@ -5,16 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = Session.start(4)
 }
 
 class PipelineSparkSpec extends AnyFunSuite {
@@ -195,11 +186,11 @@ class PipelineSparkSpec extends AnyFunSuite {
 
   test("metrics accumulators count docs/pages/spans/quarantine") {
     import spark.implicits._
-    val m = new graft.metrics.ExtractMetrics(spark)
+    val obs = org.apache.spark.sql.Observation("graft.extract.test")
     val ds = graft.pipeline.Extract.extract(
       spark.createDataset(graft.fixtures.Fixtures.corpus(40).toSeq))
-    m.observeResults(ds).write.format("noop").mode("overwrite").save()
-    val snap = m.snapshot
+    Cli.observeCounts(ds, obs).write.format("noop").mode("overwrite").save()
+    val snap = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
     assert(snap("docs") == 40)
     assert(snap("pages") > 0 && snap("spans") > 0)
   }

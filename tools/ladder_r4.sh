@@ -15,7 +15,6 @@ OUT=${1:-/tmp/ladder_r4b.jsonl}
 : > "$OUT"
 export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-16g}
 export SPARK_GRAFT_JVM_OPTS="${SPARK_GRAFT_JVM_OPTS:--XX:+AlwaysPreTouch -XX:ParallelGCThreads=32}"
-export SPARK_GRAFT_BATCH=${SPARK_GRAFT_BATCH:-auto}
 for ROUND in 1 2 3; do
   for C in 2 8 32; do
     LINE=$(sbt -batch "runMain graft.ScalingBench run $C $CORPUS" 2>/dev/null | grep -o '{"cores".*}' || echo '{}')

@@ -10,8 +10,6 @@ export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-16g}
 # ergonomics key on app thread count — a single-JVM emulation artifact with
 # no cluster counterpart (each executor owns its GC). See BENCH/BASELINE.md.
 export SPARK_GRAFT_JVM_OPTS="${SPARK_GRAFT_JVM_OPTS:--XX:+AlwaysPreTouch -XX:ParallelGCThreads=32}"
-# byte-budgeted columnar batch size derived from the corpus (TableIO.autoBatchSize)
-export SPARK_GRAFT_BATCH=${SPARK_GRAFT_BATCH:-auto}
 # -Xms == -Xmx comes from build.sbt (pinned heap; growth-zeroing otherwise
 # lands inside the timed region and costs ~2x wall at local[32])
 echo "== gen $NDOCS docs"
@@ -22,4 +20,5 @@ for C in 2 4 8 16 32; do
   echo "== run local[$C]"
   sbt -batch "runMain graft.ScalingBench run $C $CORPUS" 2>/dev/null | grep -o '{"cores".*}'
 done
-echo "== update BENCH/BASELINE.md with the three JSON lines above"
+echo "== pick two JSON lines above (local[N] and local[4N]) and write BENCH/BASELINE.md:"
+echo "   sbt -batch \"runMain graft.ScalingBench report $NDOCS <N> '<jsonN>' '<json4N>'\""
