@@ -134,7 +134,7 @@ object Bench {
     // managed-input leg (r4 headline — the at-scale layout): the same 40k
     // corpus rewritten once UNTIMED via TableIO.writeContractInput (pushable
     // n_spans stats column, size-clustered 8 MB row groups), then the timed
-    // contract pass reads it through extractContractFromTable with the
+    // contract pass reads it through extractContract with the
     // byte-budgeted batch size derived from the table's own stats.
     val managedDir = sustainedDir.stripSuffix("/") + "_managed"
     // row-group size adapted to the corpus: readers cannot split inside a
@@ -147,10 +147,10 @@ object Bench {
     spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", managedBatch.toString)
     spark.conf.set("spark.sql.files.maxPartitionBytes",
       graft.io.TableIO.autoSplitBytes(managedDir, cpus).toString)
-    graft.pipeline.Extract.extractContractFromTable(spark, managedDir)
+    graft.pipeline.Extract.extractContract(spark.read.parquet(managedDir))
       .limit(1500).selectExpr("count(*)").collect() // JIT/codegen warmup
     val m0 = System.nanoTime()
-    val mStats = graft.pipeline.Extract.extractContractFromTable(spark, managedDir)
+    val mStats = graft.pipeline.Extract.extractContract(spark.read.parquet(managedDir))
       .filter(!org.apache.spark.sql.functions.col("quarantined"))
       .selectExpr("count(*) AS docs", "sum(num_pages) AS pages", "sum(coalesce(size(spans),0)) AS spans")
       .collect()(0)
@@ -198,7 +198,7 @@ object Bench {
     val mgdBatch = graft.io.TableIO.autoBatchSize(spark.read.parquet(pruneManagedDir)).toString
     val mgdSplit = graft.io.TableIO.autoSplitBytes(pruneManagedDir, cpus).toString
     def rawLegDf() = graft.pipeline.Extract.extractContract(pruneIn, skewSpanThreshold = pruneThreshold)
-    def mgdLegDf() = graft.pipeline.Extract.extractContractFromTable(spark, pruneManagedDir,
+    def mgdLegDf() = graft.pipeline.Extract.extractContract(spark.read.parquet(pruneManagedDir),
       skewSpanThreshold = pruneThreshold)
     def applyConf(batch: String, split: String): Unit = {
       spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", batch)

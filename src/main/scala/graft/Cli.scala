@@ -48,9 +48,9 @@ object Cli {
             val obs = Observation("graft.extract")
             val results = observeCounts(
               Extract.extract(in.selectExpr("cast(doc_id as string) doc_id", "spans").as[graft.model.RawDoc], cfg), obs)
-              .filter(!_.quarantined)
-            if (format == "text") Sinks.writeText(results.toDF(), s"$out/text")
-            else Sinks.writeJson(results.toDF(), s"$out/json")
+              .toDF().filter(!col("quarantined"))
+            if (format == "text") Sinks.writeText(results, s"$out/text")
+            else Sinks.writeJson(results, s"$out/json")
             val wall = (System.nanoTime() - t0) / 1e9
             // a sum over no rows is null, which unboxes to 0
             val counts = obs.get.map { case (k, v) => k -> v.asInstanceOf[Long] }

@@ -94,7 +94,7 @@ object ScalingBench {
 
     // managed-input leg: same corpus rewritten once (untimed) via
     // TableIO.writeContractInput (pushable n_spans, size-clustered row
-    // groups), then the timed pass uses extractContractFromTable — measures
+    // groups), then the timed pass reads it through extractContract — measures
     // what the stats column buys over the raw two-scan shape.
     case Some("stats") =>
       val cores = args(1).toInt
@@ -132,11 +132,11 @@ object ScalingBench {
         applyBatchSize(spark, statsPath)
         spark.conf.set("spark.sql.files.maxPartitionBytes",
           graft.io.TableIO.autoSplitBytes(statsPath, cores).toString)
-        graft.pipeline.Extract.extractContractFromTable(spark, statsPath,
+        graft.pipeline.Extract.extractContract(spark.read.parquet(statsPath),
           skewSpanThreshold = 512 * graft.kernel.Parse.SpansPerPage)
           .selectExpr("count(*)").collect() // warmup
         val t0 = System.nanoTime()
-        val row = graft.pipeline.Extract.extractContractFromTable(spark, statsPath,
+        val row = graft.pipeline.Extract.extractContract(spark.read.parquet(statsPath),
           skewSpanThreshold = 512 * graft.kernel.Parse.SpansPerPage, pageParallelism = cores * 4)
           .filter(!org.apache.spark.sql.functions.col("quarantined"))
           .selectExpr("count(*) AS docs", "sum(num_pages) AS pages",

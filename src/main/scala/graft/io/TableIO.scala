@@ -337,7 +337,7 @@ object TableIO {
   /** Write the contract input table WITH a `n_spans` stats column, range-
     * clustered by document size so giant docs land in their own files/row
     * groups. At 100 TB this is what makes the skew split's "second scan"
-    * free: `extractContractFromTable`'s big-leg predicate
+    * free: `Extract.extractContract`'s big-leg predicate
     * (`n_spans > threshold`) is an ordinary pushable column filter, so
     * parquet row-group min/max stats skip every non-giant row group instead
     * of decoding the whole corpus twice (the raw (doc_id, spans) input has

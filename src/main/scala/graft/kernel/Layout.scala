@@ -169,12 +169,10 @@ object Layout {
     detectColumnsByClusteringArr(xs, page.width)
   }
 
-  def detectColumnsByClustering(xPositions: Seq[Double], pageWidth: Double): Int =
-    detectColumnsByClusteringArr(xPositions.toArray, pageWidth)
-
-  /** Primitive-array form of detector 1 — identical arithmetic and branch
-    * order, no boxed collection ops (this runs on every page; the boxed
-    * folds were top self-frames in stack samples). */
+  /** Detector 1 over the x0 positions, on primitive arrays: no boxed
+    * collection ops (this runs on every page; the boxed folds were top
+    * self-frames in stack samples). Ends in the column-count estimate
+    * (layout_processor.py:279-297). */
   def detectColumnsByClusteringArr(xPositions: Array[Double], pageWidth: Double): Int = {
     if (xPositions.length == 0) return 1
     // distinct (first-occurrence, value-equal) then sorted == sorted + adjacent dedup
@@ -229,15 +227,6 @@ object Layout {
         else 4
       math.max(1, math.min(k, 4))
     } else 1
-  }
-
-  /** reference: layout_processor.py:279-297 */
-  def estimateColumnCount(pageWidth: Double, largeGaps: Seq[Double]): Int = {
-    if (largeGaps.isEmpty) return 1
-    val avgColumnGap = largeGaps.sum / largeGaps.length
-    if (avgColumnGap > pageWidth * 0.15) 2
-    else if (avgColumnGap > pageWidth * 0.08) 3
-    else 4
   }
 
   /** Detector 2: width heuristic + 2-means on x-centers
@@ -296,7 +285,7 @@ object Layout {
       }
     }
     if (rows == 0) return 1
-    // per-column sums + avg + high count (same arithmetic as the Seq form)
+    // per-column sums + avg + high count (layout_processor.py:530-558)
     var total = 0L
     var c = 0
     val colSums = new Array[Long](cols)
@@ -314,18 +303,6 @@ object Layout {
     var high = 0
     c = 0
     while (c < cols) { if (colSums(c) > threshold) high += 1; c += 1 }
-    if (high <= 1) 1 else if (high <= 2) 2 else if (high <= 3) 3 else 4
-  }
-
-  /** reference: layout_processor.py:530-558 (kept for tests/API; the hot
-    * path above inlines the same arithmetic over a flat grid) */
-  def analyzeDensityDistribution(density: Array[Array[Long]], cols: Int): Int = {
-    if (density.isEmpty) return 1
-    val columnDensities = (0 until cols).map(c => density.map(_(c)).sum)
-    if (columnDensities.isEmpty) return 1
-    val avg = columnDensities.sum.toDouble / columnDensities.length
-    val threshold = avg * 0.3
-    val high = columnDensities.count(_ > threshold)
     if (high <= 1) 1 else if (high <= 2) 2 else if (high <= 3) 3 else 4
   }
 
@@ -486,21 +463,5 @@ object Layout {
     }
     if (currentRow.nonEmpty) groups :+= currentRow
     groups
-  }
-
-  /** Reading-direction stub: always "ltr" (both branches of the reference
-    * return "ltr" — layout_processor.py:428-448). The CJK ratio is computed
-    * for parity. */
-  def detectReadingDirection(blocks: Seq[TextBlock]): String = {
-    if (blocks.isEmpty) return "ltr"
-    var chinese = 0L; var total = 0L
-    blocks.foreach { b =>
-      if (b.text != null) b.text.foreach { ch =>
-        total += 1
-        if (ch >= '一' && ch <= '鿿') chinese += 1
-      }
-    }
-    val _ = (chinese, total)
-    "ltr"
   }
 }

@@ -138,7 +138,6 @@ final case class DocResult(
 ) {
   /** Page-keyed lookups (reference: models.py:218-229). */
   def tablesByPage(n: Int): Seq[TableResult] = tables.filter(_.page_number == n)
-  def imagesByPage(n: Int): Seq[ImageResult] = images.filter(_.page_number == n)
 }
 
 /** Extraction configuration (reference: config.py:9-76). Dead knobs of the
@@ -191,46 +190,3 @@ final case class ExtractConfig(
 object ExtractConfig {
   val default: ExtractConfig = { val c = ExtractConfig(); c.validate(); c }
 }
-
-// ---------------------------------------------------------------------------
-// Public-API-parity sub-configs. The reference declares these but no
-// processor consumes them (config.py:79-135 — OCRConfig/LayoutConfig/
-// TableConfig are never referenced outside config.py); modeled for users
-// porting reference-consuming code, documented inert like the dead knobs.
-// ---------------------------------------------------------------------------
-
-/** reference: config.py:79-95 (unused by any processor). */
-final case class OcrConfig(
-    engine: String = "tesseract",
-    language: String = "chi_sim+eng",
-    config: String = "--psm 6",
-    timeoutSec: Int = 30,
-    dpi: Int = 300,
-    easyocrGpu: Boolean = false,
-    easyocrModelPath: Option[String] = None,
-    tesseractPath: Option[String] = None,
-    tesseractConfig: Map[String, String] = Map.empty)
-
-/** reference: config.py:98-115 (unused by any processor). */
-final case class LayoutConfig(
-    detectHeaders: Boolean = true,
-    detectFooters: Boolean = true,
-    detectColumns: Boolean = true,
-    detectLists: Boolean = true,
-    detectTables: Boolean = true,
-    headerThreshold: Double = 0.1,
-    footerThreshold: Double = 0.1,
-    columnGapThreshold: Double = 50,
-    modelPath: Option[String] = None,
-    confidenceThreshold: Double = 0.7)
-
-/** reference: config.py:118-135 (unused by any processor). */
-final case class TableConfig(
-    detectionMethod: String = "auto",
-    minCells: Int = 4,
-    minRows: Int = 2,
-    minCols: Int = 2,
-    lineThreshold: Double = 0.8,
-    cellPadding: Int = 5,
-    tableConfidenceThreshold: Double = 0.7,
-    tableModelPath: Option[String] = None)

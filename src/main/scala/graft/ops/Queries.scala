@@ -51,20 +51,20 @@ object Queries {
       |  columns={'src_id':'BIGINT','doc_id':'VARCHAR','n_spans':'INTEGER','n_pages':'INTEGER',
       |           'text_len':'INTEGER','fitz_len':'INTEGER','plumber_len':'INTEGER'})""".stripMargin
 
-  private val qExtractSpans: Q = (spark, sfDir) => {
-    import spark.implicits._
-    val docs = graft.SparkEntry.rawDocs(spark, sfDir)
-    graft.pipeline.Extract.extract(docs)
-      .filter(!_.quarantined)
-      .map(r => (r.doc_id, r.spans.length, r.num_pages, r.text.length))
-      .toDF("doc_id", "n_spans", "n_pages", "text_len")
-  }
+  /** q01/q02's columns of the non-quarantined results. `length` counts code
+    * points, as the reference's `len` does. */
+  private def extractedCounts(results: DataFrame): DataFrame = results
+    .filter(!col("quarantined"))
+    .select(col("doc_id"), size(col("spans")).as("n_spans"), col("num_pages").as("n_pages"),
+      length(col("text")).as("text_len"))
+
+  private val qExtractSpans: Q = (spark, sfDir) =>
+    extractedCounts(graft.pipeline.Extract.extract(graft.SparkEntry.rawDocs(spark, sfDir)).toDF())
   private val oExtractSpans =
     s"""SELECT e.doc_id, e.n_spans, e.n_pages, e.text_len
        |FROM documents d JOIN $ExpectedCsv e ON d.doc_id = e.src_id""".stripMargin
 
   private val qExtractSkewAware: Q = (spark, sfDir) => {
-    import spark.implicits._
     // Materialize the GENERATED corpus once (r6): the small/big split of
     // Extract.extractContract's two legs consumes its input twice (two
     // size-filter branches). For a parquet input the second scan re-reads
@@ -75,24 +75,12 @@ object Queries {
     // once and both branches read the blocks — guide §5's reuse-not-recompute case; at
     // cluster scale this is exactly "materialize the expensive input, then
     // split", never a cache of results across runs.
-    val docs = graft.SparkEntry.rawDocs(spark, sfDir).localCheckpoint(eager = false)
-    // Same two legs as Extract.extractContract (narrow kernel below the
-    // span threshold, page-split scatter/regather above it), but the slim
-    // 4-column projection is applied PER LEG, before the union (guide §2.3
-    // "project before the exchange"): a typed union of full DocResults
-    // serialized every page/table/image of every doc through the nested
-    // encoder only to be thrown away by this projection.
-    val thr = 8 * graft.kernel.Parse.SpansPerPage
-    val nSpans = coalesce(size(col("spans")), lit(0))
-    val small = docs.filter(nSpans <= thr)
-    val big = docs.filter(nSpans > thr)
-    def slim(ds: org.apache.spark.sql.Dataset[graft.model.DocResult]) = ds
-      .filter(!_.quarantined)
-      .map(r => (r.doc_id, r.spans.length, r.num_pages, r.text.length))
-      .toDF("doc_id", "n_spans", "n_pages", "text_len")
-    slim(graft.pipeline.Extract.extract(small))
-      .unionByName(slim(graft.pipeline.Extract.pageSplitDocResults(
-        big, graft.model.ExtractConfig.default, 0)))
+    val docs = graft.SparkEntry.rawDocs(spark, sfDir).toDF().localCheckpoint(eager = false)
+    // Extract.extractContract's two legs (narrow kernel below the span
+    // threshold, page-split scatter/regather above it) at an 8-page
+    // threshold, both writing whole results
+    extractedCounts(graft.pipeline.Extract.splitContract(docs, graft.pipeline.GraftExtract.Results,
+      graft.model.ExtractConfig.default, 8 * graft.kernel.Parse.SpansPerPage, 0))
   }
 
   private val qAdaptiveEngines: Q = (spark, sfDir) => {

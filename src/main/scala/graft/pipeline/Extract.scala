@@ -1,11 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, StructType}
 import graft.model._
-import graft.kernel.{Extractor, Parse}
+import graft.kernel.Parse
 
 /** The Dataset-level extraction pipeline.
   *
@@ -14,12 +15,14 @@ import graft.kernel.{Extractor, Parse}
   * partitioning; the reference's per-page thread pool (core.py:184-205)
   * disappears.
   *
-  * Plan: every entry but the typed [[extract]], batch or streaming, builds
-  * an ordinary Catalyst plan around one logical node, [[GraftExtract]],
-  * planned as [[GraftExtractExec]] by [[GraftExtractStrategy]] (installed
-  * on the session by every entry). Its three kinds run the kernel over
+  * Plan: every entry, typed or not, batch or streaming, builds an ordinary
+  * Catalyst plan around one logical node, [[GraftExtract]], planned as
+  * [[GraftExtractExec]] by [[GraftExtractStrategy]] (installed on the
+  * session by every entry). Its three kinds run the kernel over
   * `InternalRow`s: `Doc` (narrow leg), `Page` and `Finalize` (the giant
-  * leg's scatter and regather). The plan is planned once, inside the
+  * leg's scatter and regather); `Doc` and `Finalize` write the contract
+  * columns or, for [[extract]], whole [[DocResult]]s through their encoder's
+  * serializer. The plan is planned once, inside the
   * consuming action (or each micro-batch), keeps the scans visible to
   * `explain` (filter pushdown, column pruning), and carries no encoder
   * expression trees; each node reports docs, pages, spans, kernel time and
@@ -41,11 +44,10 @@ import graft.kernel.{Extractor, Parse}
   */
 object Extract {
 
-  /** Narrow path: one doc per kernel call. */
-  def extract(ds: Dataset[RawDoc], cfg: ExtractConfig = ExtractConfig.default): Dataset[DocResult] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[DocResult]
-    ds.mapPartitions(_.map(doc => Extractor.extractDoc(doc, cfg)))
-  }
+  /** Typed narrow path: one doc per kernel call, in the `Doc` node writing
+    * whole results. */
+  def extract(ds: Dataset[RawDoc], cfg: ExtractConfig = ExtractConfig.default): Dataset[DocResult] =
+    docLeg(ds.toDF(), GraftExtract.Results, cfg).as(Encoders.product[DocResult])
 
   /** The giant leg's scatter side: giant docs -> per-page work units, spread
     * wide by (doc_id, page_no), one `GraftExtract` Page kernel per page
@@ -68,7 +70,7 @@ object Extract {
     * int-division semantics (double-divide + int cast truncates toward
     * zero); span order within a page = stable offset-sort, reproduced by
     * sorting (offset, original position). */
-  private[graft] def pageLeg(big: DataFrame, cfg: ExtractConfig, pageParallelism: Int): DataFrame = {
+  private def pageLeg(big: DataFrame, cfg: ExtractConfig, pageParallelism: Int): DataFrame = {
     val parallelism = if (pageParallelism > 0) pageParallelism
       else big.sparkSession.sparkContext.defaultParallelism
     // Null span ELEMENTS become sentinel rows (page_no = Int.MinValue)
@@ -90,92 +92,87 @@ object Extract {
           .otherwise((offset / lit(Parse.SpansPerPage)).cast("int")).as("page_no"))
       .repartition(parallelism, col("doc_id"), col("page_no"))
       .sortWithinPartitions(col("doc_id"), col("page_no"), col("offset"), col("pos"))
-    node(GraftExtract.Page, cfg, units)
+    node(GraftExtract.Page, GraftExtract.Contract, cfg, units)
   }
 
-  /** Page-split leg emitting full results: the typed regather over
-    * [[pageLeg]]. (private[graft]: q02 composes it directly so the slim
-    * projection happens BEFORE the union — a typed union of full DocResults
-    * forces every row through the fat nested encoder just to be projected
-    * down to four fields afterwards.) */
-  private[graft] def pageSplitDocResults(big: Dataset[RawDoc], cfg: ExtractConfig,
-      pageParallelism: Int): Dataset[DocResult] = {
-    val spark = big.sparkSession
-    import spark.implicits._
-    implicit val pageEnc = org.apache.spark.sql.Encoders.product[(String, Int, PageResult)]
-    implicit val docEnc = org.apache.spark.sql.Encoders.product[DocResult]
-    pageLeg(big.toDF(), cfg, pageParallelism)
-      .select("doc_id", "page_no", "page").as[(String, Int, PageResult)]
-      .groupByKey(_._1)
-      .mapGroups { (docId, it) =>
-        val pages = it.toVector.filter(_._2 != Int.MinValue).sortBy(_._2).map(_._3)
-        GraftExtract.finalizePages(docId, pages, cfg)
-      }
-  }
-
-  /** `child` under a `GraftExtract` node of the given kind. */
-  private def node(kind: GraftExtract.Kind, cfg: ExtractConfig, child: DataFrame): DataFrame = {
+  /** `child` under a `GraftExtract` node of the given kind and shape. */
+  private[graft] def node(kind: GraftExtract.Kind, shape: GraftExtract.Shape, cfg: ExtractConfig,
+      child: DataFrame): DataFrame = {
     val spark = child.sparkSession
     GraftExtractStrategy.install(spark)
     val plan = child.queryExecution.analyzed
-    Bridge.dataFrame(spark, GraftExtract(kind, cfg, plan.output,
-      DataTypeUtils.toAttributes(GraftExtract.schemaOf(kind)), plan))
+    Bridge.dataFrame(spark, GraftExtract(kind, shape, cfg, plan.output,
+      DataTypeUtils.toAttributes(GraftExtract.schemaOf(kind, shape)), plan))
   }
+
+  /** The span struct the `Doc` kernel loop reads by field position. */
+  private val SpanType: StructType =
+    GraftExtract.ContractSchema("spans").dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+
+  /** The input's doc_id and spans. A span struct that does not start with
+    * [[SpanType]]'s fields, in order and type, is rebuilt by field name (a
+    * null element stays null), so any field order reads right; the
+    * contract's own layout passes through untouched. */
+  private def docColumns(input: DataFrame): DataFrame = {
+    def fields(st: StructType) = st.fields.toSeq.map(f => (f.name, f.dataType))
+    val spans = input.schema("spans").dataType match {
+      case ArrayType(st: StructType, _) if fields(st).take(SpanType.length) == fields(SpanType) => col("spans")
+      case _ => transform(col("spans"), s => when(s.isNotNull,
+        struct(SpanType.fields.toSeq.map(f => s(f.name).cast(f.dataType).as(f.name)): _*)))
+    }
+    input.select(col("doc_id").cast("string").as("doc_id"), spans.as("spans"))
+  }
+
+  /** The `Doc` node over the input's doc_id and spans. */
+  private def docLeg(input: DataFrame, shape: GraftExtract.Shape, cfg: ExtractConfig): DataFrame =
+    node(GraftExtract.Doc, shape, cfg, docColumns(input))
 
   /** Extraction over the contract input table
     * (doc_id, spans ARRAY<STRUCT<kind,text,media_ref,offset>>), batch or
     * streaming: one `GraftExtract` Doc node, the single-copy InternalRow
     * kernel loop; returns the contract columns. */
   def extractSpansDF(input: DataFrame, cfg: ExtractConfig = ExtractConfig.default): DataFrame =
-    node(GraftExtract.Doc, cfg, input.select(col("doc_id").cast("string").as("doc_id"), col("spans")))
+    docLeg(input, GraftExtract.Contract, cfg)
 
-  /** The size split both contract entries share: docs whose `nSpans` is at
-    * most `skewSpanThreshold` take the Doc node, giants take [[pageLeg]] and
-    * the regather per doc with explicit page ordering into one `GraftExtract`
-    * Finalize kernel per doc. Both legs read only doc_id and spans. */
-  private def splitContract(input: DataFrame, nSpans: Column, cfg: ExtractConfig,
+  /** The size split: docs with at most `skewSpanThreshold` spans take the
+    * Doc node, giants take [[pageLeg]] and the regather per doc with
+    * explicit page ordering into one `GraftExtract` Finalize kernel per doc.
+    * Both legs read only doc_id and spans and write `shape`.
+    *
+    * The span count is the input's `n_spans` column when it has one (the
+    * managed table `TableIO.writeContractInput` writes, range-clustered by
+    * it): both legs' size predicates then reach the parquet scan
+    * (`PushedFilters: [LessThanOrEqual/GreaterThan(n_spans, ...)]`), so
+    * row-group min/max stats skip the non-matching groups and the big leg
+    * costs ~zero I/O when no giants exist, instead of a full second decode
+    * of the corpus. Without it the split counts the raw spans, a column
+    * predicate evaluated on the columnar batch before any kernel. */
+  private[graft] def splitContract(input: DataFrame, shape: GraftExtract.Shape, cfg: ExtractConfig,
       skewSpanThreshold: Int, pageParallelism: Int): DataFrame = {
-    if (cfg.engine != "core") return extractSpansDF(input, cfg) // page-0 engines: narrow only
+    if (cfg.engine != "core") return docLeg(input, shape, cfg) // page-0 engines: narrow only
+    val nSpans =
+      if (input.columns.contains("n_spans")) col("n_spans") else coalesce(size(col("spans")), lit(0))
     // giants with a null doc_id stay narrow, where they quarantine
-    val small = extractSpansDF(input.filter(nSpans <= skewSpanThreshold || col("doc_id").isNull), cfg)
-    val giants = input.filter(nSpans > skewSpanThreshold && col("doc_id").isNotNull)
-      .select(col("doc_id").cast("string").as("doc_id"), col("spans"))
-    small.unionByName(node(GraftExtract.Finalize, cfg, pageLeg(giants, cfg, pageParallelism)
+    val small = docLeg(input.filter(nSpans <= skewSpanThreshold || col("doc_id").isNull), shape, cfg)
+    val giants = docColumns(input.filter(nSpans > skewSpanThreshold && col("doc_id").isNotNull))
+    small.unionByName(node(GraftExtract.Finalize, shape, cfg, pageLeg(giants, cfg, pageParallelism)
       .repartition(col("doc_id"))
       .sortWithinPartitions(col("doc_id"), col("page_no"))))
   }
 
-  /** The raw span count: the size split as a column predicate, evaluated on
-    * the columnar batch before any kernel. */
-  private def rawSpanCount: Column = coalesce(size(col("spans")), lit(0))
-
-  /** Contract pipeline over a size-statted managed table
-    * (written by `TableIO.writeContractInput`, which adds a pushable
-    * `n_spans` column and range-clusters by it): identical semantics to
-    * [[extractContract]], but both legs' size predicates reach the parquet
-    * scan (`PushedFilters: [LessThanOrEqual/GreaterThan(n_spans, ...)]`),
-    * so row-group min/max stats skip the non-matching groups — the big leg
-    * costs ~zero I/O when no giants exist, instead of a full second decode
-    * of the corpus. This is the at-scale input layout. */
+  /** [[extractContract]] over the parquet table at `path` (perfbench's
+    * managed-table legs call it). */
   def extractContractFromTable(
       spark: SparkSession,
       path: String,
       cfg: ExtractConfig = ExtractConfig.default,
       skewSpanThreshold: Int = 512 * Parse.SpansPerPage,
-      pageParallelism: Int = 0): DataFrame = {
-    val input = spark.read.parquet(path)
-    // fallback (VERDICT r04 #1): a table without the n_spans stats column —
-    // e.g. a raw contract table pointed at this entry by mistake, or a
-    // catalog whose stats rewrite has not run yet — splits on the raw span
-    // count instead of failing on an unresolved column; the managed path is
-    // an optimization, never a correctness requirement
-    val nSpans = if (input.columns.contains("n_spans")) col("n_spans") else rawSpanCount
-    splitContract(input, nSpans, cfg, skewSpanThreshold, pageParallelism)
-  }
+      pageParallelism: Int = 0): DataFrame =
+    extractContract(spark.read.parquet(path), cfg, skewSpanThreshold, pageParallelism)
 
   /** Production contract entry: input table -> output table, fast columnar
     * path for typical docs + page-split path for giants beyond
-    * `skewSpanThreshold` (raw spans; default 512 pages' worth). Both legs
+    * `skewSpanThreshold` (spans; default 512 pages' worth). Both legs
     * emit the contract schema; the plan has exactly two scans of the input
     * (small leg + giant leg — the giant leg feeds [[pageLeg]] directly, no
     * third scan).
@@ -190,5 +187,5 @@ object Extract {
       cfg: ExtractConfig = ExtractConfig.default,
       skewSpanThreshold: Int = 512 * Parse.SpansPerPage,
       pageParallelism: Int = 0): DataFrame =
-    splitContract(input, rawSpanCount, cfg, skewSpanThreshold, pageParallelism)
+    splitContract(input, GraftExtract.Contract, cfg, skewSpanThreshold, pageParallelism)
 }

@@ -21,7 +21,7 @@ import graft.model._
   * the kernel over the child's `InternalRow`s.
   *
   *   - `Doc` (narrow leg): input (doc_id, spans); one [[Extractor.extractDoc]]
-  *     per row; output the six contract columns.
+  *     per row; output one row per doc in the node's `shape`.
   *   - `Page` (giant leg, scatter side): input the posexploded span rows
   *     (doc_id, pos, kind, text, media_ref, offset, page_no), clustered and
   *     sorted by (doc_id, page_no, offset, pos); one [[Extractor.extractPage]]
@@ -31,13 +31,16 @@ import graft.model._
   *     instead, and sentinel runs (page_no = Int.MinValue) carry neither.
   *   - `Finalize` (giant leg, regather side): input the `Page` output
   *     clustered by doc_id and sorted by (doc_id, page_no); one
-  *     [[Extractor.finalizeDoc]] per doc run; output the contract columns.
+  *     [[Extractor.finalizeDoc]] per doc run; output as `Doc`.
+  *
+  * The `shape` of `Doc` and `Finalize` output is either the six contract
+  * columns or the whole [[DocResult]]; `Page` ignores it.
   *
   * `input` lists the child attributes the node reads, in the kind's input
   * order; it keeps them referenced, so column pruning cannot cut them from
   * the child. */
-final case class GraftExtract(kind: GraftExtract.Kind, cfg: ExtractConfig, input: Seq[Attribute],
-    output: Seq[Attribute], child: LogicalPlan) extends UnaryNode {
+final case class GraftExtract(kind: GraftExtract.Kind, shape: GraftExtract.Shape, cfg: ExtractConfig,
+    input: Seq[Attribute], output: Seq[Attribute], child: LogicalPlan) extends UnaryNode {
   override def producedAttributes: AttributeSet = outputSet
   override def nodeName: String = s"GraftExtract $kind"
   override protected def stringArgs: Iterator[Any] = Iterator.empty
@@ -49,6 +52,13 @@ object GraftExtract {
   case object Doc extends Kind
   case object Page extends Kind
   case object Finalize extends Kind
+
+  /** What a row-emitting kind writes per doc. */
+  sealed trait Shape
+  /** The six contract columns ([[ContractSchema]]). */
+  case object Contract extends Shape
+  /** The whole [[DocResult]], as its encoder's columns. */
+  case object Results extends Shape
 
   /** Contract output schema (doc_id, spans, num_pages, quarantined, error, error_code). */
   val ContractSchema: StructType = StructType(Seq(
@@ -67,6 +77,7 @@ object GraftExtract {
     * thread-safe: each task creates its own. */
   private lazy val PageEncoder: ExpressionEncoder[PageResult] = ExpressionEncoder[PageResult]()
   private lazy val PageDecoder: ExpressionEncoder[PageResult] = PageEncoder.resolveAndBind()
+  private lazy val ResultEncoder: ExpressionEncoder[DocResult] = ExpressionEncoder[DocResult]()
 
   /** `Page` output schema; the plan carries the page as this struct type. */
   lazy val PageSchema: StructType = StructType(Seq(
@@ -76,15 +87,16 @@ object GraftExtract {
     StructField("error", StringType),
     StructField("error_code", StringType)))
 
-  /** Output schema of a kind. */
-  def schemaOf(kind: Kind): StructType = if (kind == Page) PageSchema else ContractSchema
+  /** Output schema of a kind in a shape. */
+  def schemaOf(kind: Kind, shape: Shape): StructType =
+    if (kind == Page) PageSchema else if (shape == Results) ResultEncoder.schema else ContractSchema
 
   /** The error codes a quarantined row can carry, one metric each. */
   private val QuarantineCodes = Seq(ErrorCode.NullDocId, ErrorCode.Encrypted, ErrorCode.ParseError)
 
   /** Per-doc finalize of the giant leg: a kernel exception quarantines the
     * doc, as [[Extractor.extractDoc]] does on the narrow leg. */
-  private[graft] def finalizePages(docId: String, pages: Seq[PageResult], cfg: ExtractConfig): DocResult =
+  private def finalizePages(docId: String, pages: Seq[PageResult], cfg: ExtractConfig): DocResult =
     try Extractor.finalizeDoc(docId, pages, cfg)
     catch { case NonFatal(e) => Extractor.quarantined(docId, e) }
 
@@ -121,7 +133,7 @@ object GraftExtract {
 
   /** A contract row as one UnsafeRow: one codegen'd projection writes the
     * whole ARRAY<STRUCT> in a single pass. The returned row is reused. */
-  private final class ContractWriter {
+  private final class ContractWriter extends (DocResult => InternalRow) {
     private val proj = UnsafeProjection.create(ContractSchema)
     def apply(r: DocResult): InternalRow = {
       val spanRows = new Array[Any](r.spans.length)
@@ -146,7 +158,13 @@ object GraftExtract {
     }
   }
 
-  /** The contract counters of one task, for the row-emitting kinds. */
+  /** The row writer of one task for a shape; the returned row is reused. */
+  private def writer(shape: Shape): DocResult => InternalRow = shape match {
+    case Contract => new ContractWriter
+    case Results => ResultEncoder.createSerializer()
+  }
+
+  /** The doc counters of one task, for the row-emitting kinds. */
   private final class DocCounters(m: Map[String, SQLMetric]) {
     private val docs = m("docs")
     private val pages = m("pages")
@@ -160,10 +178,10 @@ object GraftExtract {
     }
   }
 
-  private def docRows(rows: Iterator[InternalRow], in: Seq[Int], cfg: ExtractConfig,
+  private def docRows(rows: Iterator[InternalRow], in: Seq[Int], shape: Shape, cfg: ExtractConfig,
       m: Map[String, SQLMetric]): Iterator[InternalRow] = {
     val Seq(idO, spansO) = in
-    val write = new ContractWriter
+    val write = writer(shape)
     val countDoc = new DocCounters(m)
     val kernelTime = m("kernelTime")
     rows.map { row =>
@@ -226,12 +244,12 @@ object GraftExtract {
     }
   }
 
-  private def finalizeRows(rows: Iterator[InternalRow], in: Seq[Int], cfg: ExtractConfig,
+  private def finalizeRows(rows: Iterator[InternalRow], in: Seq[Int], shape: Shape, cfg: ExtractConfig,
       m: Map[String, SQLMetric]): Iterator[InternalRow] = {
     val Seq(idO, pageNoO, pageO, errorO, codeO) = in
     val deserialize = PageDecoder.createDeserializer()
     val pageFields = PageEncoder.schema.length
-    val write = new ContractWriter
+    val write = writer(shape)
     val countDoc = new DocCounters(m)
     val kernelTime = m("kernelTime")
     val it = rows.buffered
@@ -264,15 +282,15 @@ object GraftExtract {
     }
   }
 
-  private[pipeline] def run(kind: Kind, rows: Iterator[InternalRow], in: Seq[Int], cfg: ExtractConfig,
-      m: Map[String, SQLMetric]): Iterator[InternalRow] = kind match {
-    case Doc => docRows(rows, in, cfg, m)
+  private[pipeline] def run(kind: Kind, shape: Shape, rows: Iterator[InternalRow], in: Seq[Int],
+      cfg: ExtractConfig, m: Map[String, SQLMetric]): Iterator[InternalRow] = kind match {
+    case Doc => docRows(rows, in, shape, cfg, m)
     case Page => pageRows(rows, in, cfg, m)
-    case Finalize => finalizeRows(rows, in, cfg, m)
+    case Finalize => finalizeRows(rows, in, shape, cfg, m)
   }
 
   /** Metric keys and display names of a kind: the row-emitting kinds count
-    * the contract rows they write; `Page` counts the page kernels it ran. */
+    * the docs they write; `Page` counts the page kernels it ran. */
   private[pipeline] def metricNames(kind: Kind): Seq[(String, String)] = {
     val counts =
       if (kind == Page) Seq("pages" -> "number of pages")
@@ -285,8 +303,8 @@ object GraftExtract {
 /** Physical [[GraftExtract]]: the kernel loop over the child's rows, with
   * its counters as SQL metrics (shown by `explain("formatted")` and sent to
   * listeners with every task). */
-final case class GraftExtractExec(kind: GraftExtract.Kind, cfg: ExtractConfig, input: Seq[Attribute],
-    output: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
+final case class GraftExtractExec(kind: GraftExtract.Kind, shape: GraftExtract.Shape, cfg: ExtractConfig,
+    input: Seq[Attribute], output: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
 
   override lazy val metrics: Map[String, SQLMetric] = GraftExtract.metricNames(kind).map {
     case (key, name) if key == "kernelTime" => key -> SQLMetrics.createNanoTimingMetric(sparkContext, name)
@@ -299,8 +317,8 @@ final case class GraftExtractExec(kind: GraftExtract.Kind, cfg: ExtractConfig, i
 
   override protected def doExecute(): RDD[InternalRow] = {
     val in = input.map(a => child.output.indexWhere(_.exprId == a.exprId))
-    val (k, c, m) = (kind, cfg, metrics)
-    child.execute().mapPartitions(rows => GraftExtract.run(k, rows, in, c, m))
+    val (k, s, c, m) = (kind, shape, cfg, metrics)
+    child.execute().mapPartitions(rows => GraftExtract.run(k, s, rows, in, c, m))
   }
 
   override def verboseStringWithOperatorId(): String = {
@@ -321,8 +339,8 @@ final case class GraftExtractExec(kind: GraftExtract.Kind, cfg: ExtractConfig, i
 /** Plans [[GraftExtract]] as [[GraftExtractExec]]. */
 object GraftExtractStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case GraftExtract(kind, cfg, input, output, child) =>
-      GraftExtractExec(kind, cfg, input, output, planLater(child)) :: Nil
+    case GraftExtract(kind, shape, cfg, input, output, child) =>
+      GraftExtractExec(kind, shape, cfg, input, output, planLater(child)) :: Nil
     case _ => Nil
   }
 

@@ -89,6 +89,27 @@ class PlanSpec extends AnyFunSuite {
     assert(got == rows(typed.toDF()))
   }
 
+  test("typed extract, q01 and q02 run the kernel only in GraftExtractExec, with no typed operator around it") {
+    import org.apache.spark.sql.execution.{ObjectConsumerExec, ObjectProducerExec}
+    import graft.pipeline.GraftExtractExec
+    object AQE extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // SparkEntry.rawDocs' id -> RawDoc generator: the one object operator left
+    val generator = Set("DeserializeToObject", "MapElements", "SerializeFromObject")
+    def check(what: String, df: org.apache.spark.sql.DataFrame, kinds: Seq[String]): Unit = {
+      val plan = df.queryExecution.executedPlan
+      val text = plan.toString
+      val nodes = AQE.collect(plan) { case g: GraftExtractExec => g.kind.toString }
+      assert(nodes.sorted == kinds.sorted, s"$what: $nodes\n$text")
+      for (op <- Seq("MapPartitions", "MapGroups", "AppendColumns"))
+        assert(!text.contains(op), s"$what: $op in\n$text")
+      val objectOps = AQE.collect(plan) { case p @ (_: ObjectConsumerExec | _: ObjectProducerExec) => p.nodeName }
+      assert(objectOps.forall(generator) && objectOps.distinct == objectOps, s"$what: $objectOps\n$text")
+    }
+    check("Extract.extract", graft.pipeline.Extract.extract(graft.SparkEntry.rawDocs(spark, sf)).toDF(), Seq("Doc"))
+    check("q01", ops.Queries.all("q01_extract_spans")(spark, sf), Seq("Doc"))
+    check("q02", ops.Queries.all("q02_extract_skew_aware")(spark, sf), Seq("Doc", "Page", "Finalize"))
+  }
+
   test("q26 join carries no broadcast hint on the corpus-sized side (VERDICT r01)") {
     val df = ops.Queries.all("q26_ngram_jaccard")(spark, sf)
     // the optimized logical plan must be hint-free: AQE may still broadcast

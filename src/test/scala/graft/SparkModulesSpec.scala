@@ -23,11 +23,15 @@ class PipelineSparkSpec extends AnyFunSuite {
       .as[(String, String, Int, Boolean)].collect().sortBy(_._1).toSeq
   }
 
-  /** The typed narrow path projected to the contract columns. */
+  /** The kernel-direct reference projected to the contract columns:
+    * `Extractor.extractDoc` over the collected docs on the driver, so the
+    * Spark paths are compared with the kernel, not with the node itself. */
   private def typedCanon(ds: org.apache.spark.sql.Dataset[graft.model.RawDoc],
-      cfg: graft.model.ExtractConfig = graft.model.ExtractConfig.default) =
-    canon(graft.pipeline.Extract.extract(ds, cfg).toDF()
-      .select("doc_id", "spans", "num_pages", "quarantined"))
+      cfg: graft.model.ExtractConfig = graft.model.ExtractConfig.default) = {
+    import spark.implicits._
+    val direct = ds.collect().toSeq.map(graft.kernel.Extractor.extractDoc(_, cfg))
+    canon(spark.createDataset(direct).toDF().select("doc_id", "spans", "num_pages", "quarantined"))
+  }
 
   /** Row-by-row equality of two canon forms, naming the divergent doc. */
   private def assertSameRows(narrow: Seq[(String, String, Int, Boolean)],
@@ -89,6 +93,21 @@ class PipelineSparkSpec extends AnyFunSuite {
     val ds = spark.createDataset(docs.toSeq ++ allNull)
     val split = canon(graft.pipeline.Extract.extractContract(ds.toDF(), skewSpanThreshold = 0))
     assertSameRows(typedCanon(ds), split, "adversarial page-split")
+  }
+
+  test("span struct fields are read by name, in any field order") {
+    import spark.implicits._
+    val ds = spark.createDataset(graft.fixtures.Fixtures.corpus(20).toSeq ++ Seq(
+      graft.model.RawDoc("nulls", Vector(null, graft.model.Span("text", "x", "", 0)))))
+    val reordered = ds.toDF().select(col("doc_id"), transform(col("spans"), s => when(s.isNotNull,
+      struct(s("text").as("text"), s("offset").as("offset"), s("kind").as("kind"), s("media_ref").as("media_ref"))))
+      .as("spans"))
+    val direct = typedCanon(ds)
+    assertSameRows(direct, canon(graft.pipeline.Extract.extract(reordered.as[graft.model.RawDoc]).toDF()
+      .select("doc_id", "spans", "num_pages", "quarantined")), "typed extract")
+    assertSameRows(direct, canon(graft.pipeline.Extract.extractContract(reordered)), "contract")
+    assertSameRows(direct, canon(graft.pipeline.Extract.extractContract(reordered, skewSpanThreshold = 0)),
+      "page-split contract")
   }
 
   test("skew-aware entry points honor cfg.engine (ADVICE r01: big docs must not silently run core)") {
@@ -178,8 +197,16 @@ class PipelineSparkSpec extends AnyFunSuite {
   }
 
   test("giant-leg finalize quarantines a kernel exception instead of throwing") {
+    import spark.implicits._
+    import graft.pipeline.{Extract, GraftExtract}
+    // a page without text blocks makes Extractor.finalizeDoc throw; the
+    // Finalize node over that Page-shaped row must quarantine the doc
     val broken = graft.model.PageResult(page_number = 1, text_blocks = null)
-    val r = graft.pipeline.GraftExtract.finalizePages("giant-1", Seq(broken), graft.model.ExtractConfig.default)
+    val pages = Seq(("giant-1", 1, broken)).toDF("doc_id", "page_no", "page")
+      .withColumn("error", lit(null).cast("string"))
+      .withColumn("error_code", lit(null).cast("string"))
+    val Array(r) = Extract.node(GraftExtract.Finalize, GraftExtract.Results, graft.model.ExtractConfig.default,
+      pages).as[graft.model.DocResult].collect()
     assert(r.quarantined && r.error_code == graft.model.ErrorCode.ParseError, r.toString)
     assert(r.doc_id == "giant-1" && r.spans.isEmpty && r.num_pages == 0)
   }
