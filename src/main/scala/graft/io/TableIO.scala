@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
@@ -28,26 +28,34 @@ import org.apache.parquet.io.{LocalInputFile, LocalOutputFile, OutputFile}
   * Layout under `root/` (a local path; every file here is read and written
   * through java.nio):
   *   data/snapshot=<id>/part-*.parquet      immutable snapshot data
+  *     (resumable: data/snapshot=<id>/doc_bucket=<b>/part-*.parquet)
   *   _manifests/<id>.json                   committed manifest (atomic rename)
   *   _manifests/CURRENT                     name of the live snapshot
+  *   _manifests/buckets-<id>/bucket-<b>.done  resumable: bucket b is final
+  *   _manifests/buckets-<id>/run.json         resumable: the run's inputs
   *
   * Commit protocol of both snapshot writers: each task writes its rows into
   * hidden (`.`-prefixed) staging files named for its task attempt and
-  * returns (file, rows, bytes); the driver renames them to `part-*` names,
-  * deletes whatever else the directories it wrote hold (staging files of
-  * failed or speculative attempts, data of a crashed earlier attempt) and
-  * commits. The manifest plus the atomic swap of CURRENT is the only
-  * commit: no Hadoop `FileSystem`, output committer, `_SUCCESS` or `.crc`
-  * file is involved. Snapshot files take the session's Parquet compression
-  * codec and TableIO's fixed write options; the session's Hadoop
-  * `parquet.*` settings do not apply to them.
+  * returns (file, rows, bytes); as each task ends, the driver renames its
+  * files to `part-*` names. It deletes whatever else the directories it
+  * writes hold (staging files of failed or speculative attempts, data of a
+  * crashed earlier attempt) and commits. The manifest plus the atomic swap
+  * of CURRENT is the only commit: no Hadoop `FileSystem`, output committer,
+  * `_SUCCESS` or `.crc` file is involved. Snapshot files take the session's
+  * Parquet compression codec and TableIO's fixed write options; the
+  * session's Hadoop `parquet.*` settings do not apply to them.
   *
   * Guarantees:
-  *   - readers never observe a half-written snapshot: data is only
-  *     reachable through a committed manifest / CURRENT, and staging files
-  *     are hidden from Parquet readers
+  *   - readers never observe a half-written snapshot: `readSnapshot`
+  *     reads only committed ids (a failed run's `part-*` files stay until
+  *     the id's next run), and staging files are hidden from Parquet readers
   *   - idempotent re-run: an existing committed snapshot id is a no-op
   *     (resume-safe per the north_rule's "resumable from checkpoint")
+  *   - resume (`writeSnapshotResumable`): each bucket is marked done as the
+  *     task that wrote it ends, so a re-run after a run that died mid-job
+  *     keeps the finished buckets' files untouched and writes only the rest;
+  *     a re-run from other inputs or buckets fails instead of returning or
+  *     mixing in the earlier run's rows
   *   - lineage: the manifest records input paths, row count, app id and
   *     per-snapshot metrics
   */
@@ -108,7 +116,7 @@ object TableIO {
     val target = dataDir(root, snapshotId)
     Files.createDirectories(target)
     val writer = SnapshotFileWriter(spark, df.schema, target.toString)
-    val placed = writeFiles(df, s"writeSnapshot $snapshotId", writer)(writer.writeTask)
+    val placed = writeFiles(df, s"writeSnapshot $snapshotId", writer, writer.writeTask)
     // an empty input still commits one zero-row file: it carries the schema
     val written = if (placed.nonEmpty) placed else Seq(writer.place(writer.stage(0, -1L, Iterator.empty)))
     val files = written.map(_.path)
@@ -119,14 +127,21 @@ object TableIO {
 
   /** Runs `df`'s plan as one SQL execution, as a Spark write would (AQE, the
     * UI and the plan's SQL metrics see the job), with `task` staging each
-    * partition's rows; then renames the staged files to `part-*` names. */
-  private def writeFiles(df: DataFrame, description: String, writer: SnapshotFileWriter)(
-      task: (TaskContext, Iterator[InternalRow]) => IterableOnce[Staged]): Seq[Staged] = {
+    * partition's rows. As each task ends, the job's result handler renames
+    * its staged files to `part-*` names and hands them to `done`. Returns
+    * the placed files in partition order. The handler holds up the
+    * scheduler's event loop, so `done` only writes small files. */
+  private def writeFiles(df: DataFrame, description: String, writer: SnapshotFileWriter,
+      task: (TaskContext, Iterator[InternalRow]) => Seq[Staged],
+      done: Seq[Staged] => Unit = _ => ()): Seq[Staged] = {
     val qe = df.queryExecution
-    val staged = SQLExecution.withNewExecutionId(qe, Some(description)) {
-      df.sparkSession.sparkContext.runJob(qe.toRdd, task).flatten.toSeq
+    SQLExecution.withNewExecutionId(qe, Some(description)) {
+      val rdd = qe.toRdd
+      val placed = Array.fill(rdd.getNumPartitions)(Seq.empty[Staged])
+      df.sparkSession.sparkContext.runJob(rdd, task, rdd.partitions.indices,
+        (p: Int, staged: Seq[Staged]) => { placed(p) = staged.map(writer.place); done(placed(p)) })
+      placed.toSeq.flatten
     }
-    staged.sortBy(_.partition).map(writer.place)
   }
 
   /** Every path under `dir` down to `maxDepth` (1: its own entries), `dir`
@@ -167,8 +182,8 @@ object TableIO {
       writeSupportConf: Map[String, String]) {
 
     /** A partition with no rows writes no file. */
-    def writeTask(ctx: TaskContext, rows: Iterator[InternalRow]): Option[Staged] =
-      if (rows.hasNext) Some(stage(ctx.partitionId(), ctx.taskAttemptId(), rows)) else None
+    def writeTask(ctx: TaskContext, rows: Iterator[InternalRow]): Seq[Staged] =
+      if (rows.hasNext) Seq(stage(ctx.partitionId(), ctx.taskAttemptId(), rows)) else Nil
 
     /** For rows sorted by an int bucket column after the `data` columns: one
       * file of the data columns per run of equal bucket `b`, staged into
@@ -183,8 +198,8 @@ object TableIO {
           def hasNext: Boolean = in.hasNext && in.head.getInt(data.length) == b
           def next(): InternalRow = { row.project(in.next()); row }
         }
-        Files.createDirectories(Paths.get(dir, s"doc_bucket=$b"))
-        out += stage(ctx.partitionId(), ctx.taskAttemptId(), run, s"doc_bucket=$b")
+        Files.createDirectories(Paths.get(dir, bucketDir(b)))
+        out += stage(ctx.partitionId(), ctx.taskAttemptId(), run, bucketDir(b))
       }
       out.result()
     }
@@ -257,53 +272,84 @@ object TableIO {
 
   // ---------------------------------------------------------------------
   // Bucket-level resume: the snapshot is written as doc_bucket=<b>/ dirs
-  // through writeSnapshot's staging and commit, each bucket with its own
-  // marker; a re-run writes ONLY the missing buckets and never touches a
-  // committed one, so it resumes idempotently after a failure (north_rule).
+  // through writeSnapshot's staging and commit. Before the job, all but the
+  // marked buckets' directories is deleted; one task writes each bucket
+  // whole and marks it as the task ends. A re-run writes ONLY the unmarked
+  // buckets, so it resumes idempotently after a run that died mid-job
+  // (north_rule).
   // ---------------------------------------------------------------------
 
   private def bucketMarkerDir(root: String, id: String) = manifestDir(root).resolve(s"buckets-$id")
+  private def bucketDir(b: Int) = s"doc_bucket=$b"
 
+  private[graft] val Buckets = 64
+
+  /** The bucket of a row whose doc_id is `docId`, among `buckets`. */
+  private[graft] def bucket(docId: Column, buckets: Int): Column =
+    pmod(xxhash64(docId), lit(buckets)).cast("int")
+
+  /** A resumable run's identity: its inputs and bucket count, as JSON. */
+  private def runOf(inputs: Seq[String], buckets: Int) = Json.writeValueAsString((inputs :+ s"buckets=$buckets").toArray)
+
+  /** The buckets of `snapshotId` whose files are final: every bucket of a
+    * committed snapshot, else the marked ones. */
   def committedBuckets(root: String, snapshotId: String): Set[Int] = {
     val dir = bucketMarkerDir(root, snapshotId)
-    if (!Files.exists(dir)) Set.empty
+    if (isCommitted(root, snapshotId))
+      (0 until readManifest(root, snapshotId).metrics.getOrElse("buckets", 0L).toInt).toSet
+    else if (!Files.exists(dir)) Set.empty
     else listPaths(dir, maxDepth = 1)
       .flatMap(p => "bucket-(\\d+)\\.done$".r.findFirstMatchIn(p).map(_.group(1).toInt)).toSet
   }
 
   /** Write `df` (must carry doc_id) as snapshot partitions bucketed by
-    * xxhash64(doc_id) % buckets; re-runs skip committed buckets and rewrite
-    * only missing ones. Commit the snapshot manifest once all buckets are in. */
+    * xxhash64(doc_id) % buckets; re-runs skip marked buckets and rewrite
+    * only the others. Commit the snapshot manifest once all buckets are in.
+    * A committed or marked id made from other `inputs` or `buckets` throws. */
   def writeSnapshotResumable(
       df: DataFrame,
       root: String,
       snapshotId: String,
-      buckets: Int = 64,
+      buckets: Int = Buckets,
       inputs: Seq[String] = Nil): Manifest = {
-    if (isCommitted(root, snapshotId)) return readManifest(root, snapshotId)
+    val run = runOf(inputs, buckets)
+    def check(earlier: String): Unit = if (earlier != run) throw new IllegalStateException(
+      s"snapshot $snapshotId under $root was made from $earlier, not $run: write this run under another id or root")
+    if (isCommitted(root, snapshotId)) {
+      val m = readManifest(root, snapshotId)
+      check(runOf(m.inputs, m.metrics.getOrElse("buckets", -1L).toInt))
+      return m
+    }
     val spark = df.sparkSession
-    val done = committedBuckets(root, snapshotId)
-    val missing = (0 until buckets).filterNot(done)
+    val marked = committedBuckets(root, snapshotId)
+    val markers = Files.createDirectories(bucketMarkerDir(root, snapshotId))
+    val runFile = markers.resolve("run.json")
+    // the run file is written before any marker; markers without one predate run files
+    if (marked.nonEmpty && Files.exists(runFile)) check(Files.readString(runFile))
+    else Files.writeString(runFile, run)
+    val missing = (0 until buckets).filterNot(marked)
     val target = dataDir(root, snapshotId)
     Files.createDirectories(target)
+    // only the marked buckets are final: what earlier runs left elsewhere goes
+    prune(target, marked.map(b => target.resolve(bucketDir(b)).toString))
     val writer = SnapshotFileWriter(spark, df.schema, target.toString)
     if (missing.nonEmpty) {
       val bucketed = df
-        .withColumn("doc_bucket", pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int"))
+        .withColumn("doc_bucket", bucket(col("doc_id"), buckets))
         .filter(col("doc_bucket").isin(missing: _*))
         .repartition(col("doc_bucket"))
         .sortWithinPartitions("doc_bucket")
-      val fresh = writeFiles(bucketed, s"writeSnapshotResumable $snapshotId", writer)(
-        writer.writeBuckets(df.schema)).map(_.path).toSet
-      // outside the committed buckets' directories only this run's files stay
-      val freshDirs = fresh.map(f => Paths.get(f).getParent.toString)
-      prune(target, freshDirs ++ done.map(b => target.resolve(s"doc_bucket=$b").toString))
-      freshDirs.foreach(d => prune(Paths.get(d), fresh))
-      val markers = Files.createDirectories(bucketMarkerDir(root, snapshotId))
-      missing.foreach(b => Files.write(markers.resolve(s"bucket-$b.done"), Array.empty[Byte]))
+      writeFiles(bucketed, s"writeSnapshotResumable $snapshotId", writer, writer.writeBuckets(df.schema),
+        done = _.foreach { f =>
+          val b = Paths.get(f.path).getParent.getFileName.toString.stripPrefix("doc_bucket=")
+          Files.write(markers.resolve(s"bucket-$b.done"), Array.empty[Byte])
+        })
     }
-    // all buckets present -> commit the snapshot manifest atomically
-    val found = listPaths(target, maxDepth = Int.MaxValue).filter(_.endsWith(".parquet")).sorted
+    // failed attempts' staging files go, except from the marked buckets
+    val all = listPaths(target, maxDepth = Int.MaxValue)
+    val markedDirs = marked.map(b => target.resolve(bucketDir(b)))
+    all.filter(p => p.endsWith(".staging") && !markedDirs(Paths.get(p).getParent)).foreach(p => Files.delete(Paths.get(p)))
+    val found = all.filter(_.endsWith(".parquet")).sorted
     // no bucket file at all: one zero-row file carries the schema (never
     // beside doc_bucket= dirs, where a root file breaks partition discovery)
     val files = if (found.nonEmpty) found else Seq(writer.place(writer.stage(0, -1L, Iterator.empty)).path)
@@ -449,43 +495,11 @@ object TableIO {
       .sortBy(bucketCol)
       .saveAsTable(tableName)
 
-  /** Read the current committed snapshot (or a named one). */
+  /** Read the current committed snapshot (or a named one, which must be committed). */
   def readSnapshot(spark: SparkSession, root: String, snapshotId: Option[String] = None): DataFrame = {
     val id = snapshotId.orElse(currentSnapshot(root))
       .getOrElse(throw new IllegalStateException(s"no committed snapshot under $root"))
+    if (!isCommitted(root, id)) throw new IllegalStateException(s"snapshot $id under $root is not committed")
     spark.read.parquet(dataDir(root, id).toString)
   }
-}
-
-/** Row-level sinks mirroring the reference's save surface
-  * (reference: models.py:179-203 save_text/save_json; cli.py:125-150
-  * text|json|structured formats). */
-object Sinks {
-
-  /** result.save_text analog: one text file tree of doc texts. */
-  def writeText(df: DataFrame, path: String): Unit =
-    df.select(col("text")).write.mode("overwrite").text(path)
-
-  /** result.save_json analog (to_dict -> json.dumps; indentation is sink
-    * formatting, not semantics — models.py:191-198). */
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").json(path)
-
-  /** The contract span table as parquet partitioned by a doc_id bucket —
-    * the partitioning a 10^12-row table needs for parallel rewrite/resume.
-    * Repartitions BY the bucket column first: without it every task writes
-    * into every partition directory (tasks x buckets small files — measured
-    * as the dominant cost of the CLI job). */
-  def writeSpansBucketed(df: DataFrame, path: String, buckets: Int = 256): Unit =
-    df.withColumn("doc_bucket", pmod(xxhash64(col("doc_id")), lit(buckets)))
-      .repartition(col("doc_bucket"))
-      .write.mode("overwrite")
-      .partitionBy("doc_bucket")
-      .parquet(path)
-
-  /** Quarantine side-output: bad rows routed to their own sink, never thrown
-    * on executors (SURVEY.md §2.1 validation filter). Returns (good, bad). */
-  def splitQuarantine(df: DataFrame): (DataFrame, DataFrame) =
-    (df.filter(!col("quarantined")).drop("quarantined", "error"),
-     df.filter(col("quarantined")))
 }

@@ -336,13 +336,105 @@ class TableIOSpec extends AnyFunSuite {
     assert(usesDictionary.get("spans.list.element.kind").contains(true), usesDictionary.toString)
   }
 
-  test("quarantine split routes bad rows to the side output") {
-    val input = spark.createDataFrame(Seq(
-      ("a", false, ""), ("b", true, "boom"), ("c", false, "")))
-      .toDF("doc_id", "quarantined", "error")
-    val (good, bad) = graft.io.Sinks.splitQuarantine(input)
-    assert(good.count() == 2 && bad.count() == 1)
-    assert(!good.columns.contains("quarantined"))
+  /** The standard mix (giants, empty and broken docs) plus all-null span
+    * arrays and null doc_ids, as the Cli's parquet input under `dir`. */
+  private def cliInput(dir: java.nio.file.Path, docs: Seq[graft.model.RawDoc]): String = {
+    import spark.implicits._
+    spark.createDataset(docs).write.parquet(s"$dir/in")
+    s"$dir/in"
+  }
+  private lazy val cliDocs = {
+    import graft.model.{RawDoc, Span}
+    graft.fixtures.Fixtures.corpus(40) ++ Seq(
+      RawDoc("fuzz-nulls-a", Vector(null, null, null)),
+      RawDoc("fuzz-nulls-b", Vector(null)),
+      RawDoc(null, Vector(Span("text", "no id", "", 0), Span("text", "x", "", 1))),
+      RawDoc(null, Vector.empty))
+  }
+
+  /** `run`'s result and the `number of docs` of each SQL execution it
+    * started that runs `GraftExtractExec`, read from the status store. */
+  private def extractedDocs[T](run: => T): (T, Seq[Long]) = {
+    val store = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.statusStore
+    def executions = { org.apache.spark.TestListenerBus.drain(spark.sparkContext); store.executionsList() }
+    val before = executions.map(_.executionId).maxOption.getOrElse(-1L)
+    val result = run
+    val docs = executions.filter(_.executionId > before).flatMap { e =>
+      val nodes = store.planGraph(e.executionId).allNodes.filter(_.name.startsWith("GraftExtractExec"))
+      val values = store.executionMetrics(e.executionId)
+      if (nodes.isEmpty) None
+      else Some(nodes.flatMap(_.metrics).filter(_.name == "number of docs")
+        .flatMap(mt => values.get(mt.accumulatorId)).map(_.replace(",", "").toLong).sum)
+    }
+    (result, docs)
+  }
+
+  /** The snapshot's (doc_id, spans, quarantined, error_code) rows, sorted. */
+  private def contractRows(root: String, id: String) = {
+    import spark.implicits._
+    graft.io.TableIO.readSnapshot(spark, root, Some(id))
+      .selectExpr("doc_id", "coalesce(to_json(spans), '')", "quarantined", "coalesce(error_code, '')")
+      .as[(String, String, Boolean, String)].collect().sorted.toSeq
+  }
+
+  test("Cli snapshot keeps quarantined rows; one SQL execution extracts each doc once") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_cli_snapshot")
+    val input = cliInput(dir, cliDocs)
+    val (m, extracted) = extractedDocs(Cli.snapshot(spark, input, s"$dir/table", "s1"))
+    assert(extracted == Seq(cliDocs.length.toLong), s"number of docs per extracting execution, ${cliDocs.length} docs")
+    assert(m.rowCount == cliDocs.length)
+
+    // (doc_id, spans, error_code) multisets, split by quarantined
+    def canon(df: org.apache.spark.sql.DataFrame, quarantined: Boolean) =
+      df.filter(col("quarantined") === quarantined)
+        .selectExpr("doc_id", "coalesce(to_json(spans), '')", "coalesce(error_code, '')")
+        .as[(String, String, String)].collect().sorted.toSeq
+    val snap = graft.io.TableIO.readSnapshot(spark, s"$dir/table")
+    assert(Seq("quarantined", "error", "error_code").forall(snap.columns.contains), snap.columns.toSeq)
+    val direct = spark.createDataset(cliDocs.map(graft.kernel.Extractor.extractDoc(_))).toDF()
+    for (q <- Seq(false, true)) assert(canon(snap, q) == canon(direct, q), s"quarantined = $q")
+    // the kernel writes a null doc_id as ""
+    assert(canon(snap, quarantined = true).count(_._3 == graft.model.ErrorCode.NullDocId) == 2)
+    assert(canon(snap, quarantined = false).nonEmpty)
+  }
+
+  test("a resumed Cli snapshot extracts only the unfinished buckets' docs; another input or engine fails") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_cli_resume")
+    val input = cliInput(dir, cliDocs)
+    val root = s"$dir/table"
+    val fitz = graft.model.ExtractConfig.default.copy(engine = "fitz")
+    val id = "extract"
+    Cli.snapshot(spark, input, root, id)
+    val whole = contractRows(root, id)
+    val perBucket = graft.io.TableIO.readSnapshot(spark, root, Some(id)).groupBy("doc_bucket").count()
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+
+    // a committed id made from another engine or input is not returned
+    val other = cliInput(Files.createTempDirectory("graft_cli_other"), cliDocs.take(5))
+    for ((in, cfg) <- Seq(input -> fitz, other -> graft.model.ExtractConfig.default)) {
+      val e = intercept[IllegalStateException](Cli.snapshot(spark, in, root, id, cfg))
+      assert(e.getMessage.contains(s"snapshot $id under $root was made from"), e.getMessage)
+    }
+
+    // what a run that died mid-job leaves: no manifest, every other bucket
+    // marked, the unmarked ones' files still on disk
+    val markers = Paths.get(root, "_manifests", s"buckets-$id")
+    Files.delete(Paths.get(root, "_manifests", s"$id.json"))
+    val dropped = perBucket.keys.toSeq.sorted.zipWithIndex.collect { case (b, i) if i % 2 == 0 => b }
+    dropped.foreach(b => Files.delete(markers.resolve(s"bucket-$b.done")))
+    val kept = graft.io.TableIO.committedBuckets(root, id)
+    assert(kept.nonEmpty && kept == perBucket.keySet -- dropped)
+    // a partly written id refuses another engine too, and keeps its markers
+    intercept[IllegalStateException](Cli.snapshot(spark, input, root, id, fitz))
+    assert(graft.io.TableIO.committedBuckets(root, id) == kept)
+
+    val (m, extracted) = extractedDocs(Cli.snapshot(spark, input, root, id))
+    assert(m.metrics("resumed_buckets") == kept.size)
+    assert(extracted == Seq(dropped.map(perBucket).sum), s"resume extracted $extracted docs")
+    assert(contractRows(root, id) == whole)
+    assert(m.inputs == Seq(input, "engine=core"))
   }
 }
 
@@ -805,6 +897,82 @@ class ResumableSnapshotSpec extends AnyFunSuite {
       assert(files == m.files.filter(f => Paths.get(f).getParent == d).toSet, s"$d holds $files")
     }
     assert(graft.io.TableIO.committedBuckets(root, "s1") == (0 until buckets).toSet)
+  }
+
+  test("a run killed mid-job keeps its finished buckets; the rerun resumes them") {
+    import spark.implicits._
+    import java.nio.file.{Files, Path, Paths}
+    val root = Files.createTempDirectory("graft_kill").toString
+    val buckets = 16
+    val bucket = pmod(xxhash64(col("doc_id")), lit(buckets)).cast("int")
+    // coalescing would merge the small write stage into one task
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val saved = spark.conf.getOption(coalesceKey)
+    spark.conf.set(coalesceKey, "false")
+    val tasks = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // releases the victim once every other write task has ended
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      private val ended = new java.util.concurrent.atomic.AtomicInteger
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ResultTask" && e.reason == org.apache.spark.Success &&
+          ended.incrementAndGet() == tasks - 1) KillGate.release.countDown()
+    }
+    def bytes(dirs: Set[Int]): Map[Path, Seq[Byte]] = dirs.toSeq.flatMap { b =>
+      Paths.get(root, "data", "snapshot=s1", s"doc_bucket=$b").toFile.listFiles.toSeq
+        .map(f => f.toPath -> Files.readAllBytes(f.toPath).toSeq)
+    }.toMap
+    try {
+      // the input arrives hash-partitioned by the writer's own bucket column,
+      // so Spark plans no second shuffle for the writer's repartition and the
+      // UDF runs inside the write tasks, each owning a group of whole buckets
+      val df = (0 until 400).map(i => (s"doc-$i", i)).toDF("doc_id", "n").repartition(bucket)
+        .withColumn("n", KillGate.gate(col("doc_id"), col("n")))
+      val owner = df.select(bucket.as("b"), pmod(hash(bucket), lit(tasks)).as("p")).distinct()
+        .as[(Int, Int)].collect().toMap
+      val victimTask = owner(df.filter(col("doc_id") === KillGate.Victim).select(bucket).as[Int].head())
+      val finished = owner.collect { case (b, p) if p != victimTask => b }.toSet
+      assert(finished.nonEmpty && owner.values.toSet.size == tasks, owner.toString)
+
+      KillGate.release = new java.util.concurrent.CountDownLatch(1)
+      KillGate.armed = true
+      spark.sparkContext.addSparkListener(listener)
+      val failure = intercept[org.apache.spark.SparkException](
+        graft.io.TableIO.writeSnapshotResumable(df, root, "s1", buckets))
+      KillGate.armed = false
+      assert(failure.getMessage.contains(s"killed on ${KillGate.Victim}"), failure.getMessage)
+      assert(!graft.io.TableIO.isCommitted(root, "s1") && graft.io.TableIO.currentSnapshot(root).isEmpty)
+      assert(graft.io.TableIO.committedBuckets(root, "s1") == finished)
+      val kept = bytes(finished)
+
+      val m = graft.io.TableIO.writeSnapshotResumable(df, root, "s1", buckets)
+      assert(m.metrics("resumed_buckets") == finished.size.toLong)
+      assert(bytes(finished) == kept, "a finished bucket was rewritten")
+      val whole = graft.io.TableIO.writeSnapshotResumable(df, root, "uninterrupted", buckets)
+      def rows(id: String) = graft.io.TableIO.readSnapshot(spark, root, Some(id))
+        .as[(String, Int, Int)].collect().sorted.toSeq
+      assert(m.rowCount == 400 && whole.rowCount == 400)
+      assert(rows("s1") == rows("uninterrupted"))
+    } finally {
+      KillGate.armed = false
+      KillGate.release.countDown()
+      spark.sparkContext.removeSparkListener(listener)
+      saved.fold(spark.conf.unset(coalesceKey))(spark.conf.set(coalesceKey, _))
+    }
+  }
+}
+
+/** The kill switch of the mid-job failure test: a UDF that, while armed,
+  * blocks on the victim doc until `release` opens, then throws. */
+object KillGate {
+  @volatile var armed = false
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+  val Victim = "doc-0"
+  val gate = udf { (id: String, n: Int) =>
+    if (armed && id == Victim) {
+      release.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      throw new IllegalStateException(s"killed on $id")
+    }
+    n
   }
 }
 
