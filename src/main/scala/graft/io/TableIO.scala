@@ -17,8 +17,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.metadata.{ColumnPath, CompressionCodecName}
 import org.apache.parquet.io.{LocalInputFile, LocalOutputFile, OutputFile}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 /** Snapshot-table I/O: Iceberg-semantics emulation over partitioned Parquet
   * plus JSON manifests (no Iceberg runtime jar ships in this environment —
@@ -358,18 +359,41 @@ object TableIO {
   }
 
   /** Rows in `files`, from their Parquet footers (the row-group counts
-    * `count()` would read): no Spark job, and earlier attempts' buckets count.
+    * `count()` would read): no Spark job, and earlier attempts' buckets count. */
+  private def footerRows(spark: SparkSession, files: Seq[String]): Long =
+    footers(spark, files.map(Paths.get(_)))(_.getRecordCount).sum
+
+  /** `read` over each file's opened Parquet footer, lazily, in file order.
     *
     * The footers share one read-options object built from the session's
     * Hadoop configuration. The one-argument `ParquetFileReader.open` builds
     * its options over a new `Configuration`, which parses the XML defaults
     * from the classpath jars again for every file (~10 ms each). */
-  private def footerRows(spark: SparkSession, files: Seq[String]): Long = {
+  private def footers[T](spark: SparkSession, files: Seq[java.nio.file.Path])(read: ParquetFileReader => T): Iterator[T] = {
     val options = HadoopReadOptions.builder(spark.sparkContext.hadoopConfiguration).build()
     files.iterator.map { f =>
-      val reader = ParquetFileReader.open(new LocalInputFile(Paths.get(f)), options)
-      try reader.getRecordCount finally reader.close()
-    }.sum
+      val reader = ParquetFileReader.open(new LocalInputFile(f), options)
+      try read(reader) finally reader.close()
+    }
+  }
+
+  /** Whether the footers of `files` (URIs, as `FileIndex.inputFiles` names
+    * them) prove that every value of the plain INT32 leaf `leaf` (its
+    * Parquet column path) is at most `bound`: every file is local and every
+    * row group's statistics hold a max no larger. A non-local file, a row
+    * group lacking the leaf, its statistics or a non-null value, or a leaf
+    * of another type proves nothing. */
+  private[graft] def int32AtMost(spark: SparkSession, files: Seq[String], leaf: Seq[String], bound: Long): Boolean = {
+    // the URI's escapes (%20 for a space) decoded before the local-path rule
+    val local = files.map(f => localPath(new org.apache.hadoop.fs.Path(java.net.URI.create(f)).toString))
+    val column = ColumnPath.get(leaf: _*)
+    local.forall(_.isDefined) && footers(spark, local.flatten)(_.getFooter.getBlocks.asScala.forall { group =>
+      group.getColumns.asScala.find(_.getPath == column).exists { c =>
+        val (t, s) = (c.getPrimitiveType, c.getStatistics)
+        t.getPrimitiveTypeName == PrimitiveTypeName.INT32 && t.getLogicalTypeAnnotation == null &&
+          s != null && s.hasNonNullValue && s.genericGetMax.asInstanceOf[Integer].longValue <= bound
+      }
+    }).forall(identity)
   }
 
   def readManifest(root: String, snapshotId: String): Manifest = {
@@ -382,8 +406,9 @@ object TableIO {
 
   /** Write the contract input table WITH a `n_spans` stats column, range-
     * clustered by document size so giant docs land in their own files/row
-    * groups. At 100 TB this is what makes the skew split's "second scan"
-    * free: `Extract.extractContract`'s big-leg predicate
+    * groups. When no doc is a giant, `Extract.extractContract` reads the
+    * `n_spans` max from the footers and plans one scan. When some are, this
+    * is what makes the giant leg's scan cheap at 100 TB: its predicate
     * (`n_spans > threshold`) is an ordinary pushable column filter, so
     * parquet row-group min/max stats skip every non-giant row group instead
     * of decoding the whole corpus twice (the raw (doc_id, spans) input has
@@ -465,11 +490,7 @@ object TableIO {
     // java.nio cannot stat the tree — returning the 1 MB clamp on a "0-byte"
     // corpus would be pathological, so keep Spark's 128 MB default instead
     // (a real deployment reads the size from the table's file index/stats)
-    // scheme must be >= 2 chars: a single letter before ':' is a Windows
-    // drive (C:\data), which is a local path, not a remote URI (ADVICE r05)
-    val scheme = "^([a-zA-Z][a-zA-Z0-9+.-]+):".r.findFirstMatchIn(path).map(_.group(1))
-    if (scheme.exists(_ != "file")) return 128L << 20
-    val p = java.nio.file.Paths.get(path.stripPrefix("file:"))
+    val p = localPath(path) match { case Some(p) => p; case None => return 128L << 20 }
     val total =
       if (java.nio.file.Files.exists(p)) {
         val s = java.nio.file.Files.walk(p)
@@ -478,6 +499,14 @@ object TableIO {
         finally s.close()
       } else 0L
     math.max(1L << 20, math.min(128L << 20, total / math.max(1, cores * waves)))
+  }
+
+  /** `path` as a java.nio path when it is local: no scheme or `file:`. The
+    * scheme must be >= 2 chars: a single letter before ':' is a Windows
+    * drive (C:\data), which is a local path, not a remote URI (ADVICE r05). */
+  private def localPath(path: String): Option[java.nio.file.Path] = {
+    val scheme = "^([a-zA-Z][a-zA-Z0-9+.-]+):".r.findFirstMatchIn(path).map(_.group(1))
+    if (scheme.exists(_ != "file")) None else Some(Paths.get(path.stripPrefix("file:")))
   }
 
   /** Bucketed table write: pre-hash-partition + sort by the join key so

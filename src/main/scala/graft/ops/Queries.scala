@@ -67,14 +67,14 @@ object Queries {
   private val qExtractSkewAware: Q = (spark, sfDir) => {
     // Materialize the GENERATED corpus once (r6): the small/big split of
     // Extract.extractContract's two legs consumes its input twice (two
-    // size-filter branches). For a parquet input the second scan re-reads
-    // and decodes every span (`size(spans)` is neither pushed down nor
-    // pruned); q02's input is worse, an expensive opaque generator (rawDocs
-    // maps every id through Fixtures.gen), so the split re-generated the
-    // whole corpus to find the giants. A lazy localCheckpoint computes gen
-    // once and both branches read the blocks — guide §5's reuse-not-recompute case; at
-    // cluster scale this is exactly "materialize the expensive input, then
-    // split", never a cache of results across runs.
+    // size-filter branches). Only a local parquet table whose footers rule
+    // out giants gets the one-scan plan; q02's input is an expensive opaque
+    // generator (rawDocs maps every id through Fixtures.gen) with no
+    // footers, so the split would re-generate the whole corpus to find the
+    // giants. A lazy localCheckpoint computes gen once and both branches
+    // read the blocks — guide §5's reuse-not-recompute case; at cluster
+    // scale this is exactly "materialize the expensive input, then split",
+    // never a cache of results across runs.
     val docs = graft.SparkEntry.rawDocs(spark, sfDir).toDF().localCheckpoint(eager = false)
     // Extract.extractContract's two legs (narrow kernel below the span
     // threshold, page-split scatter/regather above it) at an 8-page
@@ -111,10 +111,11 @@ object Queries {
     * page-split leg): input table -> output span table. */
   private val qExtractContract: Q = (spark, sfDir) => {
     // lazy localCheckpoint (r6, q02's fix): extractContract scans its input
-    // twice (small leg + giant leg) — for a parquet table a second decode of
-    // every span, but this input is the opaque generator, so the giant-finding scan re-generated
-    // the whole corpus. Lazy is safe here: the giant leg's exchange stage
-    // materializes the blocks before the final narrow stage reads them.
+    // twice (small leg + giant leg) unless it is a local parquet table whose
+    // footers rule out giants; this input is the opaque generator, so the
+    // giant-finding scan would re-generate the whole corpus. Lazy is safe
+    // here: the giant leg's exchange stage materializes the blocks before
+    // the final narrow stage reads them.
     val input = graft.SparkEntry.rawDocs(spark, sfDir).toDF().localCheckpoint(eager = false)
     graft.pipeline.Extract.extractContract(input)
       .selectExpr("doc_id", "coalesce(size(spans), 0) AS n_spans", "num_pages", "quarantined")

@@ -1,10 +1,16 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, ExprId}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, StructType}
+import scala.annotation.tailrec
+import graft.io.TableIO
 import graft.model._
 import graft.kernel.Parse
 
@@ -32,9 +38,12 @@ import graft.kernel.Parse
   * documents"): docs whose span count exceeds `skewSpanThreshold` are
   * exploded into per-page work units, shuffled wide by (doc_id, page), page
   * kernels run in parallel, then re-grouped by doc_id with explicit page
-  * ordering for the cheap doc-level finalize. At 100 TB this bounds executor
-  * memory by the largest PAGE, not the largest DOC, and spreads a
-  * thousand-page document over the cluster instead of pinning one task.
+  * ordering for the cheap doc-level finalize. What this buys is time: a
+  * thousand-page document's page kernels spread over many tasks instead of
+  * pinning one. It does not bound memory by the page: the giant leg's scan
+  * still reads each giant as one row before the explode, and the regather
+  * buffers every page result of a doc before its finalize. The leg is
+  * planned only when the input may hold a giant (see [[splitContract]]).
   *
   * The page-split plan only exists for the core engine: the adaptive
   * fitz/plumber engines read page 0 only (loops commented out in the
@@ -134,30 +143,75 @@ object Extract {
   def extractSpansDF(input: DataFrame, cfg: ExtractConfig = ExtractConfig.default): DataFrame =
     docLeg(input, GraftExtract.Contract, cfg)
 
-  /** The size split: docs with at most `skewSpanThreshold` spans take the
-    * Doc node, giants take [[pageLeg]] and the regather per doc with
-    * explicit page ordering into one `GraftExtract` Finalize kernel per doc.
-    * Both legs read only doc_id and spans and write `shape`.
+  /** The size split: docs at or below `skewSpanThreshold` take the Doc node,
+    * giants take [[pageLeg]] and the regather per doc with explicit page
+    * ordering into one `GraftExtract` Finalize kernel per doc. Both legs
+    * read only doc_id and spans, write `shape` and produce identical rows,
+    * so the split decides only where a doc's kernel runs.
     *
-    * The span count is the input's `n_spans` column when it has one (the
+    * A giant is a doc whose `n_spans` column, when the input has one (the
     * managed table `TableIO.writeContractInput` writes, range-clustered by
-    * it): both legs' size predicates then reach the parquet scan
-    * (`PushedFilters: [LessThanOrEqual/GreaterThan(n_spans, ...)]`), so
-    * row-group min/max stats skip the non-matching groups and the big leg
-    * costs ~zero I/O when no giants exist, instead of a full second decode
-    * of the corpus. Without it the split counts the raw spans, a column
-    * predicate evaluated on the columnar batch before any kernel. */
+    * it), exceeds the threshold (a null `n_spans` is none, as the footer
+    * bound reads it): both legs' size predicates then reach the
+    * parquet scan (`PushedFilters: [LessThanOrEqual/GreaterThan(n_spans,
+    * ...)]`), so row-group min/max stats skip the non-matching groups.
+    * Without it a giant has more spans than the threshold and a span
+    * offset at or past it (a null offset reads as 0, as in the kernel), a
+    * predicate evaluated on the scanned rows before any kernel.
+    * The contract's offsets are distinct non-negative positions, so for
+    * its docs the second conjunct follows from the first; it keeps narrow
+    * only docs with more spans than the threshold on fewer than
+    * threshold / SpansPerPage pages, which the page split could not spread
+    * anyway.
+    *
+    * When the input's Parquet footers prove that no doc is a giant
+    * ([[noGiants]]), the split is the Doc node alone: one scan, one stage,
+    * no exchange. */
   private[graft] def splitContract(input: DataFrame, shape: GraftExtract.Shape, cfg: ExtractConfig,
       skewSpanThreshold: Int, pageParallelism: Int): DataFrame = {
-    if (cfg.engine != "core") return docLeg(input, shape, cfg) // page-0 engines: narrow only
-    val nSpans =
-      if (input.columns.contains("n_spans")) col("n_spans") else coalesce(size(col("spans")), lit(0))
+    // page-0 engines take the narrow leg only
+    if (cfg.engine != "core" || noGiants(input, skewSpanThreshold)) return docLeg(input, shape, cfg)
+    // a null n_spans makes `giant` null; `unsized` keeps such docs narrow
+    val (giant, unsized) =
+      if (input.columns.contains("n_spans")) (col("n_spans") > skewSpanThreshold, col("n_spans").isNull)
+      else (coalesce(size(col("spans")), lit(0)) > skewSpanThreshold &&
+        exists(col("spans"), s => coalesce(s("offset"), lit(0)) >= skewSpanThreshold), lit(false))
     // giants with a null doc_id stay narrow, where they quarantine
-    val small = docLeg(input.filter(nSpans <= skewSpanThreshold || col("doc_id").isNull), shape, cfg)
-    val giants = docColumns(input.filter(nSpans > skewSpanThreshold && col("doc_id").isNotNull))
-    small.unionByName(node(GraftExtract.Finalize, shape, cfg, pageLeg(giants, cfg, pageParallelism)
+    val narrow = docLeg(input.filter(!giant || unsized || col("doc_id").isNull), shape, cfg)
+    val giants = docColumns(input.filter(giant && col("doc_id").isNotNull))
+    narrow.unionByName(node(GraftExtract.Finalize, shape, cfg, pageLeg(giants, cfg, pageParallelism)
       .repartition(col("doc_id"))
       .sortWithinPartitions(col("doc_id"), col("page_no"))))
+  }
+
+  /** Whether the footers of the Parquet files the input reads its span
+    * count from prove that no doc is a giant at `threshold`: every row
+    * group's `n_spans` max is at most the threshold, or, without `n_spans`,
+    * every row group's span offset max is below it. The column must come
+    * straight from a local Parquet relation, through Filters and Projects
+    * that keep it as it is; any other input proves nothing. */
+  private def noGiants(input: DataFrame, threshold: Int): Boolean = {
+    val (name, leaf, bound) =
+      if (input.columns.contains("n_spans")) ("n_spans", Nil, threshold.toLong)
+      else ("spans", Seq("list", "element", "offset"), threshold - 1L)
+    val plan = input.queryExecution.analyzed
+    plan.output.find(_.name == name).flatMap(a => parquetColumn(plan, a.exprId)).exists {
+      case (files, column) => TableIO.int32AtMost(input.sparkSession, files, column +: leaf, bound)
+    }
+  }
+
+  /** The files of the Parquet relation that attribute `id` of `plan` comes
+    * from, and the attribute's column name there. */
+  @tailrec private def parquetColumn(plan: LogicalPlan, id: ExprId): Option[(Seq[String], String)] = plan match {
+    case Filter(_, child) => parquetColumn(child, id)
+    case Project(list, child) if list.exists { case a: Attribute => a.exprId == id; case _ => false } =>
+      parquetColumn(child, id)
+    case r: LogicalRelation => r.relation match {
+      case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+        r.output.find(_.exprId == id).map(a => (fs.location.inputFiles.toSeq, a.name))
+      case _ => None
+    }
+    case _ => None
   }
 
   /** [[extractContract]] over the parquet table at `path` (perfbench's
@@ -173,9 +227,10 @@ object Extract {
   /** Production contract entry: input table -> output table, fast columnar
     * path for typical docs + page-split path for giants beyond
     * `skewSpanThreshold` (spans; default 512 pages' worth). Both legs
-    * emit the contract schema; the plan has exactly two scans of the input
-    * (small leg + giant leg — the giant leg feeds [[pageLeg]] directly, no
-    * third scan).
+    * emit the contract schema. Over a local Parquet table whose footers
+    * rule out giants the plan is the narrow leg alone, one scan; otherwise
+    * it has two scans of the input (small leg + giant leg — the giant leg
+    * feeds [[pageLeg]] directly, no third scan).
     *
     * Threshold guidance (measured): the page-split path costs two shuffles
     * (scatter pages, regather per doc), so it loses to whole-doc narrow

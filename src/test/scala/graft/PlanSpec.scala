@@ -143,6 +143,126 @@ class PlanSpec extends AnyFunSuite {
       assert(!optimized.contains(op), s"$op in the optimized plan:\n${optimized.take(3000)}")
   }
 
+  /** Contract rows as a multiset of (doc_id, spans JSON, num_pages, quarantined, error_code). */
+  private def contractBag(df: org.apache.spark.sql.DataFrame) = bagOf(contractTuples(df))
+
+  private def contractTuples(df: org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    df.selectExpr("doc_id", "to_json(spans)", "num_pages", "quarantined", "error_code")
+      .as[(String, String, Int, Boolean, String)]
+  }
+
+  private def bagOf[T](ds: org.apache.spark.sql.Dataset[T]): Map[T, Int] =
+    ds.collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+
+  /** The same rows from a kernel-direct `Extractor.extractDoc` pass over `docs` on the driver. */
+  private def directBag(docs: Seq[graft.model.RawDoc]) = {
+    import spark.implicits._
+    contractBag(spark.createDataset(docs.map(graft.kernel.Extractor.extractDoc(_))).toDF())
+  }
+
+  /** `docs` written as a Parquet table in a new temporary directory. */
+  private def parquetOf(docs: Seq[graft.model.RawDoc], prefix: String, options: Map[String, String] = Map.empty) = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    spark.createDataset(docs).toDF().write.mode("overwrite").options(options).parquet(dir)
+    dir
+  }
+
+  /** The GraftExtractExec kinds in `df`'s physical plan, and the plan. */
+  private def extractKinds(df: org.apache.spark.sql.DataFrame): (Seq[String], String) = {
+    val plan = df.queryExecution.executedPlan.toString
+    (Seq("Doc", "Page", "Finalize").filter(k => s"GraftExtractExec $k\\b".r.findFirstIn(plan).isDefined), plan)
+  }
+
+  test("extractContract over a Parquet table whose footers rule out giants plans one scan and no exchange") {
+    // Fixtures.corpus' giants have 150-300 pages, below the default 512-page threshold
+    val docs = graft.fixtures.Fixtures.corpus(40)
+    // a space in the path: the footers are found through the files' URIs
+    val dir = parquetOf(docs, "contract one_scan")
+    val managed = java.nio.file.Files.createTempDirectory("contract_one_scan_managed").toString
+    graft.io.TableIO.writeContractInput(spark.read.parquet(dir), managed)
+    val want = directBag(docs)
+    for ((what, input) <- Seq(
+        "raw table" -> spark.read.parquet(dir),
+        "filtered raw table" -> spark.read.parquet(dir).filter(col("doc_id") =!= "x"),
+        "managed table" -> spark.read.parquet(managed))) {
+      val df = graft.pipeline.Extract.extractContract(input)
+      val (kinds, plan) = extractKinds(df)
+      assert("Scan parquet".r.findAllIn(plan).length == 1, s"$what:\n$plan")
+      assert(!plan.contains("Exchange") && kinds == Seq("Doc"), s"$what:\n$plan")
+      assert(contractBag(df) == want, what)
+    }
+  }
+
+  test("footer pruning never moves a doc to the other leg") {
+    import spark.implicits._
+    import graft.model.{RawDoc, Span}
+    import graft.pipeline.{Extract, GraftExtractExec}
+    object AQE extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val t = 512 * graft.kernel.Parse.SpansPerPage
+    /** The contract rows and each kind's `number of docs` of one execution. */
+    def run(df: org.apache.spark.sql.DataFrame) = {
+      val rows = contractTuples(df)
+      val bag = bagOf(rows)
+      // the row-writing kinds count docs (Page counts pages)
+      val docs = AQE.collect(rows.queryExecution.executedPlan) { case g: GraftExtractExec if g.metrics.contains("docs") =>
+        g.kind.toString -> g.metrics("docs").value }.groupMapReduce(_._1)(_._2)(_ + _)
+      (bag, docs)
+    }
+    val small = graft.fixtures.Fixtures.corpus(10)
+    def text(n: Int, offset: Int => Int) = (0 until n).map(i => Span("text", s"w$i", "", offset(i)))
+
+    // (a) one doc whose offsets pass t: both legs, and only that doc is split
+    val giant = RawDoc("giant", text(t + 1, i => i))
+    val withGiant = Extract.extractContract(spark.read.parquet(parquetOf(small :+ giant, "prune_giant")))
+    assert(extractKinds(withGiant)._1 == Seq("Doc", "Page", "Finalize"), extractKinds(withGiant)._2)
+    val (gotA, docsA) = run(withGiant)
+    assert(gotA == directBag(small :+ giant) && docsA("Finalize") == 1, docsA)
+
+    // (b) at a 2-page threshold, more spans than it on repeated offsets
+    // below it, every tenth null: narrow, both where the footers prune and
+    // where both legs are planned
+    val t2 = 2 * graft.kernel.Parse.SpansPerPage
+    val dense = RawDoc("dense", text(t2 + 5, i => i % 40))
+    val denseDocs = (0 until 4).map(k => RawDoc(s"short-$k", text(20, i => i))) :+ dense
+    val nulled = spark.createDataset(denseDocs).toDF().withColumn("spans", transform(col("spans"),
+      (s: org.apache.spark.sql.Column) => s.withField("offset", when(s("offset") % 10 =!= 0, s("offset")))))
+    val nulledDir = java.nio.file.Files.createTempDirectory("prune_dense").toString
+    nulled.write.mode("overwrite").parquet(nulledDir)
+    val wantB = directBag(denseDocs.map(d => d.copy(spans = d.spans.map(s => s.copy(offset =
+      if (s.offset % 10 == 0) 0 else s.offset)))))
+    for (input <- Seq(spark.read.parquet(nulledDir), nulled)) {
+      val (got, docs) = run(Extract.extractContract(input, skewSpanThreshold = t2))
+      assert(got == wantB && docs("Doc") == denseDocs.length && docs.getOrElse("Finalize", 0L) == 0, docs)
+    }
+
+    // (c) no column statistics, (d) a rebuilt spans column, (e) a local
+    // relation: no footer bound, so both legs stay planned
+    val dir = parquetOf(small, "prune_none")
+    val noStats = parquetOf(small, "prune_nostats", Map("parquet.column.statistics.enabled" -> "false"))
+    assert(extractKinds(Extract.extractContract(spark.read.parquet(dir)))._1 == Seq("Doc"))
+    for ((what, input) <- Seq(
+        "no statistics" -> spark.read.parquet(noStats),
+        "rebuilt spans" -> spark.read.parquet(dir).withColumn("spans", transform(col("spans"), s => s)),
+        "createDataset" -> spark.createDataset(small).toDF())) {
+      val df = Extract.extractContract(input)
+      assert(extractKinds(df)._1 == Seq("Doc", "Page", "Finalize"), s"$what:\n${extractKinds(df)._2}")
+      assert(contractBag(df) == directBag(small), what)
+    }
+
+    // (f) a null n_spans is no giant, whether the footers prune or both legs run
+    val unsized = spark.createDataset(small).toDF()
+      .withColumn("n_spans", when(col("doc_id") =!= small.head.doc_id, size(col("spans"))))
+    val unsizedDir = java.nio.file.Files.createTempDirectory("prune_unsized").toString
+    unsized.write.mode("overwrite").parquet(unsizedDir)
+    for ((input, kinds) <- Seq(spark.read.parquet(unsizedDir) -> Seq("Doc"), unsized -> Seq("Doc", "Page", "Finalize"))) {
+      val df = Extract.extractContract(input)
+      assert(extractKinds(df)._1 == kinds, extractKinds(df)._2)
+      assert(contractBag(df) == directBag(small), kinds)
+    }
+  }
+
   test("SQL registry: graft_* functions callable from SQL") {
     graft.functions.Functions.registerAll(spark)
     val r = spark.sql(
