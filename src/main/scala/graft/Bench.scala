@@ -121,8 +121,8 @@ object Bench {
       graft.io.TableIO.autoBatchSize(sustainedIn).toString)
     spark.conf.set("spark.sql.files.maxPartitionBytes",
       graft.io.TableIO.autoSplitBytes(sustainedDir, cpus).toString)
-    // JIT warmup (same plan, small slice), then the timed full pass
-    graft.pipeline.Extract.extractContract(sustainedIn.limit(1500)).selectExpr("count(*)").collect()
+    // JIT warmup over a slice that plans like the whole table, then the timed full pass
+    graft.pipeline.Extract.extractContract(ScalingBench.warmupSlice(sustainedIn)).selectExpr("count(*)").collect()
     val s0 = System.nanoTime()
     val sStats = graft.pipeline.Extract.extractContract(sustainedIn)
       .filter(!org.apache.spark.sql.functions.col("quarantined"))

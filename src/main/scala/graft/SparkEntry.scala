@@ -18,21 +18,15 @@ object SparkEntry {
     * `documents` parquet: doc_id seeds the archetype fixture generator, so
     * the same corpus regenerates identically at any scale (FIXTURES.md §5).
     *
-    * Read-parallelism guard (r6, guide §2.5 "one huge unsplittable file"):
-    * the benchmark corpus is ONE sub-split-size parquet file, so the scan
-    * plans a single task and the expensive gen+extract pipeline downstream
-    * ran serially on a 32-core box. When the scan has fewer partitions than
-    * cores, spread the (tiny) id rows round-robin BEFORE the generator; at
-    * warehouse scale the file count exceeds the core count and this is the
-    * identity — no unconditional shuffle is introduced. */
+    * The benchmark corpus is ONE sub-split-size parquet file, so its scan
+    * plans a single task; `ops.Queries.spreadThin` spreads the (tiny) id
+    * rows over the cores BEFORE the expensive gen+extract pipeline. */
   def rawDocs(spark: SparkSession, sfDir: String): org.apache.spark.sql.Dataset[RawDoc] = {
     import spark.implicits._
     val ids = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").cast("string"))
       .as[String]
-    val p = spark.sparkContext.defaultParallelism
-    val spread = if (ids.rdd.getNumPartitions < p) ids.repartition(p) else ids
-    spread.map(id => rawDocFor(id))
+    ops.Queries.spreadThin(ids).map(id => rawDocFor(id))
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:

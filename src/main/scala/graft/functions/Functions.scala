@@ -175,15 +175,21 @@ object Functions {
     org.apache.spark.sql.graft.Bridge.column(
       SubwordCountExpr(org.apache.spark.sql.graft.Bridge.expression(c)))
 
-  /** Register the engine's functions for SQL use:
-    * graft_token_count, graft_hash32, graft_simhash32. */
+  /** The native expressions' SQL names and builders: [[registerAll]]
+    * registers them on a session, and [[graft.GraftExtensions]] injects
+    * them through `spark.sql.extensions`. */
+  private[graft] val Native: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_token_count" -> (args => TokenCountExpr(args.head)),
+    "graft_nfc" -> (args => NfcNormalizeExpr(args.head)),
+    "graft_subword_count" -> (args => SubwordCountExpr(args.head)))
+
+  /** Register the engine's functions for SQL use: the [[Native]]
+    * expressions plus the UDF-backed graft_hash32, graft_simhash32,
+    * graft_shingles and graft_quality_clean. */
   def registerAll(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_count", exprs => TokenCountExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalizeExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_subword_count", exprs => SubwordCountExpr(exprs.head), "built-in")
+    Native.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
     spark.udf.register("graft_hash32",
       (s: String) => graft.ops.TextOps.hash32Kernel(if (s == null) "" else s))
     spark.udf.register("graft_simhash32",

@@ -121,7 +121,7 @@ object TableIO {
     // an empty input still commits one zero-row file: it carries the schema
     val written = if (placed.nonEmpty) placed else Seq(writer.place(writer.stage(0, -1L, Iterator.empty)))
     val files = written.map(_.path)
-    prune(target, files.toSet)
+    sweep(target, files.map(Paths.get(_)).toSet)
     commit(spark, root, snapshotId, files, written.map(_.rows).sum, inputs,
       extraMetrics ++ Map("data_files" -> files.length.toLong, "data_bytes" -> written.map(_.bytes).sum))
   }
@@ -155,14 +155,19 @@ object TableIO {
     finally s.close()
   }
 
-  /** Deletes every entry of `dir` not in `keep`: failed attempts' staging files and data. */
-  private def prune(dir: java.nio.file.Path, keep: Set[String]): Unit =
-    listPaths(dir, maxDepth = 1).filterNot(keep).foreach(p => deleteTree(Paths.get(p)))
-
-  /** Deletes `p` and, for a directory (not a link to one), its contents. */
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) listPaths(p, maxDepth = 1).foreach(c => deleteTree(Paths.get(c)))
-    Files.deleteIfExists(p)
+  /** The one sweep of both writers: deletes every file under `dir` that
+    * `keep` rejects (failed attempts' staging files, data of earlier runs)
+    * and every directory left empty. Returns the kept files, sorted. A link
+    * counts as a file: the sweep never follows one. */
+  private def sweep(dir: java.nio.file.Path, keep: java.nio.file.Path => Boolean): Vector[String] = {
+    val kept = Vector.newBuilder[String]
+    // a directory sorts before everything under it, so in reverse after
+    listPaths(dir, maxDepth = Int.MaxValue).sorted.reverseIterator.map(Paths.get(_)).foreach { p =>
+      if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) { if (listPaths(p, maxDepth = 1).isEmpty) Files.delete(p) }
+      else if (keep(p)) kept += p.toString
+      else Files.delete(p)
+    }
+    kept.result().reverse
   }
 
   /** Span texts are near-unique, so Parquet would build a dictionary for
@@ -331,10 +336,11 @@ object TableIO {
     val missing = (0 until buckets).filterNot(marked)
     val target = dataDir(root, snapshotId)
     Files.createDirectories(target)
+    val markedDirs = marked.map(b => target.resolve(bucketDir(b)))
     // only the marked buckets are final: what earlier runs left elsewhere goes
-    prune(target, marked.map(b => target.resolve(bucketDir(b)).toString))
+    sweep(target, p => markedDirs(p.getParent))
     val writer = SnapshotFileWriter(spark, df.schema, target.toString)
-    if (missing.nonEmpty) {
+    val placed = if (missing.isEmpty) Set.empty[java.nio.file.Path] else {
       val bucketed = df
         .withColumn("doc_bucket", bucket(col("doc_id"), buckets))
         .filter(col("doc_bucket").isin(missing: _*))
@@ -344,13 +350,10 @@ object TableIO {
         done = _.foreach { f =>
           val b = Paths.get(f.path).getParent.getFileName.toString.stripPrefix("doc_bucket=")
           Files.write(markers.resolve(s"bucket-$b.done"), Array.empty[Byte])
-        })
+        }).map(f => Paths.get(f.path)).toSet
     }
-    // failed attempts' staging files go, except from the marked buckets
-    val all = listPaths(target, maxDepth = Int.MaxValue)
-    val markedDirs = marked.map(b => target.resolve(bucketDir(b)))
-    all.filter(p => p.endsWith(".staging") && !markedDirs(Paths.get(p).getParent)).foreach(p => Files.delete(Paths.get(p)))
-    val found = all.filter(_.endsWith(".parquet")).sorted
+    // failed attempts' staging files go: the marked buckets and placed files stay
+    val found = sweep(target, p => markedDirs(p.getParent) || placed(p)).filter(_.endsWith(".parquet"))
     // no bucket file at all: one zero-row file carries the schema (never
     // beside doc_bucket= dirs, where a root file breaks partition discovery)
     val files = if (found.nonEmpty) found else Seq(writer.place(writer.stage(0, -1L, Iterator.empty)).path)
@@ -508,21 +511,6 @@ object TableIO {
     val scheme = "^([a-zA-Z][a-zA-Z0-9+.-]+):".r.findFirstMatchIn(path).map(_.group(1))
     if (scheme.exists(_ != "file")) None else Some(Paths.get(path.stripPrefix("file:")))
   }
-
-  /** Bucketed table write: pre-hash-partition + sort by the join key so
-    * doc-keyed joins between co-bucketed tables plan WITHOUT a shuffle
-    * (SortMergeJoin over bucket-aligned scans — the 100 TB pattern for
-    * repeated joins on doc_id, e.g. spans x metadata x quality scores;
-    * the Exchange that a plain parquet join needs on BOTH corpus-sized
-    * sides disappears). Uses the session catalog's managed-table bucketing
-    * (swap for Iceberg bucket partition transforms on a real catalog). */
-  def writeBucketed(df: DataFrame, tableName: String, bucketCol: String, buckets: Int): Unit =
-    df.write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(tableName)
 
   /** Read the current committed snapshot (or a named one, which must be committed). */
   def readSnapshot(spark: SparkSession, root: String, snapshotId: Option[String] = None): DataFrame = {

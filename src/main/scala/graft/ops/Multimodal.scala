@@ -236,19 +236,6 @@ object Multimodal {
       java.security.MessageDigest.getInstance("SHA-1")
   }
 
-  private def sha1Hex(bytes: Array[Byte]): String = {
-    val d = sha1Local.get().digest(bytes)
-    val hex = "0123456789abcdef"
-    val out = new Array[Char](d.length * 2)
-    var i = 0
-    while (i < d.length) {
-      out(2 * i) = hex.charAt((d(i) >> 4) & 0xf)
-      out(2 * i + 1) = hex.charAt(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   /** Feature extraction kernel: decode -> resize 8x8 -> mean/edge/pHash.
     * One `mapPartitions` pass; with PNM payloads the decode is a real
     * image parse. */
@@ -273,7 +260,8 @@ object Multimodal {
         if (flat(i) > mean) phash |= (1L << i)
         i += 1
       }
-      MediaFeatures(m.media_ref, m.doc_id, m.kind, content.length, sha1Hex(content),
+      MediaFeatures(m.media_ref, m.doc_id, m.kind, content.length,
+        TextOps.toHex(sha1Local.get().digest(content)),
         decoder, if (raster.length == 0) 0 else raster(0).length, raster.length,
         mean, edges / 56.0, phash)
     })

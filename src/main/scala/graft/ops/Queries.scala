@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession, Column}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, Column}
 import org.apache.spark.sql.functions._
 
 /** Driver-contract query registry: one entry per implemented operator
@@ -29,9 +29,9 @@ object Queries {
     * fewer partitions than cores — at warehouse scale the file count
     * already exceeds the core count and this is the identity. Apply AFTER
     * any pushable filters so scan pruning is unaffected. */
-  private def spreadThin(df: DataFrame): DataFrame = {
-    val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+  private[graft] def spreadThin[T](ds: Dataset[T]): Dataset[T] = {
+    val p = ds.sparkSession.sparkContext.defaultParallelism
+    if (ds.rdd.getNumPartitions < p) ds.repartition(p) else ds
   }
 
   // -------------------------------------------------------------------
@@ -424,8 +424,8 @@ object Queries {
 
   private val qLangId: Q = (spark, sfDir) => {
     import spark.implicits._
-    // kernel twin of langId + stopwordHits (one text pass; the Column form
-    // paid a full-text regexp_replace plus a split+filter HOF per row)
+    // a kernel: one text pass, where a Column form pays a full-text
+    // regexp_replace plus a split+filter HOF per row
     doc(spark, sfDir).select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions(_.map { case (id, t) =>
         val (lang, hits) = TextOps.langIdKernel(t)
@@ -535,8 +535,8 @@ object Queries {
 
   private val qMinhash: Q = (spark, sfDir) => {
     import spark.implicits._
-    // kernel twin: identical md5 stream (hash32 of token#i), one digest per
-    // (distinct token, i) in plain Scala instead of the nested HOF form
+    // a kernel: the oracle's md5 stream (hash32 of token#i), one digest per
+    // (distinct token, i) in plain Scala instead of a nested HOF form
     spreadThin(doc(spark, sfDir).select(col("doc_id"), col("text"))).as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, t) =>
         val sig = TextOps.minhashSigKernel(t, 8)
@@ -868,8 +868,9 @@ object Queries {
     * fractions) — public pretraining-filter heuristics (Rae et al. 2021). */
   private val qRepetitionFilter: Q = (spark, sfDir) => {
     import spark.implicits._
-    // kernel twin (same tokenization, HashSet distinct, Spark-round): the
-    // HOF gram-build expression was the 2nd most expensive bench query
+    // a kernel (same tokenization, HashSet distinct, Spark-round): the
+    // HOF gram-build expression it replaced was the 2nd most expensive
+    // bench query
     doc(spark, sfDir).select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions(_.map { case (id, t) =>
         val (dw, d2) = TextOps.repetitionRatiosKernel(t)

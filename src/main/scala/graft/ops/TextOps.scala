@@ -2,11 +2,17 @@ package graft.ops
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** Column-level text-analysis operators for large-scale training-data
-  * pipelines (language ID, quality scoring, token counting, fingerprinting,
-  * cleaning). Pure Catalyst expressions — codegen-friendly, no UDFs — each
-  * with a DuckDB-equivalent SQL form in [[Queries]].
+/** Text-analysis operators for large-scale training-data pipelines
+  * (cleaning, token counting, language ID, quality scoring, fingerprinting,
+  * near-dup sketches, decontamination). An operator takes the form its
+  * query runs: a Catalyst `Column` expression (`tokenCount`, `cleanLines`,
+  * `fingerprint`, `hash32`, ...) or, for the hot per-doc operators, a
+  * plain-Scala kernel (`*Kernel`) that [[Queries]] calls inside
+  * `mapPartitions`. Each query has a DuckDB-equivalent SQL form in
+  * [[Queries]]; the kernels hash with the same md5 stream and round with
+  * Spark's HALF_UP, so the oracles reproduce their values bit for bit.
   *
   * Algorithm provenance (public literature): MinHash resemblance sketches —
   * Broder, "On the resemblance and containment of documents" (SEQUENCES
@@ -58,17 +64,6 @@ object TextOps {
     size(filter(words, w => EnStopwords.foldLeft(lit(false))((acc, s) => acc || (w === s))))
   }
 
-  /** n-gram-heuristic language ID: CJK-ratio then stopword evidence.
-    * Mirrors the reference's (dead) CJK ratio test
-    * (layout_processor.py:428-448) as a live operator. */
-  def langId(text: Column): Column = {
-    val total = length(text)
-    val cjk = total - length(regexp_replace(text, "[\\u4e00-\\u9fff]", ""))
-    when(total > 0 && cjk / total.cast("double") > 0.3, lit("zh"))
-      .when(stopwordHits(text) > 0, lit("en"))
-      .otherwise(lit("unknown"))
-  }
-
   /** Quality score in [0,1]: length band + punctuation ratio + stopword
     * ratio + mean word length band. Deterministic, SQL-expressible. */
   def qualityScore(text: Column): Column = {
@@ -92,44 +87,19 @@ object TextOps {
     md5(regexp_replace(lower(trim(text)), "\\s+", " "))
 
   /** Stable 32-bit token hash as a non-negative BIGINT, identical in Spark
-    * and DuckDB: first 8 hex chars of md5. The shared primitive under
-    * minhash/simhash so oracles can reproduce signatures bit-for-bit. */
+    * and DuckDB: first 8 hex chars of md5. [[hash32Kernel]] is the same hash
+    * on the JVM, under the minhash/simhash kernels, so oracles can
+    * reproduce their signatures bit-for-bit. */
   def hash32(c: Column): Column =
     conv(substring(md5(c), 1, 8), 16, 10).cast("long")
 
-  /** k minhash values over a PRE-COMPUTED distinct-token array column:
-    * sig_i = min over tokens of hash32(token || '#' || i). Callers project
-    * [[distinctTokens]] into its own column first so the split/dedup runs
-    * once per row, not once per hash function. */
-  def minhashSigFromWords(words: Column, k: Int): Column =
-    array((0 until k).map { i =>
-      array_min(transform(words, w => hash32(concat(w, lit("#" + i)))))
-    }: _*)
-
-  def distinctTokens(text: Column): Column =
-    array_distinct(split(lower(trim(text)), "\\s+"))
-
-  def minhashSig(text: Column, k: Int): Column =
-    minhashSigFromWords(distinctTokens(text), k)
-
   /** 32-bit simhash over whitespace tokens: bit b set iff the sum of
-    * (+1/-1 by bit b of hash32(token)) over tokens is positive.
-    * Single md5 per token: hashes the token array once, then folds 32 bit
-    * positions over the hash array. */
-  def simhash32(text: Column): Column =
-    simhash32FromHashes(transform(split(lower(trim(text)), "\\s+"), hash32 _))
-
-  /** Kernel (plain-Scala) twin of [[simhash32]] for typed maps: identical
-    * values (same md5-derived 32-bit token hashes), ~50x cheaper than the
-    * nested 32-bit x tokens HOF expression (measured at sf0.1). */
+    * (+1/-1 by bit b of hash32(token)) over tokens is positive. A kernel:
+    * ~50x cheaper than the nested 32-bit x tokens HOF expression it replaced
+    * (measured at sf0.1). */
   def simhash32Kernel(text: String): Long = {
-    if (text == null) return simhashOfTokens(Array(""))
-    simhashOfTokens(text.trim.toLowerCase.split("\\s+", -1))
-  }
-
-  private def simhashOfTokens(tokens: Array[String]): Long = {
     val votes = new Array[Int](32)
-    tokens.foreach { w =>
+    splitWordsKernel(text).foreach { w =>
       val h = hash32Kernel(w)
       var b = 0
       while (b < 32) {
@@ -154,7 +124,8 @@ object TextOps {
 
   private val HexChars = "0123456789abcdef".toCharArray
 
-  private def toHex(d: Array[Byte]): String = {
+  /** Lowercase hex of `d`: the digest form Spark's md5/sha1 return. */
+  private[graft] def toHex(d: Array[Byte]): String = {
     val out = new Array[Char](d.length * 2)
     var i = 0
     while (i < d.length) {
@@ -169,18 +140,17 @@ object TextOps {
     * normalized, lowercased text. Use THIS (not [[hash32Kernel]]) as a dedup
     * key: a 32-bit key collides past ~2^16 distinct documents (birthday
     * bound) and silently drops distinct content (ADVICE r02). */
-  def fingerprintKernel(text: String): String = {
-    val norm = if (text == null) "" else text.trim.toLowerCase.replaceAll("\\s+", " ")
-    toHex(md5Local.get().digest(norm.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-  }
+  def fingerprintKernel(text: String): String =
+    md5Hex(if (text == null) "" else text.trim.toLowerCase.replaceAll("\\s+", " "))
 
   /** JVM twin of [[hash32]]: first 8 hex chars of md5 as a long — identical
     * to Spark's md5 (both hash UTF-8 bytes). */
-  def hash32Kernel(s: String): Long = {
-    val d = md5Local.get().digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // first 4 bytes = first 8 hex chars
+  def hash32Kernel(s: String): Long =
+    first32(md5Local.get().digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+
+  /** A digest's first 4 bytes (its first 8 hex chars) as a non-negative long. */
+  private def first32(d: Array[Byte]): Long =
     ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-  }
 
   /** hash32 of (token UTF-8 bytes) ++ ("#i" ASCII bytes) — identical digest
     * stream to `hash32Kernel(token + "#" + i)` (UTF-8 of a concatenation is
@@ -195,39 +165,31 @@ object TextOps {
     md.update(tokenBytes)
     md.update(if (i < HashSuffixes.length) HashSuffixes(i)
       else ("#" + i).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val d = md.digest()
-    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
+    first32(md.digest())
   }
 
-  /** Simhash from a pre-computed hash array column (hash each token once —
-    * callers project the hashes first for the hot path). */
-  def simhash32FromHashes(hashes: Column): Column =
-    aggregate(
-      sequence(lit(0), lit(31)),
-      lit(0L),
-      (acc, b) => {
-        // bit b of h via exact double arithmetic (h < 2^32 << 2^53)
-        val vote = aggregate(hashes, lit(0L),
-          (a, h) => a + when(floor(h / pow(lit(2.0), b)).cast("long") % 2 === 1, 1L).otherwise(-1L))
-        acc + when(vote > 0, pow(lit(2.0), b).cast("long")).otherwise(0L)
-      })
-
-  /** Word-shingle n-grams (space-joined) for Jaccard similarity. */
-  def wordShingles(text: Column, n: Int): Column = {
-    val words = split(lower(trim(text)), "\\s+")
-    val cnt = size(words)
-    when(cnt < n, array_distinct(array(array_join(words, " "))))
-      .otherwise(array_distinct(transform(
-        sequence(lit(0), cnt - n),
-        i => array_join(slice(words, i + 1, lit(n)), " "))))
+  /** k minhash values over `items`, which hold no duplicates: sig_i = min
+    * over them of hash32(item + "#i"). */
+  private def minhashOf(items: Iterator[String], k: Int): Array[Long] = {
+    val sig = Array.fill(k)(Long.MaxValue)
+    items.foreach { s =>
+      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      var i = 0
+      while (i < k) {
+        val h = hash32Suffixed(b, i)
+        if (h < sig(i)) sig(i) = h
+        i += 1
+      }
+    }
+    sig
   }
 
-  /** Kernel twin of [[wordShingles]]: O(words) sliding windows (the HOF
-    * slice-per-index expression is O(words^2) per doc — measured hot at
-    * sf0.1). Same values: distinct space-joined n-grams. */
+  /** Word-shingle n-grams for Jaccard similarity: the distinct space-joined
+    * n-grams of the lowercased words, in first-seen order. O(words) sliding
+    * windows (a HOF slice-per-index expression is O(words^2) per doc —
+    * measured hot at sf0.1). */
   def wordShinglesKernel(text: String, n: Int): Array[String] = {
-    val t = if (text == null) "" else text
-    val words = t.trim.toLowerCase.split("\\s+", -1)
+    val words = splitWordsKernel(text)
     if (words.length < n) Array(words.mkString(" "))
     else {
       val seen = new java.util.LinkedHashSet[String]()
@@ -245,27 +207,11 @@ object TextOps {
     }
   }
 
-  /** Gopher-style repetition ratios (Rae et al. 2021, public quality
-    * filters): duplicate-word fraction and duplicate-2-gram fraction.
-    * element_at-based gram construction is O(n) (slice-based would be
-    * O(n^2)). Returns struct(dup_word_frac, dup_2gram_frac). */
-  def repetitionRatios(text: Column): Column = {
-    val words = split(lower(trim(text)), "\\s+")
-    val n = size(words)
-    val dupWord = when(n > 0,
-      round(lit(1.0) - size(array_distinct(words)).cast("double") / n, 4)).otherwise(0.0)
-    val grams = transform(sequence(lit(0), greatest(n - 2, lit(0))),
-      i => concat(element_at(words, i + 1), lit(" "), element_at(words, i + 2)))
-    val dup2 = when(n >= 2,
-      round(lit(1.0) - size(array_distinct(grams)).cast("double") / (n - 1), 4)).otherwise(0.0)
-    struct(dupWord.as("dup_word_frac"), dup2.as("dup_2gram_frac"))
-  }
-
   // ---------------------------------------------------------------------
-  // Kernel (plain-Scala) twins of the hot Column operators — identical
-  // values (same tokenization, same md5 stream, Spark's own BigDecimal
-  // HALF_UP rounding), measured several times cheaper than the HOF
-  // expression forms at sf0.1. Pattern precedent: simhash32Kernel.
+  // Per-doc kernels: the same values a Column expression would give (same
+  // tokenization, same md5 stream, Spark's own BigDecimal HALF_UP
+  // rounding), measured several times cheaper than the HOF expression
+  // forms at sf0.1.
   // ---------------------------------------------------------------------
 
   /** Spark round(x, scale): scala BigDecimal HALF_UP — the exact code path
@@ -276,7 +222,9 @@ object TextOps {
   private def splitWordsKernel(text: String): Array[String] =
     (if (text == null) "" else text).trim.toLowerCase.split("\\s+", -1)
 
-  /** Kernel twin of [[repetitionRatios]]: (dup_word_frac, dup_2gram_frac). */
+  /** Gopher-style repetition ratios (Rae et al. 2021, public quality
+    * filters): (dup_word_frac, dup_2gram_frac), the duplicate-word and
+    * duplicate-2-gram fractions, each rounded to 4 places. */
   def repetitionRatiosKernel(text: String): (Double, Double) = {
     val words = splitWordsKernel(text)
     val n = words.length
@@ -295,34 +243,26 @@ object TextOps {
     (dupW, dup2)
   }
 
-  /** Kernel twin of [[minhashSig]]: sig_i = min over distinct tokens of
-    * hash32(token + "#i") — the identical md5 stream, one digest per
-    * (distinct token, i) instead of a nested HOF expression. */
+  /** k minhash values over the distinct lowercased tokens: sig_i = min over
+    * tokens of hash32(token + "#i"), one digest per (distinct token, i)
+    * instead of a nested HOF expression. */
   def minhashSigKernel(text: String, k: Int): Array[Long] = {
     val words = splitWordsKernel(text)
     val distinct = new java.util.LinkedHashSet[String]()
     words.foreach(distinct.add)
-    val sig = Array.fill(k)(Long.MaxValue)
-    val it = distinct.iterator()
-    while (it.hasNext) {
-      val wb = it.next().getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var i = 0
-      while (i < k) {
-        val h = hash32Suffixed(wb, i)
-        if (h < sig(i)) sig(i) = h
-        i += 1
-      }
-    }
-    sig
+    minhashOf(distinct.iterator.asScala, k)
   }
 
   /** Full md5 hex (JVM twin of Spark's md5() over a UTF-8 string). */
   def md5Hex(s: String): String =
     toHex(md5Local.get().digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
 
-  /** Kernel twin of [[langId]] + [[stopwordHits]] in one pass:
-    * (lang_guess, stop_hits). CJK range is BMP, so char-level counting
-    * equals the Column form's UTF-16 length arithmetic. */
+  /** n-gram-heuristic language ID and [[stopwordHits]] in one pass:
+    * (lang_guess, stop_hits). "zh" when CJK chars are over 30% of the
+    * text, else "en" on any stopword, else "unknown". Mirrors the
+    * reference's (dead) CJK ratio test (layout_processor.py:428-448) as a
+    * live operator. The CJK range is BMP, so char-level counting equals the
+    * oracle's length arithmetic. */
   def langIdKernel(text: String): (String, Int) = {
     val t = if (text == null) "" else text
     var cjk = 0
@@ -346,11 +286,7 @@ object TextOps {
     (lang, stopHits)
   }
 
-  private val EnStopwordSet: java.util.HashSet[String] = {
-    val s = new java.util.HashSet[String]()
-    EnStopwords.foreach(s.add)
-    s
-  }
+  private val EnStopwordSet = new java.util.HashSet[String](EnStopwords.asJava)
 
   /** k minhash values over the distinct word n-SHINGLES of `text` (same
     * md5-derived hash32 stream as [[minhashSigKernel]], but the set being
@@ -360,22 +296,8 @@ object TextOps {
     * one 580-doc mega-cluster on the synthetic corpus); shingles keep the
     * set space large. This is the Broder-resemblance construction as
     * actually deployed (shingled documents). */
-  def minhashShingleSigKernel(text: String, n: Int, k: Int): Array[Long] = {
-    val sh = wordShinglesKernel(text, n)
-    val sig = Array.fill(k)(Long.MaxValue)
-    var i = 0
-    while (i < sh.length) {
-      val sb = sh(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      var j = 0
-      while (j < k) {
-        val h = hash32Suffixed(sb, j)
-        if (h < sig(j)) sig(j) = h
-        j += 1
-      }
-      i += 1
-    }
-    sig
-  }
+  def minhashShingleSigKernel(text: String, n: Int, k: Int): Array[Long] =
+    minhashOf(wordShinglesKernel(text, n).iterator, k)
 
   /** Spark-round twin exposed for other kernel callers. */
   def round6Kernel(x: Double): Double = roundK(x, 6)

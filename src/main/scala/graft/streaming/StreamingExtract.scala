@@ -25,15 +25,11 @@ object StreamingExtract {
       StructField("media_ref", StringType),
       StructField("offset", IntegerType)))))))
 
-  /** Streaming DataFrame in, streaming DataFrame out — the identical
-    * extraction plan as batch: [[graft.pipeline.Extract.extractSpansDF]]'s
-    * `GraftExtract` Doc node, shuffle-free, so it is trivially streamable,
-    * and its SQL metrics report each micro-batch. */
-  def extractStream(input: DataFrame, cfg: ExtractConfig = ExtractConfig.default): DataFrame =
-    graft.pipeline.Extract.extractSpansDF(input, cfg)
-
   /** File-source to file-sink pipeline with checkpointed exactly-once
-    * semantics: new parquet files under `inPath` are extracted incrementally. */
+    * semantics: new parquet files under `inPath` are extracted incrementally
+    * by the batch plan, [[graft.pipeline.Extract.extractSpansDF]]'s
+    * shuffle-free `GraftExtract` Doc node, whose SQL metrics report each
+    * micro-batch. */
   def runFileStream(
       spark: SparkSession,
       inPath: String,
@@ -41,7 +37,7 @@ object StreamingExtract {
       checkpoint: String,
       cfg: ExtractConfig = ExtractConfig.default): StreamingQuery = {
     val in = spark.readStream.schema(InputSchema).parquet(inPath)
-    extractStream(in, cfg)
+    graft.pipeline.Extract.extractSpansDF(in, cfg)
       .writeStream
       .format("parquet")
       .option("path", outPath)

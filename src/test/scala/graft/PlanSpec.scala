@@ -401,39 +401,6 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("co-bucketed doc-keyed join plans without a shuffle (TableIO.writeBucketed)") {
-    import spark.implicits._
-    spark.sql("DROP TABLE IF EXISTS bspec_docs")
-    spark.sql("DROP TABLE IF EXISTS bspec_quality")
-    val wh = new java.io.File("spark-warehouse")
-    Seq("bspec_docs", "bspec_quality").foreach { t =>
-      val d = new java.io.File(wh, t)
-      if (d.exists()) { d.listFiles().foreach(_.delete()); d.delete() }
-    }
-    val docs = (0 until 200).map(i => (s"doc-$i", i * 37 % 997)).toDF("doc_id", "n_spans")
-    val quality = (0 until 200).map(i => (s"doc-$i", (i * 13 % 100) / 100.0)).toDF("doc_id", "quality")
-    graft.io.TableIO.writeBucketed(docs, "bspec_docs", "doc_id", 8)
-    graft.io.TableIO.writeBucketed(quality, "bspec_quality", "doc_id", 8)
-    // force the sort-merge path (at 100 TB neither side broadcasts): the
-    // point under test is that co-bucketed scans join with NO ShuffleExchange
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("bspec_docs").join(spark.table("bspec_quality"), "doc_id")
-      joined.collect()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
-        s"co-bucketed join shuffled:\n${plan.take(1500)}")
-      assert(plan.contains("SortMergeJoin"), s"expected sort-merge join:\n${plan.take(1500)}")
-      assert(plan.contains("SelectedBucketsCount") || plan.contains("Bucketed: true"),
-        s"scan not bucket-aware:\n${plan.take(1500)}")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS bspec_docs")
-      spark.sql("DROP TABLE IF EXISTS bspec_quality")
-    }
-  }
-
   test("GraftExtensions: native functions injectable via spark.sql.extensions") {
     import org.apache.spark.sql.SparkSession
     val prev = spark // keep the shared session alive
@@ -445,9 +412,11 @@ class PlanSpec extends AnyFunSuite {
         .config("spark.ui.enabled", "false")
         .withExtensions(new GraftExtensions()(_))
         .getOrCreate()
-      val r = s2.sql("SELECT graft_token_count(' a  b c ') AS n, graft_nfc('Cafe\u0301') AS t").collect()(0)
+      val r = s2.sql("SELECT graft_token_count(' a  b c ') AS n, graft_nfc('Cafe\u0301') AS t, " +
+        "graft_subword_count('the tokenizer') AS w").collect()(0)
       assert(r.getInt(0) == 3)
       assert(r.getString(1) == "Caf\u00e9")
+      assert(r.getLong(2) == graft.ops.Tokenize.countText("the tokenizer"))
     } finally {
       SparkSession.setDefaultSession(prev)
       SparkSession.setActiveSession(prev)

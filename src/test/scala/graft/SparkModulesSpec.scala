@@ -560,14 +560,14 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  /** Streams the parquet files under `in` through `extractStream` with
+  /** Streams the parquet files under `in` through `extractSpansDF` with
     * `Trigger.AvailableNow` into a parquet sink; returns the finished query
     * and the sink's rows. */
   private def streamOnce(in: String, dir: java.nio.file.Path) = {
     val q = spark.readStream
       .schema(graft.streaming.StreamingExtract.InputSchema)
       .parquet(in)
-    val stream = graft.streaming.StreamingExtract.extractStream(q)
+    val stream = graft.pipeline.Extract.extractSpansDF(q)
       .writeStream
       .format("parquet")
       .option("path", s"$dir/out")
@@ -973,33 +973,5 @@ object KillGate {
       throw new IllegalStateException(s"killed on $id")
     }
     n
-  }
-}
-
-class SourcesSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-
-  test("json-lines and binaryFile sources produce the same extraction as parquet") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sources")
-    val docs = graft.fixtures.Fixtures.corpus(12).toSeq
-    val df = spark.createDataset(docs).toDF()
-    df.write.mode("overwrite").parquet(s"$dir/p")
-    df.write.mode("overwrite").json(s"$dir/j")
-    // binary files: one serialized doc per file
-    val binDir = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/b"))
-    df.selectExpr("doc_id", "to_json(struct(doc_id, spans)) AS j").as[(String, String)]
-      .collect().foreach { case (id, json) =>
-        java.nio.file.Files.writeString(binDir.resolve(s"$id.doc.json"), json)
-      }
-    def spansOf(src: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
-      src.selectExpr("doc_id", "coalesce(to_json(spans),'') AS j")
-        .as[(String, String)].collect().sortBy(_._1).toSeq
-    val viaParquet = spansOf(graft.io.Sources.extractFrom(spark, s"$dir/p", "parquet"))
-    val viaJson = spansOf(graft.io.Sources.extractFrom(spark, s"$dir/j", "json"))
-    val viaBinary = spansOf(graft.io.Sources.extractFrom(spark, s"$dir/b", "binary"))
-    assert(viaParquet.nonEmpty)
-    assert(viaJson == viaParquet)
-    assert(viaBinary == viaParquet)
   }
 }
